@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.build.Persistence.toJson
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
   *
@@ -11,13 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: session init, codegen, and file-index costs land
     // here instead of inside the alphabetically-first query's time
@@ -119,28 +114,19 @@ object Bench {
         }
       name -> (mn, md, sp, loadavg1())
     }
-    // ALL control chars (< 0x20), not just newline/tab: an ESC from
-    // ANSI-colored JDBC/native error text would otherwise emit invalid
-    // JSON and void the whole round's metrics (the contract Verify's
-    // escaper documents)
-    def jq(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\x00-\\x1f]", " ") + "\""
-    def jnum(v: Double): String = if (v.isNaN) "\"NaN\"" else v.toString
-    def jmap(f: ((Double, Double, Double, Double)) => Double): String =
-      results.map { case (k, t) => jq(k) + ":" + jnum(f(t)) }
-        .mkString("{", ",", "}")
-    val qs = jmap(_._1)
-    val medians = jmap(_._2)
-    val spreads = jmap(_._3)
-    val loads = jmap(_._4)
-    val errs = errors.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
+    // one JSON writer (Persistence.toJson): control chars escaped and
+    // non-finite figures quoted, so no error text or NaN/Infinity time
+    // can void the record. Figures round to 4 decimals (0.1 ms).
+    def perQuery(f: ((Double, Double, Double, Double)) => Double): Map[String, Double] =
+      results.map { case (k, t) => k -> round4(f(t)) }.toMap
     val total = results.map(_._2._1).filterNot(_.isNaN).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""subsec_extra_reps":$subSecExtra,"queries":$qs,"medians":$medians,""" +
-      s""""spreads":$spreads,"load_start":${jnum(loadStart)},""" +
-      s""""load_end":${jnum(loadavg1())},"load_after_query":$loads,""" +
-      s""""errors":$errs,"sf":${jq(sfDir)}}"""
+    val line = toJson(Map(
+      "metric" -> "total", "value" -> round4(total), "unit" -> "sec",
+      "reps" -> reps, "subsec_extra_reps" -> subSecExtra,
+      "queries" -> perQuery(_._1), "medians" -> perQuery(_._2),
+      "spreads" -> perQuery(_._3), "load_start" -> round4(loadStart),
+      "load_end" -> round4(loadavg1()), "load_after_query" -> perQuery(_._4),
+      "errors" -> errors.toMap, "sf" -> sfDir))
     println(line)
     // persist the full record as a file artifact too (BENCH_LOCAL.json
     // beside the repo root, or SPARK_GRAFT_BENCH_OUT) — the stdout line
@@ -164,29 +150,11 @@ object Bench {
     // reads as absurd query times. Print a SHORT summary line LAST
     // (r11 verdict item 1): whatever suffix of stdout the driver keeps,
     // it now ends with the totals, and a last-JSON-line parser picks up
-    // a complete object. The errors map rides along unless it alone
-    // would blow the tail budget, in which case its count does.
-    val errsShort = if (errs.length <= 600) errs else s"""{"count":${errors.size}}"""
-    // r15 (r14 verdict item 2): the driver's last-line parser only ever
-    // sees THIS line, so PERF_r{N}.per_query and the scaling block were
-    // empty two rounds running — the per-query map must ride the LAST
-    // line too. Values round to 4 decimals (0.1 ms) to keep the line
-    // ~2.8 KB: the observed driver stdout tail is ~4 KB, and a clipped
-    // last line parses as nothing at all, so medians/spreads stay on
-    // the first line + the $outPath artifact rather than risking the
-    // whole record for them.
-    def jnum4(v: Double): String =
-      if (v.isNaN) "\"NaN\"" else (math.floor(v * 10000 + 0.5) / 10000).toString
-    val qsShort = results.map { case (k, t) => jq(k) + ":" + jnum4(t._1) }
-      .mkString("{", ",", "}")
-    // the detail string goes through jq too: an exotic
-    // SPARK_GRAFT_BENCH_OUT (quote, backslash) must not invalidate the
-    // one line whose whole point is surviving as parseable JSON
-    val shortLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""reps":$reps,"n_queries":${results.size},"queries":$qsShort,""" +
-      s""""errors":$errsShort,""" +
-      s""""sf":${jq(sfDir)},"detail":${jq(
-        s"medians/spreads/loads on the first stdout JSON line and in $outPath")}}"""
+    // a complete object. The per-query map rides it too (the driver's
+    // last-line parser only ever sees this line); medians/spreads stay
+    // on the first line and in the $outPath artifact.
+    val shortLine = summaryLine(total, reps, results.map { case (k, t) => k -> t._1 },
+      errors.toMap, sfDir, outPath)
     println(shortLine)
     // file-artifact fallback for the driver's last-line parser (r12
     // verdict item 4: BENCH_r12.json still recorded "parsed": null even
@@ -199,5 +167,24 @@ object Bench {
       else "BENCH_SUMMARY.json"
     writeArtifact(summaryPath, shortLine)
     spark.stop()
+  }
+
+  private def round4(v: Double): Double = math.floor(v * 10000 + 0.5) / 10000
+
+  /** The short last-stdout-line record (~2.8 KB for 91 queries against
+    * an observed ~4 KB driver tail). The errors map rides along unless
+    * it alone would blow the tail budget, in which case its count does. */
+  private[graft] def summaryLine(total: Double, reps: Int,
+                                 queries: Seq[(String, Double)],
+                                 errors: Map[String, String],
+                                 sfDir: String, outPath: String): String = {
+    val errs: Any =
+      if (toJson(errors).length <= 600) errors else Map("count" -> errors.size)
+    toJson(Map(
+      "metric" -> "total", "value" -> round4(total), "unit" -> "sec",
+      "reps" -> reps, "n_queries" -> queries.size,
+      "queries" -> queries.map { case (k, v) => k -> round4(v) }.toMap,
+      "errors" -> errs, "sf" -> sfDir,
+      "detail" -> s"medians/spreads/loads on the first stdout JSON line and in $outPath"))
   }
 }

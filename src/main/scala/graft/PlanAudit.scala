@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for headline queries so the
   * scan pushdown (PushedFilters/ReadSchema), broadcast choices, and
   * shuffle/partitioning shape can be reviewed per change. Run:
@@ -14,12 +12,7 @@ object PlanAudit {
         "q07_topk_per_group", "q08_rolling_stats", "q21_getdata_composed",
         "q29_anomaly_frame", "q34_minhash_dup_pairs", "q36_ann_lsh_buckets",
         "q51_lstm_forecast", "q52_ngram_jaccard_ppjoin")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

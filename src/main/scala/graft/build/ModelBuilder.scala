@@ -18,37 +18,6 @@ import graft.ml.DiffAnomaly
   */
 object ModelBuilder {
 
-  /** Claim the assembled frame's cache for a build, refcounted through
-    * `TimeSeries`' SINGLE assembly registry — one count per canonical
-    * plan shared with the n_samples_threshold path, so plan-identical
-    * machines built in PARALLEL (Project.buildAll's dataset-sharing
-    * shape), direct threshold callers, and mixed-threshold siblings all
-    * coordinate releases through the same number. (An earlier design
-    * kept a builder-side refcount map beside the threshold path's
-    * borrow count; the two never saw each other's references, so a
-    * threshold-0 build could return a threshold-5 sibling's borrow —
-    * yanking its cache mid-CV — and a direct caller could classify a
-    * build-persisted cache as external and lose it to the build's
-    * release.)
-    *
-    * `ownedBorrow`: whether this build's own getData chain already took
-    * a registry reference (the `requireMinSamplesOwned` hand-off). True
-    * ⇒ ADOPT it — the returned thunk releases that reference, nothing
-    * is re-acquired. False ⇒ acquire our own (first reference
-    * persists). A frame some OUTSIDE caller cached while unregistered
-    * is used without claiming — release stays a no-op (their unpersist,
-    * their timing). Returns the release thunk for the build's finally.
-    *
-    * `ownedBorrow` has NO default on purpose: a threshold>0 chain that
-    * reached here through plain `getData` (instead of `getDataOwned`)
-    * holds a hidden registry reference, and silently defaulting to
-    * false would double-acquire and leak it for the session — every
-    * caller must state what its chain took. */
-  private[graft] def acquireAssembled(
-      df: DataFrame, ownedBorrow: Boolean): () => Unit =
-    if (ownedBorrow) () => graft.data.TimeSeries.releaseAssembled(df)
-    else graft.data.TimeSeries.acquireAssembly(df).getOrElse(() => ())
-
   case class BuildResult(
       spec: Config.MachineSpec,
       fitted: DiffAnomaly.FittedDetector,
@@ -80,22 +49,21 @@ object ModelBuilder {
     *   fits). The substitution is recorded in the model metadata
     *   (`impl_requested` / `impl_substitution`) and keyed into the cache
     *   key — a closed-form build never aliases a full build.
-    */
-  /** @param preAssembled optional (frame, ownedBorrow) to use INSTEAD of
-    *   assembling the dataset here — the frame must be exactly
+    * @param preAssembled optional lease on the assembled frame to use
+    *   INSTEAD of assembling the dataset here — its frame must be exactly
     *   `TimeSeries.getData(long, …, Config.datasetConfig(spec))`'s output
     *   (callers that need the assembled frame AGAIN after the build —
     *   serve-path scoring — assemble once, cache, and hand it in, instead
     *   of paying getData's eager bounds job and a second lake scan per
-    *   consumer; guide §2.4). `ownedBorrow` has the
-    *   [[acquireAssembled]] meaning: whether the caller's getData chain
-    *   already took a registry reference this build should adopt. */
+    *   consumer; guide §2.4). The build takes ownership: the lease is
+    *   closed on every path, the registry-hit return included. */
   def buildSpec(spec: Config.MachineSpec,
                 long: DataFrame, keyCol: String, tsCol: String, valueCol: String,
                 outputDir: String,
                 registryDir: Option[String] = None,
                 closedForm: Boolean = false,
-                preAssembled: Option[(DataFrame, Boolean)] = None): BuildResult = {
+                preAssembled: Option[graft.SessionCache.Lease] = None): BuildResult =
+    try {
     val key = Persistence.cacheKey(spec, closedForm)
 
     // cache probe (`build_model.py:104-190`): hit short-circuits the build.
@@ -138,18 +106,13 @@ object ModelBuilder {
     val dsCfg = Config.datasetConfig(spec)
     val t0 = System.nanoTime()
     // the assembled frame feeds every CV fold fit, the final fit, and the
-    // fold-score pass — cache it so resample/grid/interpolate run once.
-    // Ownership is REFCOUNTED through the single TimeSeries assembly
-    // registry (see acquireAssembled): a plain storageLevel check would
-    // let the first finisher of plan-identical parallel builds unpersist
-    // the shared cache from under its still-running siblings,
-    // recomputing the whole assembly per remaining fold. The threshold
-    // path's own reference (if getData took one) is adopted, so the
-    // finally below returns exactly what this chain acquired.
-    val (assembled, ownedBorrow) = preAssembled.getOrElse(
-      TimeSeries.getDataOwned(long, keyCol, tsCol, valueCol, dsCfg))
-    val releaseCache = acquireAssembled(assembled, ownedBorrow)
-    val wide = assembled
+    // fold-score pass — leased so resample/grid/interpolate run once. A
+    // lease, not a storageLevel check: plan-identical parallel builds
+    // share one CacheManager entry, and the first finisher would
+    // otherwise unpersist it from under its still-running siblings.
+    val lease = preAssembled.getOrElse(
+      TimeSeries.dataLease(long, keyCol, tsCol, valueCol, dsCfg))
+    val wide = lease.df
     val querySec = (System.nanoTime() - t0) / 1e9
     try {
 
@@ -364,8 +327,8 @@ object ModelBuilder {
       metadata)
     registryDir.foreach(Persistence.registerModel(_, key, outputDir))
     BuildResult(spec, fitted, metadata, outputDir, fromCache = false)
-    } finally releaseCache()
-  }
+    } finally lease.close()
+    } finally preAssembled.foreach(_.close())
 
   /** Re-apply a persisted model's windowing to a raw serve-time frame
     * (M6): the saved lag feature columns are rebuilt from the base tags

@@ -126,20 +126,20 @@ object Project {
         ms.map(_.name -> shared)
       }
     }
-    // take ONE registry reference per distinct shared frame (first ref
+    // ONE lease per distinct shared frame (the first reference
     // persists); the first builder thread's bounds aggregation fills the
     // compact cache (siblings block on the partition fill briefly — an
     // up-front count() here measured strictly worse: one more full
     // execution, overlapped with nothing)
-    val sharedRels = sharedByName.values.toSeq.distinct
-      .map(TimeSeries.acquireAssembly)
+    val sharedLeases = sharedByName.values.toSeq.distinct
+      .map(graft.SessionCache.acquire)
     try {
       val futures = spec.machines.map { m =>
         Future {
           val pre = sharedByName.get(m.name).map { shared =>
             val c = Config.datasetConfig(m)
             val mTags = (c.tags ++ c.targetTags).distinct
-            TimeSeries.assembleOwned(
+            TimeSeries.assemble(
               shared.filter(col(keyCol).isin(mTags: _*)), keyCol, valueCol, c)
           }
           ModelBuilder.buildSpec(m, long, keyCol, tsCol, valueCol,
@@ -170,7 +170,7 @@ object Project {
       pool.shutdown()
       // drop the shared resample caches — every machine's build has
       // persisted (or abandoned) its own wide frame by now
-      sharedRels.foreach(_.foreach(_.apply()))
+      sharedLeases.foreach(_.close())
     }
   }
 }

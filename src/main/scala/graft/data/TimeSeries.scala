@@ -455,23 +455,23 @@ object TimeSeries {
     * count (rows) is what grows with data.
     *
     * Ownership: with `cfg.nSamplesThreshold > 0` the returned frame is
-    * persisted under one assembly-registry reference (the threshold
+    * persisted under one [[graft.SessionCache]] reference (the threshold
     * count materializes the frame anyway, so the caller's first action
     * reads cache); call [[releaseAssembled]] on the result when done
-    * with it, or the cache stays pinned for the session. Builds thread
-    * this reference through `ModelBuilder.acquireAssembled` instead. */
+    * with it, or the cache stays pinned for the session. Builds take
+    * the [[dataLease]] instead. */
   def getData(long: DataFrame, keyCol: String, tsCol: String,
               valueCol: String, cfg: DatasetConfig): DataFrame =
-    getDataOwned(long, keyCol, tsCol, valueCol, cfg)._1
+    align(resampleStage(long, keyCol, tsCol, valueCol, cfg), keyCol,
+      valueCol, cfg)(requireMinSamples(_, cfg.nSamplesThreshold))
 
-  /** [[getData]] plus whether the n_samples_threshold path took an
-    * assembly-cache reference this chain must eventually release (the
-    * [[requireMinSamplesOwned]] hand-off, threaded to the build's
-    * acquire/release bracket). */
-  private[graft] def getDataOwned(
+  /** [[getData]]'s frame under a lease the caller closes: the threshold
+    * count's own reference when `n_samples_threshold > 0`, a fresh one
+    * otherwise — the build's cache over its CV passes either way. */
+  private[graft] def dataLease(
       long: DataFrame, keyCol: String, tsCol: String,
-      valueCol: String, cfg: DatasetConfig): (DataFrame, Boolean) =
-    assembleOwned(resampleStage(long, keyCol, tsCol, valueCol, cfg),
+      valueCol: String, cfg: DatasetConfig): graft.SessionCache.Lease =
+    assemble(resampleStage(long, keyCol, tsCol, valueCol, cfg),
       keyCol, valueCol, cfg)
 
   /** The PRE-grid stage of [[getData]] — tag/time filters,
@@ -499,14 +499,24 @@ object TimeSeries {
       cfg.aggregationMethod, resolutionAnchorSec(cfg.resolution))
   }
 
-  /** The POST-resample stage of [[getData]]: shared-grid densify →
-    * interpolate → pivot → inner-join semantics → row_filter →
-    * n_samples_threshold. `resampled0` must be [[resampleStage]] output
+  /** The POST-resample stage of [[getData]] under a lease: shared-grid
+    * densify → interpolate → pivot → inner-join semantics → row_filter
+    * → n_samples_threshold. `resampled` must be [[resampleStage]] output
     * (or a tag-filtered view of a group's shared one) covering exactly
     * `cfg`'s tags. */
-  private[graft] def assembleOwned(
-      resampled0: DataFrame, keyCol: String,
-      valueCol: String, cfg: DatasetConfig): (DataFrame, Boolean) = {
+  private[graft] def assemble(
+      resampled: DataFrame, keyCol: String,
+      valueCol: String, cfg: DatasetConfig): graft.SessionCache.Lease =
+    align(resampled, keyCol, valueCol, cfg)(
+      leaseMinSamples(_, cfg.nSamplesThreshold))
+
+  /** Builds the aligned wide frame and runs its threshold check `hold`
+    * while the scoped resample cache is still held. `hold` decides what
+    * the caller keeps: a lease (builds) or the plain frame ([[getData]],
+    * which takes no reference at threshold 0). */
+  private def align[A](
+      resampled: DataFrame, keyCol: String,
+      valueCol: String, cfg: DatasetConfig)(hold: DataFrame => A): A = {
     val widthSec = parseResolutionSeconds(cfg.resolution)
     val limitSec = parseResolutionSeconds(cfg.interpolationLimit)
     val allTags = (cfg.tags ++ cfg.targetTags).distinct
@@ -517,21 +527,15 @@ object TimeSeries {
     // 3-4× without it. Persisted only when a later eager job exists to
     // amortize the write, and ALWAYS released in the finally: by then
     // the threshold path's count has materialized the wide frame's own
-    // registry-owned cache, so nothing downstream reads this one.
-    val scopedCache = cfg.nSamplesThreshold > 0 ||
-      (cfg.rowFilter.nonEmpty && cfg.rowFilterBufferSize > 0)
-    // through the refcount registry, NOT a bare persist/unpersist pair:
-    // CacheManager dedups plan-identical persists into ONE cache entry,
-    // so two parallel builds of the same dataset (Project.buildAll's
-    // dataset-sharing shape) would otherwise share the entry and the
-    // first build's finally would yank it mid-assembly from under the
-    // second — which then silently recomputes the filter→resample lake
-    // scan for each remaining eager job, exactly the cost this cache
-    // exists to avoid. Each call takes its own reference; the last
-    // release unpersists.
-    val resampled = resampled0
-    val resampledRel =
-      if (scopedCache) acquireAssembly(resampled0) else None
+    // cache, so nothing downstream reads this one. A lease, not a bare
+    // persist/unpersist pair: two parallel builds of the same dataset
+    // share ONE CacheManager entry, and the first build's finally would
+    // otherwise drop it mid-assembly under the second.
+    val scoped =
+      if (cfg.nSamplesThreshold > 0 ||
+          (cfg.rowFilter.nonEmpty && cfg.rowFilterBufferSize > 0))
+        Some(graft.SessionCache.acquire(resampled))
+      else None
     try {
     // Shared grid: global [min, max] bucket so every tag lands on the
     // same row set, PLUS the set of tags actually present — one tiny agg
@@ -542,8 +546,7 @@ object TimeSeries {
     if (boundsRow.isNullAt(0))
       // empty input still honors n_samples_threshold (exit-code-80
       // contract): zero rows < any positive threshold
-      return requireMinSamplesOwned(spark_emptyWide(resampled, cfg),
-        cfg.nSamplesThreshold)
+      return hold(spark_emptyWide(resampled, cfg))
     // a configured tag with NO rows in the window pivots to an all-null
     // column, and the any-null inner-join filter then drops EVERY bucket
     // — a silently empty frame that looks like bad data rather than the
@@ -573,8 +576,8 @@ object TimeSeries {
       wide = rowFilterWithBuffer(wide, keys = Nil, orderCols = Seq("bucket_ts"),
         predicate = expr(translateRowFilter(cfg.rowFilter)),
         buffer = cfg.rowFilterBufferSize)
-    requireMinSamplesOwned(wide, cfg.nSamplesThreshold)
-    } finally { resampledRel.foreach(_.apply()) }
+    hold(wide)
+    } finally scoped.foreach(_.close())
   }
 
   private def spark_emptyWide(resampled: DataFrame, cfg: DatasetConfig): DataFrame = {
@@ -588,117 +591,35 @@ object TimeSeries {
   /** n_samples_threshold (ref: `gordo/cli/cli.py:26-39`, exit code 80). */
   class InsufficientDataError(msg: String) extends RuntimeException(msg)
 
-  /** REFERENCE COUNT per canonical plan for the assembled-frame cache —
-    * the SINGLE ownership registry shared by [[requireMinSamples]] (the
-    * n_samples_threshold path) and `ModelBuilder.acquireAssembled` (the
-    * build path). One map, one count: the earlier design kept a builder
-    * refcount and a threshold-path borrow count side by side, and the
-    * two never saw each other's references — a plan-identical pair of
-    * claimants split across the maps could yank the shared cache from
-    * under each other (a threshold-0 build handed a threshold-5
-    * sibling's borrow to return, or a build-persisted cache classified
-    * "external" by a later direct caller and then unpersisted under
-    * it). Every claimant now takes its OWN reference via
-    * [[acquireAssembly]]; the first reference persists, the last
-    * [[releaseAssembled]] unpersists. Frames some outside caller cached
-    * while unregistered are never owned. Keyed on the canonicalized
-    * plan OBJECT (structural case-class equality — CacheManager's
-    * `sameResult` semantics), never its toString, which truncates past
-    * `spark.sql.debug.maxToStringFields` and would collide wide
-    * frames sharing a 25-column prefix. */
-  private val assemblyCached = scala.collection.mutable.Map
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]
+  /** Return the [[graft.SessionCache]] reference a threshold path
+    * ([[getData]], [[requireMinSamples]]) took on `df`; the last one
+    * unpersists. No-op for frames the cache never registered. */
+  def releaseAssembled(df: DataFrame): Unit = graft.SessionCache.release(df)
 
-  /** Take one reference on `df`'s assembled cache. Returns
-    * `Some(release)` when a reference was taken (the registry owns or
-    * now owns the cache; the first reference persists), `None` when the
-    * frame is externally cached — storage set while unregistered means
-    * some outside caller persisted it: use, never own, never release. */
-  private[graft] def acquireAssembly(df: DataFrame): Option[() => Unit] = {
-    // canonicalization is a pure (and, for the wide assembled frames
-    // this registry exists for, expensive) function of the plan —
-    // compute it before taking the monitor so parallel builds don't
-    // serialize on it
-    val k = df.queryExecution.analyzed.canonicalized
-    assemblyCached.synchronized {
-      val n = assemblyCached.getOrElse(k, 0)
-      if (n == 0 &&
-          df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) None
-      else {
-        // storage NONE covers both the first reference AND the repair
-        // of a registered cache some outside code dropped (e.g.
-        // spark.catalog.clearCache() between build phases) — without
-        // the re-persist every later claimant would silently recompute
-        // the assembly per action
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist()
-        assemblyCached(k) = n + 1
-        Some(() => releaseAssembled(df))
-      }
-    }
-  }
-
-  /** Whether the registry holds outstanding borrows for this plan. */
-  private[graft] def isAssemblyRegistered(
-      canonical: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    assemblyCached.synchronized(assemblyCached.contains(canonical))
-
-  /** Return one [[requireMinSamples]] borrow; the last return
-    * unpersists. No-op for frames this module never cached. The
-    * unpersist happens INSIDE the registry lock (mirroring
-    * [[acquireAssembly]]'s persist): removing the key under the lock
-    * but unpersisting after it opened a window where a concurrent
-    * acquire saw count 0 with storage still set and misclassified the
-    * module's own dying cache as externally owned — the new claimant
-    * then ran unreferenced and uncached. `unpersist` here is
-    * non-blocking, so no Spark job runs under the monitor. */
-  def releaseAssembled(df: DataFrame): Unit = {
-    val k = df.queryExecution.analyzed.canonicalized
-    assemblyCached.synchronized {
-      assemblyCached.get(k) match {
-        case Some(c) if c <= 1 =>
-          assemblyCached.remove(k); df.unpersist(): Unit
-        case Some(c) => assemblyCached(k) = c - 1
-        case None => ()
-      }
-    }
-  }
-
+  /** Fails with [[InsufficientDataError]] below `n` rows. For `n > 0`
+    * the returned frame holds one [[graft.SessionCache]] reference
+    * (return it with [[releaseAssembled]]). */
   def requireMinSamples(df: DataFrame, n: Long): DataFrame =
-    requireMinSamplesOwned(df, n)._1
+    if (n <= 0) df else leaseMinSamples(df, n).df
 
-  /** [[requireMinSamples]] plus whether THIS call took a registry
-    * reference (true ⇒ the caller owes one [[releaseAssembled]]) — the
-    * explicit hand-off the build path needs to return exactly the
-    * references its own getData chain took: a threshold-0 build takes
-    * none here and must acquire its own, and GUESSING from registry
-    * state at acquire time is how a plan-identical sibling's reference
-    * used to get stolen (returned by a build that never took one). */
-  private[graft] def requireMinSamplesOwned(
-      df: DataFrame, n: Long): (DataFrame, Boolean) = {
-    if (n <= 0) (df, false)
-    else {
-      // the count must execute the whole assembly anyway — persist
-      // around it (one registry reference to this caller) so the
-      // caller's first action reads the materialized frame instead of
-      // re-running resample→grid→interpolate→pivot end to end. Builds
-      // return the reference in their finally (acquireAssembled adopts
-      // it), direct callers with [[releaseAssembled]].
-      val rel = acquireAssembly(df)
-      // EVERY non-success path must return this call's reference — a
-      // count job that dies (executor loss, cancellation) would
-      // otherwise leave the refcount at 1 with no holder, pinning the
-      // wide cache for the session (external frames took none — the old
-      // code unpersisted even a caller's external cache here)
+  /** A lease on `df`, checked against `n` rows: the count must execute
+    * the whole assembly anyway, so it runs under the lease and the
+    * holder's first action reads the materialized frame instead of
+    * re-running resample→grid→interpolate→pivot end to end. Every
+    * failure path (short count, a count job that dies) closes the lease
+    * before rethrowing, or the cache would stay pinned for the session. */
+  private[graft] def leaseMinSamples(df: DataFrame, n: Long): graft.SessionCache.Lease = {
+    val lease = graft.SessionCache.acquire(df)
+    if (n > 0) {
       val c =
         try df.limit(math.min(n + 1, Int.MaxValue.toLong).toInt).count()
-        catch { case e: Throwable => rel.foreach(_.apply()); throw e }
+        catch { case e: Throwable => lease.close(); throw e }
       if (c < n) {
-        rel.foreach(_.apply())
+        lease.close()
         throw new InsufficientDataError(s"got $c rows < threshold $n")
       }
-      (df, rel.isDefined)
     }
+    lease
   }
 
   /** Minimal `$"col"` interpolator so library code (which has no

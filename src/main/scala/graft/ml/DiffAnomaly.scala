@@ -568,19 +568,17 @@ object DiffAnomaly {
       "pass either a fitted scoringScaler or a deferred scoringScalerKind, not both")
     // y columns (`target_tag_list`, diff.py fit(X, y)); empty -> y = X
     val y = if (targetTags.isEmpty) tags else targetTags
-    // persist the assembled frame FIRST: withRowIndex runs two small jobs
+    // lease the assembled frame FIRST: withRowIndex runs two small jobs
     // (chunk bounds + counts) before the fold loop, which would otherwise
-    // recompute the upstream resample/align per job. A caller-cached
-    // frame (ModelBuilder) is left alone — re-persisting warns and the
-    // unpersist would yank the caller's cache out from under it.
-    val callerCached =
-      wide.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (callerCached) wide else wide.persist()
+    // recompute the upstream resample/align per job. A frame the caller
+    // already holds (ModelBuilder's lease) or cached itself is shared,
+    // never yanked: closing this lease only returns our reference.
+    val lease = graft.SessionCache.acquire(wide)
     // the row count rides the indexing's own bounds aggregation — the
     // previous separate count() was a second full pass for a number the
     // indexing had already computed (guide §1.2)
     val (indexed0, nOpt) =
-      CrossValidate.withRowIndexCounted(src, Seq(col(orderCol)))
+      CrossValidate.withRowIndexCounted(wide, Seq(col(orderCol)))
     val indexed = indexed0.cache()
     try {
       val n = nOpt.getOrElse(indexed.count())
@@ -814,7 +812,7 @@ object DiffAnomaly {
         tags, y, orderCol, window, smoothingMethod,
         perFoldScores.map { case (k, v) => k -> v.toSeq }.toMap,
         folds)
-    } finally { indexed.unpersist(); if (!callerCached) src.unpersist() }
+    } finally { indexed.unpersist(); lease.close() }
   }
 
   /** M12 `DiffBasedKFCVAnomalyDetector` (`diff.py:461-635`): KFold CV,
@@ -834,11 +832,9 @@ object DiffAnomaly {
               thresholdPercentile: Double = 0.99,
               targetTags: Seq[String] = Nil): FittedDetector = {
     val y = if (targetTags.isEmpty) tags else targetTags
-    val callerCached =
-      wide.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val src = if (callerCached) wide else wide.persist()
+    val lease = graft.SessionCache.acquire(wide)
     val (indexed0, nOpt) =
-      CrossValidate.withRowIndexCounted(src, Seq(col(orderCol)))
+      CrossValidate.withRowIndexCounted(wide, Seq(col(orderCol)))
     val indexed = indexed0.cache()
     try {
       val n = nOpt.getOrElse(indexed.count())
@@ -960,7 +956,7 @@ object DiffAnomaly {
         Thresholds(featureTh, aggTh, None, None, Map.empty),
         tags, y, orderCol, Some(window), smoothingMethod,
         folds = folds)
-    } finally { indexed.unpersist(); if (!callerCached) src.unpersist() }
+    } finally { indexed.unpersist(); lease.close() }
   }
 
   private def fitScaler(kind: String, df: DataFrame, tags: Seq[String]): FittedScaler =

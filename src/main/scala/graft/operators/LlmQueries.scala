@@ -82,8 +82,8 @@ object LlmQueries {
     * exchange subplans, so ReusedExchange misses and shingles recompute
     * per branch (observed 4x slower). The cache lives for the batch
     * process; long-lived sessions should unpersist after consuming.
-    * ensureCached: all four queries derive the SAME canonical plan — a
-    * bare persist on the second one warns and double-books the cache.
+    * A SessionCache pin: all four queries derive the SAME canonical plan
+    * — a bare persist on the second one warns and double-books the cache.
     *
     * The scan is SPREAD before shingling only when it has fewer splits
     * than the session's parallelism: a small file scans as one task, so
@@ -105,9 +105,9 @@ object LlmQueries {
   }
 
   private def shingleFrame(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.ensureCached(
+    graft.SessionCache.acquire(
       TextDedup.withShingles(spread(Tables(spark, dir, "documents")),
-        "doc_id", "text", ngram = 3))
+        "doc_id", "text", ngram = 3)).df
 
   /** The SHARED verified MinHash near-dup pair frame for q34/q87 (r15,
     * guide §2.4 reuse): the banded candidate join + exact-Jaccard verify
@@ -118,8 +118,8 @@ object LlmQueries {
     * tiny relative to the corpus at any scale. */
   private def verifiedPairFrame(spark: SparkSession, dir: String): DataFrame = {
     val shDf = shingleFrame(spark, dir)
-    graft.Caching.ensureCached(TextDedup.verifiedPairs(shDf,
-      TextDedup.candidatePairs(shDf, k = 12, bands = 6), threshold = 0.3))
+    graft.SessionCache.acquire(TextDedup.verifiedPairs(shDf,
+      TextDedup.candidatePairs(shDf, k = 12, bands = 6), threshold = 0.3)).df
   }
 
   /** Banded MinHash-LSH near-dup pairs, exact-Jaccard verified at 0.3
@@ -179,8 +179,8 @@ object LlmQueries {
     * serves q89's frame AND q90's inner join. The frame is one row per
     * CONTAMINATED doc — tiny at any corpus scale. */
   private def contaminationHits(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.ensureCached(TextDedup.contamination(spreadDocs(spark, dir),
-      "doc_id", "text", isBenchmark = col("source") === "src0", n = 8))
+    graft.SessionCache.acquire(TextDedup.contamination(spreadDocs(spark, dir),
+      "doc_id", "text", isBenchmark = col("source") === "src0", n = 8)).df
 
   def contaminationScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -382,9 +382,9 @@ object LlmQueries {
     // 32-partition cache costs this six-branch pipeline more in per-task
     // overhead than the parallel map side saves (2.5 s vs 1.8 s min) —
     // the unspread cache is a second, tiny session entry.
-    val shDf = graft.Caching.ensureCached(
+    val shDf = graft.SessionCache.acquire(
       TextDedup.withShingles(Tables(spark, dir, "documents"),
-        "doc_id", "text", ngram = 3))
+        "doc_id", "text", ngram = 3)).df
     val cands = TextDedup.prefixFilterCandidates(shDf, threshold = 0.8)
     TextDedup.verifiedPairs(shDf, cands, threshold = 0.8)
       .select($"id_a", $"id_b", r4($"jaccard").as("jaccard"))

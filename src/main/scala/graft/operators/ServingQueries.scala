@@ -76,7 +76,7 @@ object ServingQueries {
     // Values unchanged: each fold's avg aggregates exactly its test span.
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(series, Seq($"bucket_ts"))
-    val indexed = graft.Caching.ensureCached(indexed0)
+    val indexed = graft.SessionCache.acquire(indexed0).df
     val n = nOpt.getOrElse(indexed.count())
     val folds = CrossValidate.timeSeriesSplit(n, 3)
     val foldOf = folds.tail.foldLeft(

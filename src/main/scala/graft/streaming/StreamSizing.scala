@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   * [[sessionFor]] reads `graft.streaming.statePartitions` from the
   * session conf (env `SPARK_GRAFT_STREAM_STATE_PARTITIONS` as fallback
   * for harness runs) and, when set, returns a NEW session (shared
-  * SparkContext, shared cache, its own conf) whose
-  * `spark.sql.shuffle.partitions` is the requested count — streams
+  * SparkContext, shared cache, a copy of the caller's runtime SQL conf)
+  * whose `spark.sql.shuffle.partitions` is the requested count — streams
   * built through it pin that state-store count into fresh checkpoints.
   * DEFAULT (unset): returns the caller's session unchanged — exactly
   * today's behavior, so the driver's bench rows stay comparable and no
@@ -49,7 +49,12 @@ object StreamSizing {
           throw new IllegalArgumentException(
             s"$confKey must be a positive int, got '$v'"))
         require(n >= 1, s"$confKey must be >= 1, got $n")
+        // newSession() starts from builder-time confs only: carry the
+        // caller's runtime SQL confs (time zone, ANSI, AQE flags) over,
+        // or batch and stream paths diverge in a configured deployment
         val s = spark.newSession()
+        spark.conf.getAll.foreach { case (k, v) =>
+          if (spark.conf.isModifiable(k)) s.conf.set(k, v) }
         s.conf.set("spark.sql.shuffle.partitions", n.toString)
         s
     }

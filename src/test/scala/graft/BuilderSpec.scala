@@ -187,26 +187,30 @@ class BuilderSpec extends AnyFunSuite {
     assert(r.fitted.folds.size == 4)
   }
 
-  test("assembled-frame cache ownership is refcounted across plan-identical frames") {
+  test("a registry hit closes the pre-assembled lease (advice b)") {
+    // a pre-assembled frame whose reference is already held (the
+    // threshold count's lease) reaches a build whose model the registry
+    // already holds: the hit returns early, and must still close the
+    // lease — or the assembly stays cached for the session
     import org.apache.spark.storage.StorageLevel
-    // two plan-IDENTICAL frames from different objects: CacheManager
-    // dedups the cache by canonical plan, so ownership must refcount
-    val df1 = longFrame.select($"tag", $"value")
-    val df2 = longFrame.select($"tag", $"value")
-    val rel1 = ModelBuilder.acquireAssembled(df1, ownedBorrow = false)
-    assert(df1.storageLevel != StorageLevel.NONE)
-    val rel2 = ModelBuilder.acquireAssembled(df2, ownedBorrow = false)
-    rel1()
-    // the first release must NOT yank the cache from the second owner
-    assert(df2.storageLevel != StorageLevel.NONE)
-    rel2()
-    assert(df1.storageLevel == StorageLevel.NONE)
-    // a frame the CALLER cached is used but never claimed or released
-    val ext = longFrame.select($"value").persist()
-    try {
-      ModelBuilder.acquireAssembled(ext, ownedBorrow = false)()
-      assert(ext.storageLevel != StorageLevel.NONE)
-    } finally ext.unpersist()
+    val tmp = Files.createTempDirectory("graft-build-prelease").toString
+    val spec = Config.machineFromConfig(Config.parseYaml(machineYaml.replace(
+      "  resolution: 10T\n", "  resolution: 10T\n  n_samples_threshold: 10\n")),
+      Some("test-project"), Config.defaultGlobals)
+    assert(Config.datasetConfig(spec).nSamplesThreshold == 10)
+    def build(pre: Option[SessionCache.Lease]) = ModelBuilder.buildSpec(spec,
+      longFrame, "tag", "ts", "value", outputDir = s"$tmp/model",
+      registryDir = Some(s"$tmp/registry"), closedForm = true,
+      preAssembled = pre)
+    assert(!build(None).fromCache)
+    val lease = graft.data.TimeSeries.dataLease(longFrame, "tag", "ts", "value",
+      Config.datasetConfig(spec))
+    assert(SessionCache.isRegistered(lease.df))
+    assert(build(Some(lease)).fromCache)
+    assert(!SessionCache.isRegistered(lease.df),
+      "the registry hit must return the pre-assembled reference")
+    assert(lease.df.storageLevel == StorageLevel.NONE,
+      "the registry hit must unpersist the pre-assembled frame")
   }
 
   test("cache key is stable and config-sensitive") {

@@ -1,170 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.ModelBuilder
 import graft.llm.TextDedup
 
 /** Regression coverage for the round-9 ADVICE findings and round-10
-  * verdict items: assembled-cache refcount keying (truncated-toString
-  * collision), the requireMinSamples ownership hand-off, the
-  * contaminationFull left-join convenience, and the forwarder fence's
-  * legacy-adopt path. */
+  * verdict items: the contaminationFull left-join convenience, sq8's
+  * all-non-finite dimension, and the forwarder fence's legacy-adopt
+  * path. (Its cache-ownership tests live in SessionCacheSpec.) */
 class Round10FixesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  test("refcount keys distinguish plans sharing a truncated toString prefix (advice: medium)") {
-    // plan toString truncates past spark.sql.debug.maxToStringFields
-    // (default 25) to "... N more fields": these two 31-column frames
-    // share their first 25 columns and differ only in the last — a
-    // string-keyed refcount map collides them (second claimant never
-    // persists its own frame; interleaved releases unpersist the wrong
-    // one); the canonicalized-plan key must keep them separate
-    val base = spark.range(5)
-    val df1 = base.select(col("id") +: (1 to 30).map(i => lit(i).as(s"c$i")): _*)
-    val df2 = base.select(col("id") +:
-      ((1 to 29).map(i => lit(i).as(s"c$i")) :+ lit(999).as("c30")): _*)
-    val r1 = ModelBuilder.acquireAssembled(df1.toDF(), ownedBorrow = false)
-    val r2 = ModelBuilder.acquireAssembled(df2.toDF(), ownedBorrow = false)
-    assert(df1.storageLevel != StorageLevel.NONE, "df1 claimed + persisted")
-    assert(df2.storageLevel != StorageLevel.NONE,
-      "df2 must persist its OWN frame, not alias df1's refcount entry")
-    r1()
-    assert(df1.storageLevel == StorageLevel.NONE)
-    assert(df2.storageLevel != StorageLevel.NONE,
-      "df1's release must not yank df2's cache")
-    r2()
-    assert(df2.storageLevel == StorageLevel.NONE)
-  }
-
-  test("threshold-cached assembly is claimed and released by the build path (advice: medium)") {
-    val df = spark.range(10).toDF("bucket_ts")
-      .withColumn("v", col("bucket_ts") * lit(2.0))
-    val cached = graft.data.TimeSeries.requireMinSamples(df, 5)
-    assert(cached.storageLevel != StorageLevel.NONE,
-      "threshold path persists around its count")
-    // the build ADOPTS the reference its own getData chain took
-    // (ownedBorrow hand-off) and its release frees it — the
-    // n_samples_threshold > 0 session-lifetime leak
-    val release = ModelBuilder.acquireAssembled(cached, ownedBorrow = true)
-    release()
-    assert(cached.storageLevel == StorageLevel.NONE,
-      "build release must unpersist the threshold-path cache")
-  }
-
-  test("a failed threshold unregisters and unpersists (no stale claim)") {
-    val df = spark.range(3).toDF("bucket_ts")
-      .withColumn("w", col("bucket_ts") + lit(1.0))
-    intercept[graft.data.TimeSeries.InsufficientDataError] {
-      graft.data.TimeSeries.requireMinSamples(df, 1000)
-    }
-    assert(df.storageLevel == StorageLevel.NONE)
-    assert(!graft.data.TimeSeries.isAssemblyRegistered(
-      df.queryExecution.analyzed.canonicalized),
-      "the failure path must remove its registration")
-  }
-
-  test("a build cannot yank a plan-identical direct caller's threshold cache (review fix)") {
-    val df = spark.range(12).toDF("bucket_ts")
-      .withColumn("z", col("bucket_ts") * lit(5.0))
-    // direct caller borrows first and HOLDS the frame...
-    val direct = graft.data.TimeSeries.requireMinSamples(df, 3)
-    assert(direct.storageLevel != StorageLevel.NONE)
-    // ...then a plan-identical build runs: its getData path borrows too
-    val viaBuild = graft.data.TimeSeries.requireMinSamples(direct, 3)
-    val release = ModelBuilder.acquireAssembled(viaBuild, ownedBorrow = true)
-    release() // build finishes
-    assert(direct.storageLevel != StorageLevel.NONE,
-      "the build's release must return ITS borrow, not unpersist the " +
-        "direct caller's live cache")
-    graft.data.TimeSeries.releaseAssembled(direct)
-    assert(direct.storageLevel == StorageLevel.NONE,
-      "the last borrower's release unpersists")
-  }
-
-  test("releaseAssembled frees a direct caller's threshold cache; external caches stay external") {
-    val direct = spark.range(7).toDF("bucket_ts")
-      .withColumn("x", col("bucket_ts") * lit(3.0))
-    val cached = graft.data.TimeSeries.requireMinSamples(direct, 2)
-    assert(cached.storageLevel != StorageLevel.NONE)
-    graft.data.TimeSeries.releaseAssembled(cached)
-    assert(cached.storageLevel == StorageLevel.NONE)
-    // a frame some OUTSIDE caller cached is used without claiming and
-    // build release stays a no-op (their unpersist, their timing)
-    val ext = spark.range(4).toDF("bucket_ts")
-      .withColumn("y", col("bucket_ts") - lit(1.0))
-    ext.persist()
-    try {
-      val release = ModelBuilder.acquireAssembled(ext.toDF(), ownedBorrow = false)
-      release()
-      assert(ext.storageLevel != StorageLevel.NONE,
-        "externally-owned cache must survive the build's release")
-      graft.data.TimeSeries.releaseAssembled(ext.toDF())
-      assert(ext.storageLevel != StorageLevel.NONE,
-        "releaseAssembled must not touch frames it never cached")
-    } finally ext.unpersist(): Unit
-  }
-
-  test("a threshold-0 build cannot steal a threshold sibling's reference (r10 review)") {
-    // Build A (n_samples_threshold = 5): its getData chain takes the
-    // registry reference. Build B, plan-identical but threshold 0 (the
-    // config DEFAULT): its chain took nothing, so its acquire must take
-    // its OWN reference — the dual-map design handed B a release of A's
-    // borrow, unpersisting A's cache mid-CV while A's own later release
-    // became a silent no-op
-    val df = spark.range(9).toDF("bucket_ts")
-      .withColumn("s", col("bucket_ts") * lit(7.0))
-    val a = graft.data.TimeSeries.requireMinSamples(df, 5)
-    assert(a.storageLevel != StorageLevel.NONE)
-    val relB = ModelBuilder.acquireAssembled(a, ownedBorrow = false) // B
-    relB() // B finishes first
-    assert(a.storageLevel != StorageLevel.NONE,
-      "B's release must return B's own reference, never A's")
-    graft.data.TimeSeries.releaseAssembled(a) // A's finally
-    assert(a.storageLevel == StorageLevel.NONE)
-  }
-
-  test("a threshold caller joins a build-owned cache instead of classifying it external (r10 review)") {
-    // reverse hole: a threshold-0 build persists first; a plan-identical
-    // requireMinSamples caller must CO-OWN that cache (same count), not
-    // classify it external — otherwise the build's release unpersists it
-    // from under the live direct caller
-    val df = spark.range(11).toDF("bucket_ts")
-      .withColumn("t", col("bucket_ts") + lit(4.0))
-    val relBuild = ModelBuilder.acquireAssembled(df, ownedBorrow = false) // threshold-0 build
-    assert(df.storageLevel != StorageLevel.NONE)
-    val (direct, owned) = graft.data.TimeSeries.requireMinSamplesOwned(df, 2)
-    assert(owned, "a registry-owned cache must grant the caller a reference")
-    relBuild() // build finishes
-    assert(direct.storageLevel != StorageLevel.NONE,
-      "the build's release must not yank the direct caller's live cache")
-    graft.data.TimeSeries.releaseAssembled(direct)
-    assert(direct.storageLevel == StorageLevel.NONE)
-  }
-
-  test("a registered cache dropped by outside code is repaired on the next claim (r10 review)") {
-    // some outside code unpersists a registry-owned cache (the
-    // clearCache-between-phases shape): the registry still counts a
-    // reference, so the next claimant must RE-PERSIST, not hand out a
-    // cache that no longer exists (silent per-action recompute)
-    val df = spark.range(8).toDF("bucket_ts")
-      .withColumn("u", col("bucket_ts") * lit(9.0))
-    val cached = graft.data.TimeSeries.requireMinSamples(df, 2)
-    assert(cached.storageLevel != StorageLevel.NONE)
-    cached.unpersist() // outside interference, registry count still 1
-    assert(cached.storageLevel == StorageLevel.NONE)
-    val rel = ModelBuilder.acquireAssembled(cached, ownedBorrow = false)
-    assert(cached.storageLevel != StorageLevel.NONE,
-      "the claim must repair the externally-dropped cache")
-    rel()
-    assert(cached.storageLevel != StorageLevel.NONE,
-      "the original reference still holds the repaired cache")
-    graft.data.TimeSeries.releaseAssembled(cached)
-    assert(cached.storageLevel == StorageLevel.NONE)
-  }
 
   test("contaminationFull: a row per corpus doc, clean docs report 0 (verdict item 2)") {
     val docs = Seq(
@@ -204,42 +51,6 @@ class Round10FixesSpec extends AnyFunSuite {
       graft.llm.Similarity.sq8TopK(corpus, queries, "id", "emb", k = 2)
     }
     assert(e.getMessage.contains("no finite values"), e.getMessage)
-  }
-
-  test("parallel plan-identical getData calls don't yank each other's resample cache, and release it") {
-    // two builds of the SAME dataset config run concurrently
-    // (Project.buildAll's dataset-sharing shape): CacheManager dedups
-    // their plan-identical resample persists into ONE entry, so a bare
-    // persist/unpersist pair let the first finisher's finally drop the
-    // cache mid-assembly under the second — the scoped cache now takes
-    // refcounted references instead. Both calls must succeed, and after
-    // the wide-frame references are returned nothing may stay cached.
-    val long = Seq.tabulate(400)(i =>
-      ("t" + (i % 2), i.toLong * 60, i.toDouble)).toDF("tag", "epoch", "v")
-      .select($"tag", timestamp_seconds($"epoch").as("ts"), $"v")
-    val cfg = graft.data.TimeSeries.DatasetConfig(
-      tags = Seq("t0", "t1"), resolution = "10T",
-      nSamplesThreshold = 5)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fs = (1 to 2).map(_ => pool.submit(
-        new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-          def call() = graft.data.TimeSeries.getData(
-            long, "tag", "ts", "v", cfg)
-        }))
-      val wides = fs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
-      wides.foreach(w => assert(w.count() > 0))
-      // plan-identical wide frames share ONE refcounted cache entry:
-      // while either reference is outstanding the frame stays cached
-      assert(wides.forall(_.storageLevel != StorageLevel.NONE))
-      // return the threshold path's wide-frame references (one per call)
-      graft.data.TimeSeries.releaseAssembled(wides.head)
-      assert(wides.last.storageLevel != StorageLevel.NONE,
-        "first release must not yank the sibling's shared cache")
-      graft.data.TimeSeries.releaseAssembled(wides.last)
-      assert(wides.forall(_.storageLevel == StorageLevel.NONE),
-        "last release unpersists the shared wide cache")
-    } finally pool.shutdownNow()
   }
 
   test("a sink holding only unparseable batch_id dirs still fences (no silent interleave)") {

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * retries share the id, so nothing double-counts).
   *
   * Counts are asserted on the SECOND back-to-back run: the first run
-  * fills the session caches (`Caching.ensureCached` frames are
+  * fills the session caches (`SessionCache` pins are
   * session-wide, so cross-suite ordering would otherwise decide who
   * pays the fill), and the warm count is exactly the steady-state
   * per-execution cost the r14 optimizations reduced. Exceeding a pinned
@@ -92,6 +92,14 @@ class RuntimeShuffleSpec extends AnyFunSuite {
       // either way. 12 is the observed band's top; losing the pair
       // cache would re-run the band-join pipeline (≥ +4) and still fail
       "q87_dup_clusters" -> 12)
+    // the pins are exact counts for this session shape only: fail on
+    // the environment, not on a misleading "regression", elsewhere
+    val master = spark.sparkContext.master
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(master == "local[4]" && partitions == "4",
+      s"RuntimeShuffleSpec pins assume master local[4] with " +
+        s"spark.sql.shuffle.partitions=4; this session runs master " +
+        s"$master with $partitions shuffle partitions")
     val measured = pinned.keys.toSeq.sorted.map(n => n -> runWarm(n))
     val over = measured.collect {
       case (n, got) if got > pinned(n) =>

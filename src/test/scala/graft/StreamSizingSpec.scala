@@ -65,6 +65,23 @@ class StreamSizingSpec extends AnyFunSuite {
     } finally spark.conf.unset(StreamSizing.confKey)
   }
 
+  test("configured: the new session keeps the caller's runtime confs (advice a)") {
+    // newSession() starts from builder-time confs only: a runtime time
+    // zone set on the caller must still reach the stream's session
+    val tzKey = "spark.sql.session.timeZone"
+    val tz0 = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, "America/New_York")
+    spark.conf.set(StreamSizing.confKey, "3")
+    try {
+      val sess = StreamSizing.sessionFor(spark)
+      assert(sess.conf.get(tzKey) == "America/New_York")
+      assert(sess.conf.get("spark.sql.shuffle.partitions") == "3")
+    } finally {
+      spark.conf.unset(StreamSizing.confKey)
+      spark.conf.set(tzKey, tz0)
+    }
+  }
+
   test("the checkpoint pins the count across restarts with a changed knob") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ssz-pin").toString
     spark.conf.set(StreamSizing.confKey, "3")
