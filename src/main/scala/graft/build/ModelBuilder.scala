@@ -249,27 +249,14 @@ object ModelBuilder {
       name.replace("_", "-") -> CrossValidate.aggregateScores(vals)
     }
 
-    // resolve like reconstructorOf does — a Pipeline[..., PCA] base must
-    // persist as "pca", or the saved params are unloadable
-    def implOf(s: ModelRegistry.Stage): String = s match {
-      case ModelRegistry.Reconstruction(impl, _) => impl
-      case _: ModelRegistry.RawSpec => "mlp"
-      // iteratively-trained window models keep their own impl; closed-form
-      // impls get the bottlenecked linear window autoencoder
-      case ModelRegistry.Windowed(_, 0, ModelRegistry.Reconstruction("mlp", _)) => "mlp"
-      case ModelRegistry.Windowed(_, 0, ModelRegistry.Reconstruction("lstm", _)) => "lstm"
-      case ModelRegistry.Windowed(_, 0, _) => "window_ae"
-      case ModelRegistry.Windowed(_, _, inner) => implOf(inner)
-      case ModelRegistry.PipelineOf(steps) if steps.nonEmpty => implOf(steps.last)
-      case _ => "ridge"
-    }
-    val implName = implOf(detector.base)
+    val implName = fitted.model.impl
     // the estimator family the CONFIG asked for: a substitution must be
     // visible in metadata, never silent — the definition round-trips the
     // original class path for config fidelity, so `impl` is the truth
     // about what actually trained
-    val requestedImpl = implOf(ModelRegistry.detectorOf(requested)
-      .map(_.base).getOrElse(requested))
+    val requestedImpl = ModelRegistry.reconstructorOf(
+      ModelRegistry.detectorOf(requested).map(_.base).getOrElse(requested),
+      "bucket_ts", epoch0).impl
     val substitution: Map[String, Any] =
       if (implName == requestedImpl) Map("impl" -> implName)
       else Map(
@@ -315,14 +302,8 @@ object ModelBuilder {
               s"fold-$k-n-test" -> f.nTest)
           }.toMap))))
 
-    // the FINAL model's fitted preprocessing (fit on the full series)
-    // goes to disk for the serve path
-    val prepOut = fitted.model match {
-      case pf: graft.ml.Preprocess.PreprocessedFitted => pf.prep.specs
-      case _ => Nil
-    }
     Persistence.save(outputDir,
-      Persistence.stateOf(fitted, implName, epoch0, prepOut,
+      Persistence.stateOf(fitted, epoch0,
         windowSpec.map(wd => (dsCfg.tags, wd.lookback, wd.lookahead))),
       metadata)
     registryDir.foreach(Persistence.registerModel(_, key, outputDir))

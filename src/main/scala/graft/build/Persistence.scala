@@ -3,11 +3,9 @@ package graft.build
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
-import graft.config.Config
-import graft.ml.DiffAnomaly.{Fitted, FittedDetector, Thresholds}
+import graft.config.{Config, ModelRegistry}
+import graft.ml.DiffAnomaly.{FittedDetector, Thresholds}
+import graft.ml.Preprocess
 import graft.ml.Scalers.FittedScaler
 
 /** Model persistence (SURVEY K1/M3/S5/F9; ref: `gordo/serializer/
@@ -108,18 +106,23 @@ object Persistence {
         * construction before scoring; None for row-local models. */
       windowing: Option[(Seq[String], Int, Int)] = None)
 
-  def stateOf(fd: FittedDetector, impl: String, epoch0: Long,
-              preprocess: List[Map[String, Any]] = Nil,
+  /** The persisted state of a fitted (or loaded) detector: `impl` is the
+    * model's own family name, and a preprocessed model's fitted chain
+    * goes to disk for the serve path. */
+  def stateOf(fd: FittedDetector, epoch0: Long,
               windowing: Option[(Seq[String], Int, Int)] = None): ModelState =
-    ModelState(impl, epoch0, fd.orderCol, fd.tags,
+    ModelState(fd.model.impl, epoch0, fd.orderCol, fd.tags,
       if (fd.targets == fd.tags) Nil else fd.targets,
       fd.model.params, fd.scaler.kind, fd.scaler.stats, fd.thresholds,
-      fd.window, fd.smoothingMethod, preprocess, windowing)
+      fd.window, fd.smoothingMethod,
+      fd.model match {
+        case pf: Preprocess.PreprocessedFitted => pf.prep.specs
+        case _ => Nil
+      },
+      windowing)
 
   def save(dir: String, state: ModelState,
            metadata: Map[String, Any] = Map.empty): Unit = {
-    val p = Paths.get(dir)
-    Files.createDirectories(p)
     val modelJson = toJson(Map(
       "impl" -> state.impl,
       "epoch0" -> state.epoch0,
@@ -141,15 +144,43 @@ object Persistence {
       "windowing" -> state.windowing.map { case (bt, lb, la) =>
         Map("baseTags" -> bt, "lookback" -> lb, "lookahead" -> la)
       }.getOrElse(null)))
-    Files.writeString(p.resolve("model.json"), modelJson)
-    Files.writeString(p.resolve("metadata.json"), toJson(metadata))
-    Files.writeString(p.resolve("info.json"),
-      toJson(Map("checksum" -> sha256(modelJson))))
+    writeChecked(dir, "model.json", modelJson,
+      "metadata.json" -> toJson(metadata))
   }
 
   private def sha256(s: String): String =
     MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
+
+  /** The checksummed-artifact writer (model dumps, ANN indexes): `file`,
+    * then each `sidecar`, then `info.json` holding `file`'s sha-256.
+    * info.json goes LAST, so a reader racing an in-place rewrite sees a
+    * checksum mismatch, never a stale file that still matches. */
+  def writeChecked(dir: String, file: String, content: String,
+                   sidecars: (String, String)*): Unit = {
+    val p = Paths.get(dir)
+    Files.createDirectories(p)
+    Files.writeString(p.resolve(file), content)
+    sidecars.foreach { case (f, c) => Files.writeString(p.resolve(f), c) }
+    Files.writeString(p.resolve("info.json"),
+      toJson(Map("checksum" -> sha256(content))))
+  }
+
+  /** The checksummed-artifact reader: `file`'s contents, VERIFIED against
+    * info.json. A missing or null checksum field rejects as loudly as a
+    * mismatch — an anonymous NoSuchElementException/NPE is no artifact
+    * reject. */
+  def readChecked(dir: String, file: String): String = {
+    val content = Files.readString(Paths.get(dir, file))
+    val expected = Config.parseYaml(
+        Files.readString(Paths.get(dir, "info.json")))
+      .get("checksum").filter(_ != null).map(_.toString)
+      .getOrElse(throw new IllegalArgumentException(
+        s"info.json in $dir has no checksum — corrupt or tampered artifact"))
+    require(sha256(content) == expected,
+      s"$file checksum mismatch in $dir — corrupt or tampered artifact")
+    content
+  }
 
   def loadMetadata(dir: String): Map[String, Any] =
     Config.parseYaml(Files.readString(Paths.get(dir, "metadata.json")))
@@ -166,22 +197,11 @@ object Persistence {
     * the serve path is where a corrupted artifact does damage — a
     * flipped byte in a threshold would otherwise parse fine and score
     * silently wrong forever (the q80 gate recomputes the checksum, but
-    * a gate cannot protect a production load it isn't in front of).
-    * Same discipline as [[graft.llm.AnnIndex.load]]. */
+    * a gate cannot protect a production load it isn't in front of) —
+    * through [[readChecked]], the same reader [[graft.llm.AnnIndex.load]]
+    * uses. */
   def loadFull(dir: String): (FittedDetector, Option[(Seq[String], Int, Int)]) = {
-    val modelJson = Files.readString(Paths.get(dir, "model.json"))
-    // a tampered/truncated info.json with a MISSING or explicit-null
-    // checksum field was an anonymous NoSuchElementException/NPE — the
-    // artifact reject must be as loud as the mismatch case below (the
-    // r13 null-hole class, artifact-side)
-    val expected = Config.parseYaml(
-        Files.readString(Paths.get(dir, "info.json")))
-      .get("checksum").filter(_ != null).map(_.toString)
-      .getOrElse(throw new IllegalArgumentException(
-        s"info.json in $dir has no checksum — corrupt or tampered artifact"))
-    require(sha256(modelJson) == expected,
-      s"model.json checksum mismatch in $dir — corrupt or tampered artifact")
-    val m = Config.parseYaml(modelJson)
+    val m = Config.parseYaml(readChecked(dir, "model.json"))
     def dbl(v: Any): Double =
       if (v == null) Double.NaN else v.toString.toDouble
     val tags = m("tags").asInstanceOf[List[Any]].map(_.toString)
@@ -207,11 +227,17 @@ object Persistence {
       Option(m.getOrElse("smoothAggregateThreshold", null)).map(dbl),
       m.getOrElse("perFoldAggregate", Map.empty[String, Any])
         .asInstanceOf[Map[String, Any]].map { case (k, v) => k -> dbl(v) })
-    val prep = graft.ml.Preprocess.fromSpecs(
+    val prep = Preprocess.fromSpecs(
       m.getOrElse("preprocess", List.empty[Any]).asInstanceOf[List[Any]]
         .map(_.asInstanceOf[Map[String, Any]]))
-    val fitted = rebuildFitted(m("impl").toString, params, tags, orderCol,
-      epoch0, prep)
+    // feature references go through the persisted chain (identity when
+    // empty) and ALWAYS through `graft.Cols.q`: dotted tag names are a
+    // supported case, and a bare `col(tag)` would fail them on load
+    val inner = ModelRegistry.fittedFromParams(m("impl").toString, params,
+      tags, orderCol, epoch0,
+      t => prep.preFrom(prep.keyFor(t), graft.Cols.q(t).cast("double")))
+    val fitted =
+      if (prep.isEmpty) inner else Preprocess.PreprocessedFitted(inner, prep)
     val windowing = Option(m.getOrElse("windowing", null)).map { v =>
       val w = v.asInstanceOf[Map[String, Any]]
       (w("baseTags").asInstanceOf[List[Any]].map(_.toString),
@@ -221,76 +247,6 @@ object Persistence {
       tags, targets, orderCol,
       Option(m.getOrElse("window", null)).map(_.toString.toInt),
       m.getOrElse("smoothingMethod", "smm").toString), windowing)
-  }
-
-  /** Reconstruct the prediction expressions from saved weights. The
-    * feature references go through the persisted preprocessing chain
-    * (identity when empty) and predictions back through its affine
-    * inverse — and ALWAYS through `graft.Cols.q`: tag names with dots
-    * (`GRA-YE  -23-0751X.PV`) are a supported case, so a bare `col(tag)`
-    * here would fail any persisted dotted-tag model on load-then-score. */
-  private def rebuildFitted(impl: String, p: Map[String, Double],
-                            tags: Seq[String], orderCol: String,
-                            epoch0: Long,
-                            prep: graft.ml.Preprocess.Fitted): Fitted = {
-    def feature(t: String): Column =
-      prep.preFrom(prep.keyFor(t), graft.Cols.q(t).cast("double"))
-    val inner: Fitted = impl match {
-      case "trend" => new Fitted {
-        private def x: Column = (col(orderCol) - lit(epoch0)).cast("double")
-        def predictCol(tag: String): Column =
-          lit(p(s"a_$tag")) + lit(p(s"b_$tag")) * x
-        def params: Map[String, Double] = p
-      }
-      case "ridge" => new Fitted {
-        private val feats: Seq[Column] =
-          lit(1.0) +: tags.map(t => feature(t).cast("double"))
-        def predictCol(tag: String): Column =
-          feats.indices
-            .flatMap(fi => p.get(s"w_${tag}_$fi").map(w => feats(fi) * lit(w)))
-            .reduce(_ + _)
-        def params: Map[String, Double] = p
-      }
-      case "pca" => pcaFitted(p, tags, feature)
-      case "mlp" => graft.ml.Mlp.fittedFromParams(p, tags, feature)
-      case "lstm" => graft.ml.Lstm.fittedFromParams(p, tags, feature)
-      case "window_ae" =>
-        // PCA over the saved LAG feature tags; targets map to their
-        // current-row feature (the WindowAutoencoder adaptation)
-        val pca = pcaFitted(p, tags, feature)
-        new Fitted {
-          def predictCol(tag: String): Column =
-            pca.predictCol(if (tags.contains(tag)) tag else s"${tag}__lag0")
-          def params: Map[String, Double] = p
-        }
-      case other => throw new IllegalStateException(s"unknown model impl: $other")
-    }
-    if (prep.isEmpty) inner
-    else new Fitted {
-      def predictCol(tag: String): Column = prep.post(tag, inner.predictCol(tag))
-      def params: Map[String, Double] = inner.params
-    }
-  }
-
-  private def pcaFitted(p: Map[String, Double], tags: Seq[String],
-                        feature: String => Column): Fitted = new Fitted {
-    private val mu = tags.map(t => p(s"mu_$t")).toArray
-    private val nComp = p.keys.collect {
-      case k if k.startsWith("pc_") => k.split("_")(1).toInt
-    }.foldLeft(-1)(math.max) + 1
-    private val comps = Array.tabulate(nComp, tags.size)((ci, d) => p(s"pc_${ci}_$d"))
-    def predictCol(tag: String): Column = {
-      val ti = tags.indexOf(tag)
-      val centered = tags.zipWithIndex.map { case (t, i) =>
-        feature(t).cast("double") - lit(mu(i))
-      }
-      comps.foldLeft(lit(mu(ti)): Column) { (acc, comp) =>
-        val proj = centered.zip(comp)
-          .map { case (c, w) => c * lit(w) }.reduce(_ + _)
-        acc + lit(comp(ti)) * proj
-      }
-    }
-    def params: Map[String, Double] = p
   }
 
   // ---- disk registry (ref: gordo/util/disk_registry.py:18-117) ----
@@ -324,14 +280,10 @@ object Persistence {
     val f = Paths.get(registryDir, key)
     if (Files.exists(f)) {
       val dir = Files.readString(f).trim
-      val valid = Files.exists(Paths.get(dir, "model.json")) &&
+      val valid =
         scala.util.Try(loadMetadata(dir).get("cache_key"))
           .toOption.flatten.contains(key) &&
-        scala.util.Try {
-          sha256(Files.readString(Paths.get(dir, "model.json"))) ==
-            Config.parseYaml(Files.readString(
-              Paths.get(dir, "info.json")))("checksum").toString
-        }.getOrElse(false)
+        scala.util.Try(readChecked(dir, "model.json")).isSuccess
       if (valid) Some(dir) else None
     } else None
   }

@@ -1,6 +1,6 @@
 package graft.config
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ml.{DiffAnomaly, InfImputer, Preprocess, Scalers}
@@ -398,13 +398,32 @@ object ModelRegistry {
       // the fit from collapsing to the identity, like the MLP case
       case Windowed(_, 0, Reconstruction("lstm", _)) =>
         new graft.ml.Lstm.LstmReconstructor()
-      case Windowed(_, 0, _) =>
-        new DiffAnomaly.WindowAutoencoder(t => s"${t}__lag0")
+      case Windowed(_, 0, _) => new DiffAnomaly.WindowAutoencoder()
       case Windowed(_, _, inner) => reconstructorOf(inner, orderCol, epoch0)
       case PipelineOf(Nil) =>
         throw new CompileException("empty base-estimator Pipeline")
       case PipelineOf(steps) => reconstructorOf(steps.last, orderCol, epoch0)
       case other => throw new CompileException(s"no reconstructor in $other")
+    }
+
+  /** The load side of [[reconstructorOf]]: a persisted
+    * [[DiffAnomaly.Reconstructor.impl]] name → its family's
+    * `fittedFromParams`, the same constructor the fit decoders call. A
+    * new family is one reconstructor with an `impl` name plus one entry
+    * here. */
+  def fittedFromParams(impl: String, p: Map[String, Double],
+                       tags: Seq[String], orderCol: String, epoch0: Long,
+                       feature: String => Column): DiffAnomaly.Fitted =
+    impl match {
+      case "trend" =>
+        DiffAnomaly.TrendReconstructor.fittedFromParams(p, orderCol, epoch0)
+      case "ridge" => DiffAnomaly.RidgeReconstructor.fittedFromParams(p, tags, feature)
+      case "pca" => DiffAnomaly.PcaReconstructor.fittedFromParams(p, tags, feature)
+      case "window_ae" =>
+        DiffAnomaly.WindowAutoencoder.fittedFromParams(p, tags, feature)
+      case "mlp" => graft.ml.Mlp.fittedFromParams(p, tags, feature)
+      case "lstm" => graft.ml.Lstm.fittedFromParams(p, tags, feature)
+      case other => throw new IllegalStateException(s"unknown model impl: $other")
     }
 
   /** Preprocessing prefix of a base estimator: the stages before the

@@ -1,9 +1,6 @@
 package graft.llm
 
-import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
-
-import graft.build.Persistence.toJson
+import graft.build.Persistence.{readChecked, toJson, writeChecked}
 import graft.config.Config
 
 /** Persisted ANN index artifacts — the serving-side counterpart of the
@@ -28,32 +25,16 @@ object AnnIndex {
                    codebook: Option[Similarity.PqCodebook],
                    nprobe: Int)
 
-  def save(dir: String, index: Index): Unit = {
-    val p = Paths.get(dir)
-    Files.createDirectories(p)
-    val json = toJson(Map(
+  def save(dir: String, index: Index): Unit =
+    writeChecked(dir, "index.json", toJson(Map(
       "centroids" -> index.centroids.map { case (cid, ce) =>
         Map("cid" -> cid, "ce" -> ce)
       },
       "codebook" -> index.codebook.map(_.asInstanceOf[Any]).getOrElse(null),
-      "nprobe" -> index.nprobe))
-    Files.writeString(p.resolve("index.json"), json)
-    Files.writeString(p.resolve("info.json"),
-      toJson(Map("checksum" -> sha256(json))))
-  }
+      "nprobe" -> index.nprobe)))
 
   def load(dir: String): Index = {
-    val json = Files.readString(Paths.get(dir, "index.json"))
-    // missing/null checksum field rejects as loudly as a mismatch (the
-    // r13 null-hole class, artifact-side — same fix as Persistence.loadFull)
-    val expected = Config.parseYaml(
-        Files.readString(Paths.get(dir, "info.json")))
-      .get("checksum").filter(_ != null).map(_.toString)
-      .getOrElse(throw new IllegalArgumentException(
-        s"info.json in $dir has no checksum — corrupt or tampered artifact"))
-    require(sha256(json) == expected,
-      s"index.json checksum mismatch in $dir — corrupt or tampered artifact")
-    val m = Config.parseYaml(json)
+    val m = Config.parseYaml(readChecked(dir, "index.json"))
     def dbl(v: Any): Double = v.toString.toDouble
     val cents = m("centroids").asInstanceOf[List[Any]].map { c =>
       val cm = c.asInstanceOf[Map[String, Any]]
@@ -66,8 +47,4 @@ object AnnIndex {
     }
     Index(cents, cb, m("nprobe").toString.toInt)
   }
-
-  private def sha256(s: String): String =
-    MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
 }

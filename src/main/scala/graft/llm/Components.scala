@@ -243,19 +243,11 @@ object Components {
         // the count below is what materializes the lazy checkpoint — if
         // that job dies partway, `next`'s already-stored blocks are
         // released by the finally (it never became `labels`)
-        val changedDf = next.as("n")
+        val changed = next.as("n")
           .join(labels.as("o"), Seq("node"))
           .filter(col("n.label") =!= col("o.label"))
           .limit(1)
-        // dev knob: dump the round's physical plans (the loop's real
-        // shape — the RETURNED frame's plan is checkpoint-truncated)
-        if (sys.env.get("GRAFT_CC_EXPLAIN").contains("1") && it == 1) {
-          println(s"=== CC round ${it + 1}: jumped (pre-checkpoint) ===")
-          println(jumped.queryExecution.executedPlan.toString)
-          println(s"=== CC round ${it + 1}: convergence count ===")
-          println(changedDf.queryExecution.executedPlan.toString)
-        }
-        val changed = changedDf.count()
+          .count()
         // `next` is now self-contained: release the SUPERSEDED round —
         // round 0's CacheManager cache via unpersist, later rounds'
         // RDD-level checkpoint blocks/files via the TRACKED rdd handle

@@ -33,6 +33,10 @@ object DiffAnomaly {
     * columns. Implementations must be deterministic (SURVEY §7.4: no NN
     * nondeterminism in correctness gates). */
   trait Reconstructor {
+    /** Family name persisted as model.json `impl`;
+      * [[graft.config.ModelRegistry.fittedFromParams]] maps it back to
+      * the family's param→column constructor on load. */
+    def impl: String
     /** Fit predicting `yTags` from the `xTags` features (the reference's
       * `tag_list` → `target_tag_list` split; `y = X` for autoencoders),
       * with an explicit feature-expression builder: `feature(tag)` is
@@ -82,6 +86,8 @@ object DiffAnomaly {
     def predictCol(tag: String): Column
     /** Serializable parameters for model persistence (K1). */
     def params: Map[String, Double]
+    /** The [[Reconstructor.impl]] family these params belong to. */
+    def impl: String
     /** A10 training history (the keras `History` analog,
       * `gordo/machine/model/models.py:339-357`): per-epoch metric lists +
       * a `params` block. Empty for closed-form fits — they have no
@@ -105,14 +111,10 @@ object DiffAnomaly {
     * Deterministic, one aggregation pass, SQL-expressible — the
     * correctness-gate reconstruction model (SURVEY §7.3(c)). */
   class TrendReconstructor(orderCol: String, epoch0: Long) extends Reconstructor {
+    def impl: String = "trend"
     private def x: Column = (col(orderCol) - lit(epoch0)).cast("double")
-    private def fittedOf(ab: Map[String, (Double, Double)]): Fitted =
-      new Fitted {
-        def predictCol(tag: String): Column =
-          lit(ab(tag)._1) + lit(ab(tag)._2) * x
-        def params: Map[String, Double] =
-          ab.flatMap { case (t, (a, b)) => Seq(s"a_$t" -> a, s"b_$t" -> b) }
-      }
+    private def fitted(p: Map[String, Double]): Fitted =
+      TrendReconstructor.fittedFromParams(p, orderCol, epoch0)
     /** Per-segment buffer: n, mean(x), central co-moments Cxx and Cxy per
       * target — regr_slope = Cxy/Cxx and regr_intercept = ȳ − slope·x̄
       * are exactly the ratios Spark's REGR_* aggregates compute, and the
@@ -147,9 +149,9 @@ object DiffAnomaly {
                 s"cxy_$t" -> (a(s"cxy_$t") + b(s"cxy_$t") + dx * dy * k))
             }
         },
-        buf => fittedOf(yTags.map { t =>
+        buf => fitted(yTags.flatMap { t =>
           val slope = buf(s"cxy_$t") / buf("cxx")
-          t -> (buf(s"my_$t") - slope * buf("mx"), slope)
+          Seq(s"a_$t" -> (buf(s"my_$t") - slope * buf("mx")), s"b_$t" -> slope)
         }.toMap)))
     override def aggPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column)
@@ -157,12 +159,26 @@ object DiffAnomaly {
       yTags.flatMap(t => Seq(
         regr_slope(feature(t), x).as(s"b_$t"),
         regr_intercept(feature(t), x).as(s"a_$t"))),
-      row => fittedOf(yTags.map(t =>
-        t -> (aggCell(row, s"a_$t"), aggCell(row, s"b_$t"))).toMap)))
+      row => fitted(yTags.flatMap(t =>
+        Seq(s"a_$t" -> aggCell(row, s"a_$t"), s"b_$t" -> aggCell(row, s"b_$t"))).toMap)))
     def fit(train: DataFrame, xTags: Seq[String], yTags: Seq[String],
             feature: String => Column): Fitted = {
       val (aggs, dec) = aggPlan(xTags, yTags, feature).get
       dec(train.agg(aggs.head, aggs.tail: _*).head())
+    }
+  }
+
+  object TrendReconstructor {
+    /** ŷ_tag = a_tag + b_tag·(orderCol − epoch0) from params
+      * `a_<tag>`/`b_<tag>` — the one param→column mapping the fit
+      * decoders and the model load share. */
+    def fittedFromParams(p: Map[String, Double], orderCol: String,
+                         epoch0: Long): Fitted = new Fitted {
+      private val x: Column = (col(orderCol) - lit(epoch0)).cast("double")
+      def predictCol(tag: String): Column =
+        lit(p(s"a_$tag")) + lit(p(s"b_$tag")) * x
+      def params: Map[String, Double] = p
+      def impl: String = "trend"
     }
   }
 
@@ -175,12 +191,13 @@ object DiffAnomaly {
     * — the Spark shape for "fit collects the modest per-machine matrix"
     * (SURVEY §3.1). */
   class RidgeReconstructor(lambda: Double = 1e-8) extends Reconstructor {
-    /** Shared Gram construction: (aggregates, their alias names, the
-      * column vector) — single source of truth for aggPlan AND segPlan,
-      * so the alias set can never desync between the two. */
+    def impl: String = "ridge"
+    /** Shared Gram construction: (aggregates, their alias names) —
+      * single source of truth for aggPlan AND segPlan, so the alias set
+      * can never desync between the two. */
     private def gramPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column)
-        : (Seq[Column], Seq[String], Seq[Column]) = {
+        : (Seq[Column], Seq[String]) = {
       val m = xTags.size
       // column vector = (1, xTags..., y-only targets...): the Gram over
       // all pairs carries both XᵀX and the XᵀY cross terms
@@ -192,57 +209,50 @@ object DiffAnomaly {
       // decoder (features stop at index m) — skip those aggregates
       val pairs = for { i <- 0 to m; j <- i to nAll } yield (i, j)
       (pairs.map { case (i, j) => sum(allCols(i) * allCols(j)).as(s"g_${i}_$j") },
-        pairs.map { case (i, j) => s"g_${i}_$j" },
-        allCols)
+        pairs.map { case (i, j) => s"g_${i}_$j" })
     }
     override def aggPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column)
         : Option[(Seq[Column], org.apache.spark.sql.Row => Fitted)] = {
-      val (aggs, _, allCols) = gramPlan(xTags, yTags, feature)
+      val (aggs, _) = gramPlan(xTags, yTags, feature)
       Some((aggs,
         row => decodeGram((i, j) =>
           aggCell(row, s"g_${math.min(i, j)}_${math.max(i, j)}"),
-          xTags, yTags, allCols)))
+          xTags, yTags, feature)))
     }
     /** Segmented fit: Gram-product sums merge by plain addition. */
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column): Option[SegPlan[Fitted]] = {
-      val (aggs, names, allCols) = gramPlan(xTags, yTags, feature)
+      val (aggs, names) = gramPlan(xTags, yTags, feature)
       Some(SegPlan(
         aggs,
         row => names.map(n => n -> aggCell(row, n)).toMap,
         (a, b) => names.map(n => n -> (a(n) + b(n))).toMap,
         buf => decodeGram((i, j) =>
           buf(s"g_${math.min(i, j)}_${math.max(i, j)}"),
-          xTags, yTags, allCols)))
+          xTags, yTags, feature)))
     }
     /** Normal-equation solve from any Gram lookup; weights per target
       * over features (1, xTags != target) — a target present among the
       * inputs is excluded from its own features. */
     private def decodeGram(gram: (Int, Int) => Double, xTags: Seq[String],
-                           yTags: Seq[String], allCols: Seq[Column]): Fitted = {
+                           yTags: Seq[String], feature: String => Column): Fitted = {
       val m = xTags.size
       val extraY = yTags.filterNot(xTags.contains)
       def yIdx(t: String): Int = {
         val xi = xTags.indexOf(t)
         if (xi >= 0) xi + 1 else m + 1 + extraY.indexOf(t)
       }
-      val weights: Map[String, Seq[(Int, Double)]] = yTags.map { t =>
+      val weights = yTags.flatMap { t =>
         val ti = yIdx(t)
         val fIdx = (0 to m).filterNot(_ == ti)
         val a = Array.tabulate(fIdx.size, fIdx.size) { (i, j) =>
           gram(fIdx(i), fIdx(j)) + (if (i == j) lambda else 0.0)
         }
         val b = fIdx.map(gram(_, ti)).toArray
-        t -> fIdx.zip(solve(a, b))
+        fIdx.zip(solve(a, b)).map { case (fi, v) => s"w_${t}_$fi" -> v }
       }.toMap
-      new Fitted {
-        def predictCol(tag: String): Column =
-          weights(tag).map { case (fi, wi) => allCols(fi) * lit(wi) }.reduce(_ + _)
-        def params: Map[String, Double] = weights.flatMap { case (t, w) =>
-          w.map { case (fi, v) => s"w_${t}_$fi" -> v }
-        }
-      }
+      RidgeReconstructor.fittedFromParams(weights, xTags, feature)
     }
     def fit(train: DataFrame, xTags: Seq[String], yTags: Seq[String],
             feature: String => Column): Fitted = {
@@ -273,6 +283,24 @@ object DiffAnomaly {
     }
   }
 
+  object RidgeReconstructor {
+    /** ŷ_tag = Σ_fi w_<tag>_<fi> · f_fi over the feature vector
+      * f = (1, xTags…) from params `w_<tag>_<fi>` (a target's own index
+      * is absent — self excluded) — the one param→column mapping the fit
+      * decoders and the model load share. */
+    def fittedFromParams(p: Map[String, Double], xTags: Seq[String],
+                         feature: String => Column): Fitted = new Fitted {
+      private val feats: Seq[Column] =
+        lit(1.0) +: xTags.map(t => feature(t).cast("double"))
+      def predictCol(tag: String): Column =
+        feats.indices
+          .flatMap(fi => p.get(s"w_${tag}_$fi").map(w => feats(fi) * lit(w)))
+          .reduce(_ + _)
+      def params: Map[String, Double] = p
+      def impl: String = "ridge"
+    }
+  }
+
   /** PCA reconstruction (the exact linear autoencoder): fit computes the
     * tag covariance matrix in ONE distributed pass, eigen-decomposes it
     * on the driver (cyclic Jacobi — m is the bounded tag count), keeps
@@ -284,6 +312,7 @@ object DiffAnomaly {
   class PcaReconstructor(nComponents: Int,
                          varianceFraction: Option[Double] = None)
       extends Reconstructor {
+    def impl: String = "pca"
     require(varianceFraction.isDefined || nComponents >= 1,
       "n_components must be >= 1")
     varianceFraction.foreach(f => require(f > 0.0 && f < 1.0,
@@ -389,25 +418,12 @@ object DiffAnomaly {
         val lead = v.indices.maxBy(i => math.abs(v(i)))
         if (v(lead) < 0) v.map(x => -x) else v
       }.toArray
-      new Fitted {
-        def predictCol(tag: String): Column = {
-          val ti = tags.indexOf(tag)
-          val centered = tags.zipWithIndex.map { case (t, i) =>
-            feature(t).cast("double") - lit(mu(i))
-          }
-          // x̂_ti = mu_ti + Σ_c comps(c)(ti) · (centered · comps(c))
-          comps.foldLeft(lit(mu(ti)): Column) { (acc, comp) =>
-            val proj = centered.zip(comp)
-              .map { case (c, w) => c * lit(w) }.reduce(_ + _)
-            acc + lit(comp(ti)) * proj
-          }
-        }
-        def params: Map[String, Double] =
-          tags.zipWithIndex.map { case (t, i) => s"mu_$t" -> mu(i) }.toMap ++
-            comps.zipWithIndex.flatMap { case (c, ci) =>
-              c.zipWithIndex.map { case (w, d) => s"pc_${ci}_$d" -> w }.toSeq
-            }.toMap
-      }
+      PcaReconstructor.fittedFromParams(
+        tags.zipWithIndex.map { case (t, i) => s"mu_$t" -> mu(i) }.toMap ++
+          comps.zipWithIndex.flatMap { case (c, ci) =>
+            c.zipWithIndex.map { case (w, d) => s"pc_${ci}_$d" -> w }.toSeq
+          }.toMap,
+        tags, feature)
     }
 
     /** Cyclic Jacobi eigendecomposition of a symmetric matrix: returns
@@ -450,24 +466,52 @@ object DiffAnomaly {
     }
   }
 
+  object PcaReconstructor {
+    /** x̂_tag = mu_tag + Σ_c pc_c[tag] · ((x − mu) · pc_c) from params
+      * `mu_<tag>` and component entries `pc_<c>_<d>` — the one
+      * param→column mapping the fit decoders and the model load share. */
+    def fittedFromParams(p: Map[String, Double], tags: Seq[String],
+                         feature: String => Column): Fitted = new Fitted {
+      private val mu = tags.map(t => p(s"mu_$t")).toArray
+      private val nComp = p.keys.collect {
+        case k if k.startsWith("pc_") => k.split("_")(1).toInt
+      }.foldLeft(-1)(math.max) + 1
+      private val comps =
+        Array.tabulate(nComp, tags.size)((ci, d) => p(s"pc_${ci}_$d"))
+      def predictCol(tag: String): Column = {
+        val ti = tags.indexOf(tag)
+        val centered = tags.zipWithIndex.map { case (t, i) =>
+          feature(t).cast("double") - lit(mu(i))
+        }
+        comps.foldLeft(lit(mu(ti)): Column) { (acc, comp) =>
+          val proj = centered.zip(comp)
+            .map { case (c, w) => c * lit(w) }.reduce(_ + _)
+          acc + lit(comp(ti)) * proj
+        }
+      }
+      def params: Map[String, Double] = p
+      def impl: String = "pca"
+    }
+  }
+
   /** Window autoencoder for the M6 lookahead-0 shape: a rank-limited
     * PCA over the LAG feature columns reconstructs the whole window
     * through the bottleneck; target t's prediction is the reconstruction
-    * of its current-row feature `lagOf(t)` (= `t__lag0`, value-identical
-    * to t). The bottleneck — `rankOf(featureCount)` < feature count — is
-    * what keeps the detector non-degenerate: any full-rank row-local fit
+    * of its current-row feature `t__lag0` (value-identical to t). The
+    * bottleneck — `rankOf(featureCount)` < feature count — is what
+    * keeps the detector non-degenerate: any full-rank row-local fit
     * over features that include the target's own current value would
     * learn the identity and emit zero thresholds (infinite confidences).
     * This mirrors what the reference's lossy LSTM autoencoder actually
     * provides: reconstruction error of the current window through a
     * compressed representation. */
-  class WindowAutoencoder(lagOf: String => String,
-                          rankOf: Int => Int = n => math.max(1, n / 2))
+  class WindowAutoencoder(rankOf: Int => Int = n => math.max(1, n / 2))
       extends Reconstructor {
-    private def adapt(f: Fitted): Fitted = new Fitted {
-      def predictCol(tag: String): Column = f.predictCol(lagOf(tag))
-      def params: Map[String, Double] = f.params
-    }
+    import WindowAutoencoder.currentRow
+    def impl: String = "window_ae"
+    private def adapt(xTags: Seq[String], feature: String => Column)
+        : Fitted => Fitted =
+      f => WindowAutoencoder.fittedFromParams(f.params, xTags, feature)
     private def validate(xTags: Seq[String], yTags: Seq[String]): Unit = {
       // a single window feature leaves no room for a bottleneck — PCA(1)
       // over 1 feature IS the identity, the exact degeneracy this class
@@ -475,8 +519,8 @@ object DiffAnomaly {
       require(xTags.size >= 2,
         s"window autoencoder needs >= 2 window features, got $xTags — " +
           "raise lookback_window or add tags")
-      yTags.foreach(t => require(xTags.contains(lagOf(t)),
-        s"target '$t' has no window feature '${lagOf(t)}' among $xTags — " +
+      yTags.foreach(t => require(xTags.contains(currentRow(t)),
+        s"target '$t' has no window feature '${currentRow(t)}' among $xTags — " +
           "target_tag_list must be a subset of tag_list for autoencoders"))
     }
     private def inner(xTags: Seq[String]): PcaReconstructor =
@@ -484,20 +528,39 @@ object DiffAnomaly {
     def fit(train: DataFrame, xTags: Seq[String], yTags: Seq[String],
             feature: String => Column): Fitted = {
       validate(xTags, yTags)
-      adapt(inner(xTags).fit(train, xTags, xTags, feature))
+      adapt(xTags, feature)(inner(xTags).fit(train, xTags, xTags, feature))
     }
     override def aggPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column)
         : Option[(Seq[Column], org.apache.spark.sql.Row => Fitted)] = {
       validate(xTags, yTags)
       inner(xTags).aggPlan(xTags, xTags, feature)
-        .map { case (aggs, dec) => (aggs, dec.andThen(adapt)) }
+        .map { case (aggs, dec) => (aggs, dec.andThen(adapt(xTags, feature))) }
     }
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column): Option[SegPlan[Fitted]] = {
       validate(xTags, yTags)
       inner(xTags).segPlan(xTags, xTags, feature)
-        .map(sp => sp.copy(decode = sp.decode.andThen(adapt)))
+        .map(sp => sp.copy(decode = sp.decode.andThen(adapt(xTags, feature))))
+    }
+  }
+
+  object WindowAutoencoder {
+    /** A target's current-row window feature (`Windows.withLookback`'s
+      * lag-0 column). */
+    def currentRow(tag: String): String = s"${tag}__lag0"
+    /** PCA over the window features (params as
+      * [[PcaReconstructor.fittedFromParams]]), each target read back from
+      * its [[currentRow]] feature — the one param→column mapping the fit
+      * decoders and the model load share. */
+    def fittedFromParams(p: Map[String, Double], xTags: Seq[String],
+                         feature: String => Column): Fitted = {
+      val pca = PcaReconstructor.fittedFromParams(p, xTags, feature)
+      new Fitted {
+        def predictCol(tag: String): Column = pca.predictCol(currentRow(tag))
+        def params: Map[String, Double] = p
+        def impl: String = "window_ae"
+      }
     }
   }
 
@@ -603,8 +666,8 @@ object DiffAnomaly {
       def sclWith(ss: Option[FittedScaler])(c: Column, t: String): Column =
         ss match {
           case Some(s) =>
-            val (ctr, s0) = s.stats(t); val sv = if (s0 == 0.0) 1.0 else s0
-            (c - lit(ctr)) / lit(sv)
+            val (ctr, s0) = s.stats(t)
+            (c - lit(ctr)) / lit(Scalers.nonZeroScale(s0))
           case None => c
         }
       // eager deferred-scoring fit — the fallback when the segmented
@@ -989,8 +1052,7 @@ object DiffAnomaly {
     * (scaled ŷ − scaled y)². */
   private def scaledMseCol(m: Fitted, sc: FittedScaler, tags: Seq[String]): Column =
     tags.map { t =>
-      val scale = { val s = sc.stats(t)._2; if (s == 0.0) 1.0 else s }
-      val d = (m.predictCol(t) - qc(t)) / lit(scale)
+      val d = (m.predictCol(t) - qc(t)) / lit(Scalers.nonZeroScale(sc.stats(t)._2))
       d * d
     }.reduce(_ + _) / lit(tags.size.toDouble)
 
@@ -1014,8 +1076,8 @@ object DiffAnomaly {
     val m = fd.model
     val sc = fd.scaler
     def scaled(c: Column, t: String): Column = {
-      val (ctr, s0) = sc.stats(t); val s = if (s0 == 0.0) 1.0 else s0
-      (c - lit(ctr)) / lit(s)
+      val (ctr, s) = sc.stats(t)
+      (c - lit(ctr)) / lit(Scalers.nonZeroScale(s))
     }
     val extraTargets = tags.filterNot(fd.tags.contains)
     // smm/sma smoothing needs a dense row index; attach it to the RAW

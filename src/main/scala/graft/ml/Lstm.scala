@@ -137,6 +137,7 @@ object Lstm {
         element_at(forwardCol, j + 1) * lit(ysd(tag)) + lit(ymu(tag))
       }
       def params: Map[String, Double] = p
+      def impl: String = "lstm"
       override def history: Map[String, Any] = trainHistory
     }
   }
@@ -151,6 +152,7 @@ object Lstm {
   class LstmReconstructor(units: Int = 0, seed: Long = 0L,
                           epochs: Int = 200, lr: Double = 0.02)
       extends Reconstructor {
+    def impl: String = "lstm"
 
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
             yTags: Seq[String], feature: String => Column): Fitted = {

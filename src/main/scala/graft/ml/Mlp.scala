@@ -133,6 +133,7 @@ object Mlp {
         element_at(forwardCol, j + 1) * lit(ysd(tag)) + lit(ymu(tag))
       }
       def params: Map[String, Double] = p
+      def impl: String = "mlp"
       override def history: Map[String, Any] = trainHistory
     }
   }
@@ -148,6 +149,7 @@ object Mlp {
   class MlpReconstructor(encodingDims: Seq[Int], seed: Long = 0L,
                          epochs: Int = 300, lr: Double = 0.01)
       extends Reconstructor {
+    def impl: String = "mlp"
     require(encodingDims.nonEmpty && encodingDims.forall(_ >= 1),
       s"encoding dims must be positive: $encodingDims")
 
@@ -377,6 +379,7 @@ object Mlp {
                           lr: Double = 0.01,
                           compressionFactor: Double = 0.5,
                           encodingLayers: Int = 2) extends Reconstructor {
+    def impl: String = "mlp"
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
             yTags: Seq[String], feature: String => Column): Fitted =
       new MlpReconstructor(

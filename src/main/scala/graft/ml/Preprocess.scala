@@ -44,7 +44,7 @@ object Preprocess {
     override def hasKey(tag: String): Boolean = stats.contains(tag)
     private def cs(tag: String): (Double, Double) = {
       val (ctr, s) = stats(tag)
-      (ctr, if (s == 0.0) 1.0 else s)
+      (ctr, Scalers.nonZeroScale(s))
     }
     def pre(tag: String, c: Column): Column = {
       val (ctr, s) = cs(tag); (c - lit(ctr)) / lit(s)
@@ -198,6 +198,7 @@ object Preprocess {
       extends DiffAnomaly.Fitted {
     def predictCol(tag: String): Column = prep.post(tag, inner.predictCol(tag))
     def params: Map[String, Double] = inner.params
+    def impl: String = inner.impl
     override def history: Map[String, Any] = inner.history
   }
 
@@ -231,6 +232,7 @@ object Preprocess {
                       specs: List[StageSpec],
                       statTags: Option[Seq[String]] = None)
       extends DiffAnomaly.Reconstructor {
+    def impl: String = inner.impl
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
             yTags: Seq[String], feature: String => Column): DiffAnomaly.Fitted = {
       // the chain fits per-tag stats over X ∪ y: X feeds the model in

@@ -15,14 +15,14 @@ import graft.Cols.{q => qc}
   */
 object Scalers {
 
+  /** sklearn's `_handle_zeros_in_scale`: a zero scale divides by 1. */
+  def nonZeroScale(s: Double): Double = if (s == 0.0) 1.0 else s
+
   /** Per-column (center, scale): minmax → (min, max−min),
     * robust → (median, q3−q1). Zero ranges fall back to scale 1 exactly
-    * like sklearn's `_handle_zeros_in_scale`. */
+    * like sklearn ([[nonZeroScale]]). */
   case class FittedScaler(kind: String, stats: Map[String, (Double, Double)]) {
-    private def scaleOf(c: String): Double = {
-      val s = stats(c)._2
-      if (s == 0.0) 1.0 else s
-    }
+    private def scaleOf(c: String): Double = nonZeroScale(stats(c)._2)
     def transformCol(c: String): Column =
       (qc(c) - lit(stats(c)._1)) / lit(scaleOf(c))
     def inverseCol(c: String): Column =

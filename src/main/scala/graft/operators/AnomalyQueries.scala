@@ -330,10 +330,7 @@ object AnomalyQueries {
     // re-dump the LOADED state through the same writer
     val dir2 = graft.Scratch.dir("graft-q81-redump") + "/model"
     graft.build.Persistence.save(dir2,
-      graft.build.Persistence.stateOf(fd, m1("impl").toString,
-        m1("epoch0").toString.toLong,
-        Option(m1("preprocess")).map(_.asInstanceOf[List[Map[String, Any]]])
-          .getOrElse(Nil),
+      graft.build.Persistence.stateOf(fd, m1("epoch0").toString.toLong,
         windowing),
       metadata = Map.empty)
     val modelJson2 = java.nio.file.Files.readString(

@@ -45,7 +45,7 @@ class DiffAnomalySpec extends AnyFunSuite {
     val fitted = DiffAnomaly.fit(wide, Seq("tx", "ty"), "bucket_ts",
       new DiffAnomaly.PcaReconstructor(1), nSplits = 3)
     graft.build.Persistence.save(tmp,
-      graft.build.Persistence.stateOf(fitted, "pca", 0L))
+      graft.build.Persistence.stateOf(fitted, 0L))
     val loaded = graft.build.Persistence.load(tmp)
     val a = DiffAnomaly.anomaly(fitted, wide, 600L)
       .agg(sum($"`model-output.tx`")).head().getDouble(0)
@@ -128,6 +128,7 @@ class DiffAnomalySpec extends AnyFunSuite {
   test("fused segmented CV matches the per-fold loop for every reconstructor") {
     // wrapper hiding segPlan: forces the per-fold fallback loop
     class NoSeg(inner: DiffAnomaly.Reconstructor) extends DiffAnomaly.Reconstructor {
+      def impl: String = inner.impl
       def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
               yTags: Seq[String],
               feature: String => org.apache.spark.sql.Column): DiffAnomaly.Fitted =
@@ -239,6 +240,7 @@ class DiffAnomalySpec extends AnyFunSuite {
         else java.lang.Double.valueOf(25.0 + 2.0 * i + math.cos(i * 1.3) * 4.0))
     }.toDF("bucket_ts", "tx", "ty")
     class NoSeg(inner: DiffAnomaly.Reconstructor) extends DiffAnomaly.Reconstructor {
+      def impl: String = inner.impl
       def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
               yTags: Seq[String],
               feature: String => org.apache.spark.sql.Column): DiffAnomaly.Fitted =

@@ -204,7 +204,7 @@ class LstmSpec extends AnyFunSuite {
       targetTags = Seq("tx", "ty"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-lstm-rt").toString
     graft.build.Persistence.save(tmp,
-      graft.build.Persistence.stateOf(fitted, "lstm", 0L))
+      graft.build.Persistence.stateOf(fitted, 0L))
     val loaded = graft.build.Persistence.load(tmp)
     val a = DiffAnomaly.anomaly(fitted, lagged, 600L)
       .agg(sum($"`model-output.tx`"), sum($"`total-anomaly-unscaled`")).head()

@@ -126,7 +126,7 @@ class MlpSpec extends AnyFunSuite {
     val fitted = DiffAnomaly.fit(wide, Seq("tx", "ty"), "bucket_ts",
       new Mlp.MlpReconstructor(Seq(2), seed = 0L, epochs = 100), nSplits = 3)
     graft.build.Persistence.save(tmp,
-      graft.build.Persistence.stateOf(fitted, "mlp", 0L))
+      graft.build.Persistence.stateOf(fitted, 0L))
     val loaded = graft.build.Persistence.load(tmp)
     val a = DiffAnomaly.anomaly(fitted, wide, 600L)
       .agg(sum($"`model-output.tx`"), sum($"`total-anomaly-unscaled`")).head()
