@@ -72,7 +72,7 @@ object Scratch {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Atomically publish a fully-written staging directory into a
-    * [[cachedDir]] slot (r11 ADVICE: two JVMs that both observe the
+    * [[cachedDir]] slot (two JVMs that both observe the
     * completeness marker missing must not race interleaved part files
     * into one shared dir). Each publisher stages privately ([[dir]])
     * and the FIRST rename wins; a loser adopts the winner's dir (its
@@ -125,7 +125,7 @@ object Scratch {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
-        // touch BEFORE acquisition (r12 ADVICE): a pre-existing .lock
+        // touch BEFORE acquisition: a pre-existing .lock
         // with a >=6h-stale mtime could otherwise be unlinked by a
         // sibling's sweep inside the open→lock→touch window, letting a
         // later recoverer lock a fresh inode alongside this one. The
@@ -177,11 +177,10 @@ object Scratch {
   /** Serve-or-build for a [[cachedDir]] slot: if `marker` is present
     * the slot is served as-is; otherwise `write` builds the contents
     * into a PRIVATE stage directory and [[publishDir]] renames the
-    * stage into the slot atomically. The r11-ADVICE discipline as one
-    * helper so no call site can reintroduce the
-    * check-then-write-into-the-shared-slot race (two JVMs that both
-    * see the marker missing must each build privately, with exactly
-    * one rename winning). `marker` may be nested (`events/_SUCCESS`)
+    * stage into the slot atomically. One helper, so no call site can
+    * reintroduce the check-then-write-into-the-shared-slot race (two
+    * JVMs that both see the marker missing must each build privately,
+    * with exactly one rename winning). `marker` may be nested (`events/_SUCCESS`)
     * for slots whose contents are a directory tree. */
   def ensureBuilt(target: String, marker: String = "_SUCCESS")
                  (write: String => Unit): String = {
@@ -203,7 +202,7 @@ object Scratch {
     * completeness themselves (e.g. `_SUCCESS`), or build through
     * [[ensureBuilt]].
     *
-    * `version` tags the DERIVATION the cache holds (r11 ADVICE: the
+    * `version` tags the DERIVATION the cache holds (the
     * witness tracks only the SOURCE, so a changed derivation — a new
     * lag spec, a different projection — must bump its version or the
     * cache keeps serving the stale frame). It folds into the key, not
@@ -212,16 +211,9 @@ object Scratch {
     * under a prefix nothing requests anymore.
     *
     * A DIRECTORY witness's identity walk stats every regular file under
-    * it on every call — exact, and harmless at gate scale (a lake copy
-    * is tens of files), but measurable on a million-file production
-    * lake. Opt-in throttle (r12 verdict, carried item): set
-    * `-Dgraft.witness.ttlMs=N` (or `SPARK_GRAFT_WITNESS_TTL_MS`) to
-    * memoize the derived cache key per (canonical root, version) for
-    * N ms. The
-    * trade is a BOUNDED STALENESS window on re-key detection only — a
-    * lake rewritten within the TTL keeps serving the prior cache slot
-    * until the TTL lapses. Default 0 = off: every call walks, the
-    * exact behavior every gate verifies. */
+    * it on every call: exact, so a rewritten lake re-keys at once. Only
+    * the gated queries and `Verify` call this, over lake copies of tens
+    * of files. */
   def cachedDir(prefix: String, witnessFile: String,
                 version: String = ""): String = {
     val f = new File(witnessFile)
@@ -240,44 +232,19 @@ object Scratch {
     }
     val key =
       if (f.isDirectory) {
-        val canon = f.getCanonicalPath
-        def computeIdent(): String = {
-          val root = f.toPath
-          val walk = Files.walk(root)
-          val parts =
-            try {
-              val b = Seq.newBuilder[String]
-              walk.forEach { p =>
-                if (Files.isRegularFile(p))
-                  b += s"${root.relativize(p)}:${Files.size(p)}:" +
-                    s"${Files.getLastModifiedTime(p).toMillis}"
-              }
-              b.result().sorted
-            } finally walk.close()
-          (canon +: parts).mkString("|")
-        }
-        // read per call (cheap) so a long-lived serving JVM can flip the
-        // knob without a restart; prop wins over env for testability
-        val ttl = sys.props.get("graft.witness.ttlMs")
-          .orElse(sys.env.get("SPARK_GRAFT_WITNESS_TTL_MS"))
-          .flatMap(_.toLongOption).getOrElse(0L)
-        if (ttl <= 0L) hashKey(computeIdent())
-        else {
-          // memoize the DERIVED key, not the raw identity: the identity
-          // string is O(files) (a 100k-file lake's is ~4 MB), and
-          // re-hashing it per hit costs ~10 ms — linear in lake size,
-          // the exact cost class the knob exists to cut. Keyed per
-          // (root, version) so distinct derivations never share a slot;
-          // key derivation itself is IDENTICAL with the memo on or off.
-          val memoKey = canon + "\u0000" + version
-          val now = System.currentTimeMillis()
-          val hit = witnessMemo.get(memoKey)
-          if (hit != null && now - hit._1 <= ttl) hit._2
-          else {
-            val k = hashKey(computeIdent())
-            witnessMemo.put(memoKey, (now, k)); k
-          }
-        }
+        val root = f.toPath
+        val walk = Files.walk(root)
+        val parts =
+          try {
+            val b = Seq.newBuilder[String]
+            walk.forEach { p =>
+              if (Files.isRegularFile(p))
+                b += s"${root.relativize(p)}:${Files.size(p)}:" +
+                  s"${Files.getLastModifiedTime(p).toMillis}"
+            }
+            b.result().sorted
+          } finally walk.close()
+        hashKey((f.getCanonicalPath +: parts).mkString("|"))
       } else hashKey(s"${f.getCanonicalPath}:${f.length}:${f.lastModified}")
     val tmp = new File(System.getProperty("java.io.tmpdir"))
     val target = new File(tmp, s"$prefix-$key")
@@ -290,7 +257,7 @@ object Scratch {
     // (sf0.01 vs sf0.1 inputs) legitimately hold live sibling caches at
     // once, and an unconditional sweep would delete them mid-use (or
     // thrash rebuilds when scales alternate). Only siblings untouched
-    // for 6+ hours — cross-session orphans, the leak ADVICE r5 named —
+    // for 6+ hours — cross-session orphans —
     // are removed.
     // renew this cache's lease on EVERY access (reads included): the
     // sweep below keys staleness on lastModified, and a long-lived
@@ -321,7 +288,7 @@ object Scratch {
       // named '<prefix>-<16 hex>-stage<rand>'; a SIGKILL/OOM between
       // staging and publish skips the exit hook, and without this
       // pattern the abandoned stage (multi-GB parquet at sf0.1) would
-      // leak in /tmp permanently (r12 ADVICE)
+      // leak in /tmp permanently
       val stageDir =
         s"^${java.util.regex.Pattern.quote(prefix)}-[0-9a-f]{16}-stage.*$$".r
       val staleBefore = now - 6L * 3600 * 1000
@@ -335,7 +302,7 @@ object Scratch {
               (sibling.matches(f.getName) || stageDir.matches(f.getName)))
             deleteRecursively(f.toPath)
           else if (f.isFile && lockFile.matches(f.getName)) {
-            // only unlink a .lock nobody HOLDS (r12 ADVICE): unlinking a
+            // only unlink a .lock nobody HOLDS: unlinking a
             // held file would let a later recoverer lock a fresh inode
             // alongside the ghost holder — two concurrent recoverers.
             // A cross-JVM holder makes tryLock return null → skip. A
@@ -343,8 +310,8 @@ object Scratch {
             // at all: on POSIX, closing any channel to a file drops
             // every fcntl lock this process holds on it, so an
             // open→tryLock(throws Overlapping…)→close probe would
-            // silently RELEASE the recoverer's lock (r13 review,
-            // empirically confirmed). publishDir runs its whole
+            // silently RELEASE the recoverer's lock (confirmed
+            // empirically). publishDir runs its whole
             // recovery under the per-slot monitor, so holding that
             // monitor here guarantees no same-JVM channel to this
             // .lock exists while we probe.
@@ -385,11 +352,4 @@ object Scratch {
   // re-arm the throttle between phases
   private[graft] val sweepTimes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  // opt-in directory-witness identity memo (JVM-local; see cachedDir's
-  // scaladoc — populated only when graft.witness.ttlMs > 0, bounded by
-  // the number of distinct lake roots a JVM touches). private[graft]:
-  // tests clear it to isolate phases
-  private[graft] val witnessMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
 }

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.SessionCache
 
 /** Distributed connected components over a pair list — the dedup-cluster
   * resolution step: near-dup PAIRS (MinHash/SimHash/Jaccard output) are
@@ -24,68 +24,28 @@ import org.apache.spark.storage.StorageLevel
   * driver sees only the per-round changed-count (one long), never row
   * data.
   *
-  * Storage lifecycle (hardening round 10): checkpointed frames hold
-  * RDD-level blocks that `Dataset.unpersist` (the CacheManager path)
-  * never touches — each superseded round's blocks are released
-  * in-loop via the underlying RDD, so a run holds at most TWO rounds
-  * of state regardless of iteration count, and [[release]] frees the
-  * RETURNED frame's blocks (and reliable-checkpoint files) once the
+  * Storage: every persisted or checkpointed frame of the loop is a
+  * [[graft.SessionCache]] lease. Each superseded round's leases are
+  * closed in-loop, so a run holds at most TWO rounds of state
+  * regardless of iteration count, and [[release]] frees the RETURNED
+  * frame's checkpoint (blocks and reliable-checkpoint files) once the
   * caller has materialized what it needs. Repeated calls in one
   * session return storage to baseline — ComponentsSpec pins this.
   */
 object Components {
-
-  /** The checkpoint-backed RDDs at a frame's leaves (the LogicalRDD a
-    * local/reliable checkpoint wraps) — derived frames (dupClusters
-    * output) still expose ours as their scan leaf. */
-  private def ckptRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  /** Checkpoints THIS module created — [[release]] only ever frees
-    * these, so calling it on a frame whose lineage contains some
-    * caller-owned RDD (an upstream localCheckpoint, say) can never
-    * unpersist storage it doesn't own. Keyed (applicationId, rddId),
-    * NOT the bare RDD id: ids are SparkContext-scoped and restart from
-    * 0 in a new context, so a stale id from an unreleased prior-context
-    * frame would alias a new context's caller-owned RDD and let
-    * release() destroy storage it never created. */
-  private val ourCkpts = scala.collection.mutable.Set.empty[(String, Int)]
-
-  private def ckptKey(r: RDD[_]): (String, Int) =
-    (r.context.applicationId, r.id)
-
-  private def registerCkpt(df: DataFrame): Unit =
-    ckptRdds(df).foreach(r => ourCkpts.synchronized(ourCkpts.add(ckptKey(r))): Unit)
-
-  /** Release one module-created checkpoint RDD: blocks, and (reliable
-    * mode) the checkpoint files. Registry-guarded — a caller-owned RDD
-    * id is never touched. */
-  private def releaseRdd(r: RDD[_],
-                         hconf: org.apache.hadoop.conf.Configuration): Unit =
-    if (ourCkpts.synchronized(ourCkpts.remove(ckptKey(r)))) {
-      r.unpersist(false)
-      r.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(hconf).delete(p, true): Unit
-      }
-    }
 
   /** Release the storage backing a frame returned by
     * [[connectedComponents]] / [[dupClusters]]: the localCheckpoint
     * blocks (RDD-level — unreachable through `Dataset.unpersist`) and,
     * in reliable-checkpoint mode, the checkpoint files. Call once the
     * result is materialized (written/collected); the frame must not be
-    * evaluated again afterwards. No-op on frames this module didn't
-    * checkpoint (enforced by the ownership registry). A returned
-    * frame's lineage contains exactly its OWN checkpoint (the cut
-    * truncated everything upstream); on a frame that composes several
-    * returned results, this releases each of them. */
-  def release(components: DataFrame): Unit = {
-    val hconf = components.sparkSession.sessionState.newHadoopConf()
-    ckptRdds(components).foreach(releaseRdd(_, hconf))
-  }
+    * evaluated again afterwards. No-op on frames whose checkpoints
+    * [[graft.SessionCache]] didn't create. A returned frame's lineage
+    * contains exactly its OWN checkpoint (the cut truncated everything
+    * upstream); on a frame that composes several returned results,
+    * this releases each of them. */
+  def release(components: DataFrame): Unit =
+    SessionCache.releaseCheckpoints(components)
 
   /** [[release]] for harness callers (Verify/Bench): never throws.
     * Returns the failure rendered as `"release: <detail>"` so the
@@ -106,8 +66,8 @@ object Components {
     * information and are not materialized).
     *
     * @param reliableCheckpoint when set, per-round lineage cuts use a
-    *   reliable `checkpoint()` into this directory (a cluster FS path in
-    *   production) instead of `localCheckpoint()`: a lost executor
+    *   reliable checkpoint into this directory (a cluster FS path in
+    *   production) instead of a local checkpoint: a lost executor
     *   recomputes from the checkpoint files and the job SURVIVES — the
     *   HA configuration for long dedup runs. Default (None) keeps
     *   localCheckpoint: bounded plans, but an executor loss mid-run
@@ -127,7 +87,6 @@ object Components {
                                     reliableCheckpoint: Option[String] = None)
       : (DataFrame, Int) = {
     val sc = edges.sparkSession.sparkContext
-    val hconf = edges.sparkSession.sessionState.newHadoopConf()
     reliableCheckpoint.foreach { dir =>
       // setCheckpointDir stores an FS-QUALIFIED, uuid-suffixed SUBPATH
       // (e.g. file:/dir/<uuid>) — comparing it to the raw dir is always
@@ -151,8 +110,8 @@ object Components {
       }
       if (!already) sc.setCheckpointDir(dir)
     }
-    // Partition-once loop keying (r14, guide §2.4 "two operations keyed
-    // the same way share one exchange"): the EDGE list — the big frame —
+    // Partition-once loop keying (guide §2.4 "two operations keyed the
+    // same way share one exchange"): the EDGE list — the big frame —
     // is hash-partitioned by dst ONCE up front and the dedup aggregates
     // in place (hash(dst) already clusters equal (src,dst) rows, so
     // dropDuplicates plans no exchange of its own), then every round's
@@ -164,37 +123,34 @@ object Components {
     // co-partitioning with the label-side scans it must zip with.
     // Per-round shuffled bytes drop from O(edges) to O(nodes).
     val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(nPart, col("dst"))
-      .dropDuplicates()
-      .sortWithinPartitions("dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = SessionCache.acquire(
+      edges.select(col("a").as("src"), col("b").as("dst"))
+        .union(edges.select(col("b").as("src"), col("a").as("dst")))
+        .repartition(nPart, col("dst"))
+        .dropDuplicates()
+        .sortWithinPartitions("dst"))
     // label frames stay hash(node)-partitioned round to round: the init
     // distinct establishes it, and each round's checkpoint re-establishes
     // it (the repartition below), so the stepped join, the pointer-jump
     // p-side (node aliased to label), and the convergence-count join all
     // plan ZERO exchanges — only the neighbor-min aggregation and the
     // jump's l-side re-key per round.
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var jumped: DataFrame = null
-    var next: DataFrame = null
-    // the checkpoint RDD backing `labels` / `next` THIS call created —
-    // superseded rounds release through these tracked handles, never by
-    // scanning the frame's lineage: round-0 `labels` derives from the
+    // Superseded rounds are freed by closing their own leases, never by
+    // scanning a frame's lineage: round-0 `labels` derives from the
     // CALLER's edges plan, and a lineage scan there would free a
     // still-live checkpoint frame the caller passed as input (e.g. a
-    // prior connectedComponents result used as edges)
-    var labelsRdd: Option[RDD[_]] = None
-    var nextRdd: Option[RDD[_]] = None
+    // prior connectedComponents result used as edges).
+    var labels = SessionCache.acquire(
+      sym.df.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")))
+    var jumped: SessionCache.Lease = null
+    var next: SessionCache.Lease = null
     var it = 0
     var converged = false
     try {
       while (!converged && it < maxIter) {
-        // 1. neighbor-min FUSED with the keep-own-label step (r14): the
-        //    old shape aggregated neighbor labels and then LEFT-joined
+        // 1. neighbor-min FUSED with the keep-own-label step: the old
+        //    shape aggregated neighbor labels and then LEFT-joined
         //    labels back to apply least(own, nbr_min) — a second join
         //    (and its broadcast/exchange) per round for what is just
         //    "min over (own label ∪ neighbors' labels)". Union the
@@ -202,28 +158,27 @@ object Components {
         //    values exactly (min is order-insensitive over the same
         //    set), one aggregation, one exchange. Every node appears in
         //    `labels`, so no node is lost by dropping the left join.
-        val stepped = sym
-          .join(labels.withColumnRenamed("node", "dst"), "dst")
+        val stepped = sym.df
+          .join(labels.df.withColumnRenamed("node", "dst"), "dst")
           .select(col("src"), col("label"))
-          .union(labels.select(col("node").as("src"), col("label")))
+          .union(labels.df.select(col("node").as("src"), col("label")))
           .groupBy(col("src").as("node"))
           .agg(min(col("label")).as("label"))
         // 2. pointer jump: label := label(label) — halves chain depth, the
         //    O(log d) ingredient (plain propagation walks one hop per round)
-        jumped = stepped.as("l")
+        jumped = SessionCache.acquire(stepped.as("l")
           .join(stepped.select(col("node").as("label"),
             col("label").as("parent")).as("p"), Seq("label"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("parent"), col("label")))
               .as("label"))
           // re-key the round's output by node BEFORE the checkpoint:
-          // Dataset.checkpoint records the executed plan's output
+          // the checkpoint records the executed plan's output
           // partitioning on its LogicalRDD, so next round's labels scan
           // arrives hash(node)-partitioned and the stepped /
           // convergence-count joins skip their exchanges (the jump join
           // left the frame keyed by label — useless downstream)
-          .repartition(nPart, col("node"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .repartition(nPart, col("node")))
         // checkpoint TRUNCATES lineage: after it materializes (at the
         // `changed` count below, while `jumped` is still persisted), the
         // per-round plan can't grow unboundedly. localCheckpoint blocks
@@ -235,32 +190,24 @@ object Components {
         // Dataset.localCheckpoint records UnknownPartitioning under AQE,
         // which would throw away the repartition above and put the
         // exchanges back into every downstream join
-        next = org.apache.spark.sql.graftx.CheckpointBridge
-          .checkpointKeyed(jumped, Seq("node"),
-            reliable = reliableCheckpoint.isDefined)
-        registerCkpt(next)
-        nextRdd = ckptRdds(next).headOption // next IS the bare LogicalRDD
+        next = SessionCache.checkpoint(jumped.df, Seq("node"),
+          reliable = reliableCheckpoint.isDefined)
         // the count below is what materializes the lazy checkpoint — if
         // that job dies partway, `next`'s already-stored blocks are
         // released by the finally (it never became `labels`)
-        val changed = next.as("n")
-          .join(labels.as("o"), Seq("node"))
+        val changed = next.df.as("n")
+          .join(labels.df.as("o"), Seq("node"))
           .filter(col("n.label") =!= col("o.label"))
           .limit(1)
           .count()
-        // `next` is now self-contained: release the SUPERSEDED round —
-        // round 0's CacheManager cache via unpersist, later rounds'
-        // RDD-level checkpoint blocks/files via the TRACKED rdd handle
-        // (Dataset.unpersist can't see those; leaking one per round held
-        // every round's node-set in storage for the session)
-        labels.unpersist(false)
-        labelsRdd.foreach(releaseRdd(_, hconf))
-        jumped.unpersist(false)
+        // `next` is now self-contained: close the SUPERSEDED round's
+        // leases (leaking one per round would hold every round's
+        // node-set in storage for the session)
+        labels.close()
+        jumped.close()
         jumped = null
         labels = next
-        labelsRdd = nextRdd
         next = null
-        nextRdd = None
         converged = changed == 0
         it += 1
       }
@@ -271,16 +218,12 @@ object Components {
       // block this call pinned — including a mid-materialization `next`;
       // on success only the RETURNED frame's checkpoint survives, and
       // [[release]] frees it once the caller has materialized results
-      sym.unpersist(false)
-      if (jumped != null) jumped.unpersist(false)
-      if (next != null) {
-        next.unpersist(false); nextRdd.foreach(releaseRdd(_, hconf))
-      }
-      if (!converged) {
-        labels.unpersist(false); labelsRdd.foreach(releaseRdd(_, hconf))
-      }
+      sym.close()
+      if (jumped != null) jumped.close()
+      if (next != null) next.close()
+      if (!converged) labels.close()
     }
-    (labels.withColumnRenamed("label", "component"), it)
+    (labels.df.withColumnRenamed("label", "component"), it)
   }
 
   /** Dedup-cluster table from near-dup pairs: component id (= smallest
@@ -298,8 +241,8 @@ object Components {
     val cc = connectedComponents(
       pairs.select(col(idA).as("a"), col(idB).as("b")),
       maxIter, reliableCheckpoint)
-    // cluster size as a window count instead of a groupBy + self-join
-    // (r14): same values, one exchange on `component` instead of two
+    // cluster size as a window count instead of a groupBy + self-join:
+    // same values, one exchange on `component` instead of two
     // plus a second scan of the labels frame (guide §2.4)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
     cc.select(col("node").as("doc_id"), col("component"),

@@ -220,12 +220,13 @@ object Similarity {
     val ds = cb.head.head.length
     // loop-invariant: every Lloyd round re-reads this exploded frame —
     // persist it once instead of re-running the scan + explode per round
-    val subs = corpus.select(col(idCol).as("id"),
-        col(embCol).cast("array<double>").as("e"))
-      .select($"id", posexplode(
-        array((0 until mSub).map(m => slice($"e", m * ds + 1, ds)): _*))
-        .as(Seq("m", "sub")))
-      .persist()
+    val subsLease = graft.SessionCache.acquire(
+      corpus.select(col(idCol).as("id"),
+          col(embCol).cast("array<double>").as("e"))
+        .select($"id", posexplode(
+          array((0 until mSub).map(m => slice($"e", m * ds + 1, ds)): _*))
+          .as(Seq("m", "sub"))))
+    val subs = subsLease.df
     try {
     var it = 0
     while (it < iters) {
@@ -255,7 +256,7 @@ object Similarity {
       it += 1
     }
     cb
-    } finally subs.unpersist()
+    } finally subsLease.close()
   }
 
   /** IVF-PQ: the production 100-TB serving composition (the FAISS
@@ -440,13 +441,14 @@ object Similarity {
       val n = math.sqrt(v.map(x => x * x).sum)
       if (n > 1e-12) Some(v.map(_ / n)) else None
     }
-    val vecs = corpus.select(col(idCol).as("id"),
-      col(embCol).cast("array<double>").as("e"),
-      norm(col(embCol)).as("nrm"))
-      .filter($"nrm" > 0)
-      // loop-invariant: every Lloyd round re-reads this frame — persist
-      // once instead of re-running the scan + norm filter per round
-      .persist()
+    // loop-invariant: every Lloyd round re-reads this frame — persist
+    // once instead of re-running the scan + norm filter per round
+    val vecsLease = graft.SessionCache.acquire(
+      corpus.select(col(idCol).as("id"),
+        col(embCol).cast("array<double>").as("e"),
+        norm(col(embCol)).as("nrm"))
+        .filter($"nrm" > 0))
+    val vecs = vecsLease.df
     try {
     var cents: Seq[(Int, Seq[Double])] = corpus
       .orderBy(col(idCol).asc).limit(nCentroids)
@@ -481,7 +483,7 @@ object Similarity {
       it += 1
     }
     cents
-    } finally vecs.unpersist()
+    } finally vecsLease.close()
   }
 
   /** [[ivfTopK]] with externally supplied centroids (typically

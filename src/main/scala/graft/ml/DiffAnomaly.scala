@@ -607,7 +607,7 @@ object DiffAnomaly {
     * (every fold's rolling thresholds and metrics, grouped by fold).
     * Otherwise (preprocessing pipelines, robust error scaler) it falls
     * back to the per-fold loop — 2 passes per fold. */
-  /** @param scoringScalerKind DEFERRED scoring scaler (r15, guide §1.2):
+  /** @param scoringScalerKind DEFERRED scoring scaler (guide §1.2):
     *   fit the fold-metric scaler of this kind over the full frame
     *   INSIDE the CV passes instead of the caller paying a separate
     *   full-frame aggregation job first. On the fused path with a
@@ -642,7 +642,8 @@ object DiffAnomaly {
     // indexing had already computed (guide §1.2)
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(wide, Seq(col(orderCol)))
-    val indexed = indexed0.cache()
+    val indexedLease = graft.SessionCache.acquire(indexed0)
+    val indexed = indexedLease.df
     try {
       val n = nOpt.getOrElse(indexed.count())
       // sequence models (M6): the frame holds n raw rows MINUS the
@@ -875,7 +876,7 @@ object DiffAnomaly {
         tags, y, orderCol, window, smoothingMethod,
         perFoldScores.map { case (k, v) => k -> v.toSeq }.toMap,
         folds)
-    } finally { indexed.unpersist(); lease.close() }
+    } finally { indexedLease.close(); lease.close() }
   }
 
   /** M12 `DiffBasedKFCVAnomalyDetector` (`diff.py:461-635`): KFold CV,
@@ -898,7 +899,8 @@ object DiffAnomaly {
     val lease = graft.SessionCache.acquire(wide)
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(wide, Seq(col(orderCol)))
-    val indexed = indexed0.cache()
+    val indexedLease = graft.SessionCache.acquire(indexed0)
+    val indexed = indexedLease.df
     try {
       val n = nOpt.getOrElse(indexed.count())
       val folds = CrossValidate.kFold(n, nSplits)
@@ -1019,7 +1021,7 @@ object DiffAnomaly {
         Thresholds(featureTh, aggTh, None, None, Map.empty),
         tags, y, orderCol, Some(window), smoothingMethod,
         folds = folds)
-    } finally { indexed.unpersist(); lease.close() }
+    } finally { indexedLease.close(); lease.close() }
   }
 
   private def fitScaler(kind: String, df: DataFrame, tags: Seq[String]): FittedScaler =

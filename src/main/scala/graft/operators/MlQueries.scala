@@ -64,7 +64,8 @@ object MlQueries {
     // the oracle's r4 rounding is the documented tolerance for it.
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(r, Seq($"bucket_ts"))
-    val indexed = indexed0.cache()
+    val indexedLease = graft.SessionCache.acquire(indexed0)
+    val indexed = indexedLease.df
     try {
       val n = nOpt.getOrElse(indexed.count())
       val folds = CrossValidate.timeSeriesSplit(n, 3)
@@ -102,7 +103,7 @@ object MlQueries {
       }
       spark.createDataFrame(rows).toDF("fold", "n_train", "n_test", "mse")
         .orderBy($"fold")
-    } finally indexed.unpersist()
+    } finally indexedLease.close()
   }
 
   /** A3/F3 (MinMax): fit on the full wide frame in one agg pass, then

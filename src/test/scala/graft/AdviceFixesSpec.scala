@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.build.ModelBuilder
 import graft.config.{Config, ModelRegistry}
 
-/** Regression coverage for the round-2 advice findings: dotted-tag
-  * persistence, base-estimator preprocessing, scoring-scaler dispatch,
-  * and PCA n_components validation. */
+/** Regression coverage for dotted-tag persistence, base-estimator
+  * preprocessing, scoring-scaler dispatch, and PCA n_components
+  * validation. */
 class AdviceFixesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -61,7 +61,7 @@ class AdviceFixesSpec extends AnyFunSuite {
       |              kind: feedforward_hourglass""".stripMargin
 
   test("dotted-tag model save/load/score round-trips (advice: high)") {
-    val tmp = Files.createTempDirectory("graft-dotted").toString
+    val tmp = Scratch.dir("graft-dotted")
     for ((model, sub) <- Seq(bareRidge -> "ridge",
         """  gordo.machine.model.anomaly.diff.DiffBasedAnomalyDetector:
           |    base_estimator:
@@ -86,7 +86,7 @@ class AdviceFixesSpec extends AnyFunSuite {
   }
 
   test("base-estimator Pipeline preprocessing is fitted, applied, persisted (advice: medium)") {
-    val tmp = Files.createTempDirectory("graft-prep").toString
+    val tmp = Scratch.dir("graft-prep")
     val res = ModelBuilder.build(
       Config.parseYaml(yamlFor(pipelineRidge)), Config.defaultGlobals,
       dottedLong, "tag", "ts", "value", outputDir = s"$tmp/model",
@@ -126,7 +126,7 @@ class AdviceFixesSpec extends AnyFunSuite {
         |      - sklearn.preprocessing.MinMaxScaler
         |      - gordo.machine.model.models.KerasAutoEncoder:
         |          kind: feedforward_hourglass""".stripMargin
-    val tmp = Files.createTempDirectory("graft-toplevel").toString
+    val tmp = Scratch.dir("graft-toplevel")
     ModelBuilder.build(
       Config.parseYaml(yamlFor(topLevel)), Config.defaultGlobals,
       dottedLong, "tag", "ts", "value", outputDir = s"$tmp/model",
@@ -161,7 +161,7 @@ class AdviceFixesSpec extends AnyFunSuite {
         |          - sklearn.preprocessing.MinMaxScaler
         |          - sklearn.decomposition.PCA:
         |              n_components: 1""".stripMargin
-    val tmp = Files.createTempDirectory("graft-pipepca").toString
+    val tmp = Scratch.dir("graft-pipepca")
     val res = ModelBuilder.build(
       Config.parseYaml(yamlFor(pipePca)), Config.defaultGlobals,
       dottedLong, "tag", "ts", "value", outputDir = s"$tmp/model",
@@ -339,14 +339,14 @@ class AdviceFixesSpec extends AnyFunSuite {
       assert(new java.io.File(d1).mkdir())
       Files.write(witness.toPath, Array[Byte](1, 2, 3, 4))
       witness.setLastModified(witness.lastModified() + 5000)
-      Scratch.sweepTimes.remove("advice-sweep") // re-arm the r12 throttle
+      Scratch.sweepTimes.remove("advice-sweep") // re-arm the sweep throttle
       val d2 = Scratch.cachedDir("advice-sweep", witness.getPath)
       assert(d2 != d1)
       assert(new java.io.File(d1).exists(),
         "recent old-key cache dir must survive the sweep")
       // ...and sweeps it once it ages out
       assert(new java.io.File(d1).setLastModified(sixHoursAgo))
-      Scratch.sweepTimes.remove("advice-sweep") // re-arm the r12 throttle
+      Scratch.sweepTimes.remove("advice-sweep") // re-arm the sweep throttle
       Scratch.cachedDir("advice-sweep", witness.getPath)
       assert(!new java.io.File(d1).exists(),
         "aged-out old-key cache dir must be swept")
@@ -378,7 +378,7 @@ class AdviceFixesSpec extends AnyFunSuite {
     // the directory-per-table lake layout resolves through Tables, so a
     // cachedDir witness can be a partitioned directory — its identity
     // must re-key when any part file changes, and stay stable otherwise
-    val w = Files.createTempDirectory("advice-dirw").toFile
+    val w = new java.io.File(Scratch.dir("advice-dirw"))
     try {
       val part = new java.io.File(w, "event_date=2024-01-01")
       assert(part.mkdir())
@@ -400,7 +400,7 @@ class AdviceFixesSpec extends AnyFunSuite {
   }
 
   test("Tables.witness resolves the lake directory when present, else the single file") {
-    val root = Files.createTempDirectory("advice-witness").toFile
+    val root = new java.io.File(Scratch.dir("advice-witness"))
     try {
       assert(Tables.witness(root.getPath, "events")
         == s"${root.getPath}/events.parquet")

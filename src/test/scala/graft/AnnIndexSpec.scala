@@ -16,7 +16,7 @@ class AnnIndexSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-annindex").toString
+    Scratch.dir("graft-annindex")
 
   test("save/load round-trips trained centroids and codebook bit-exactly") {
     val emb = Tables(spark, sf, "embeddings")

@@ -6,23 +6,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{ModelBuilder, Persistence, Responses, Serving}
 
-/** Regression coverage for the round-10 build-layer review findings:
-  * stale registry entries, non-string JSON keys, duplicate response
-  * index values, malformed evaluation.metrics, missing order columns,
-  * and LruCache invalidation. */
+/** Regression coverage for build-layer defects: stale registry
+  * entries, non-string JSON keys, duplicate response index values,
+  * malformed evaluation.metrics, missing order columns, and LruCache
+  * invalidation. */
 class BuildReviewFixesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("checkCache rejects a registry entry whose dir now holds a different key's model") {
-    val tmp = Files.createTempDirectory("graft-reg").toString
+    val tmp = Scratch.dir("graft-reg")
     val modelDir = Paths.get(tmp, "m")
     Files.createDirectories(modelDir)
     Files.writeString(modelDir.resolve("model.json"), "{}")
     Files.writeString(modelDir.resolve("metadata.json"),
       Persistence.toJson(Map("cache_key" -> "keyB")))
-    // a hit now also requires the artifact checksum (round-10: corrupt
-    // cached models self-heal as misses) — give the fixture the
+    // a hit also requires the artifact checksum (corrupt cached models
+    // self-heal as misses) — give the fixture the
     // complete layout `save` always writes
     Files.writeString(modelDir.resolve("info.json"),
       Persistence.toJson(Map("checksum" ->
@@ -77,7 +77,7 @@ class BuildReviewFixesSpec extends AnyFunSuite {
       .select($"tag",
         org.apache.spark.sql.functions.timestamp_seconds($"epoch").as("ts"),
         $"value")
-    val tmp = Files.createTempDirectory("graft-metrics").toString
+    val tmp = Scratch.dir("graft-metrics")
     val e = intercept[graft.config.ModelRegistry.CompileException] {
       ModelBuilder.buildSpec(spec, long, "tag", "ts", "value",
         outputDir = s"$tmp/model", closedForm = true)

@@ -48,7 +48,7 @@ class BuilderSpec extends AnyFunSuite {
   test("a null entry in evaluation.metrics rejects on contract (r13)") {
     // `metrics: [r2_score, ~]` was an anonymous NPE from _.toString in
     // the fold-metric parse — same hole class as the tag-list fix
-    val tmp = Files.createTempDirectory("graft-build-nullmetric").toString
+    val tmp = Scratch.dir("graft-build-nullmetric")
     val yaml = machineYaml + "  metrics: [r2_score, ~]\n"
     val e = intercept[graft.config.ModelRegistry.CompileException](
       ModelBuilder.build(
@@ -59,7 +59,7 @@ class BuilderSpec extends AnyFunSuite {
   }
 
   test("build -> save -> load -> score round-trips exactly") {
-    val tmp = Files.createTempDirectory("graft-build").toString
+    val tmp = Scratch.dir("graft-build")
     val res = ModelBuilder.build(
       Config.parseYaml(machineYaml), globals = Config.defaultGlobals,
       long = longFrame, keyCol = "tag", tsCol = "ts", valueCol = "value",
@@ -95,14 +95,14 @@ class BuilderSpec extends AnyFunSuite {
       outputDir = s"$tmp/model2", registryDir = Some(s"$tmp/registry"),
       projectName = Some("test-project"))
     assert(res2.fromCache)
-    // the hit is materialized into the REQUESTED dir (round-9 contract)
+    // the hit is materialized into the REQUESTED dir
     assert(res2.modelDir == s"$tmp/model2")
     assert(Files.readString(java.nio.file.Paths.get(s"$tmp/model/model.json"))
       == Files.readString(java.nio.file.Paths.get(s"$tmp/model2/model.json")))
   }
 
   test("predict emits model-input/output only and agrees with score") {
-    val tmp = Files.createTempDirectory("graft-pred").toString
+    val tmp = Scratch.dir("graft-pred")
     val res = ModelBuilder.build(
       Config.parseYaml(machineYaml), Config.defaultGlobals,
       longFrame, "tag", "ts", "value", outputDir = s"$tmp/model",
@@ -132,7 +132,7 @@ class BuilderSpec extends AnyFunSuite {
   }
 
   test("a registry cache hit materializes the model in the REQUESTED dir") {
-    val tmp = Files.createTempDirectory("graft-cachemat").toString
+    val tmp = Scratch.dir("graft-cachemat")
     val reg = Some(s"$tmp/registry")
     def run(out: String) = ModelBuilder.build(
       Config.parseYaml(machineYaml), globals = Config.defaultGlobals,
@@ -165,7 +165,7 @@ class BuilderSpec extends AnyFunSuite {
   }
 
   test("evaluation.cv compiles strictly instead of silently defaulting") {
-    val tmp = Files.createTempDirectory("graft-cvstrict").toString
+    val tmp = Scratch.dir("graft-cvstrict")
     def build(cvBlock: String) = ModelBuilder.build(
       Config.parseYaml(machineYaml.replace(
         "    sklearn.model_selection.TimeSeriesSplit:\n      n_splits: 3",
@@ -193,7 +193,7 @@ class BuilderSpec extends AnyFunSuite {
     // already holds: the hit returns early, and must still close the
     // lease — or the assembly stays cached for the session
     import org.apache.spark.storage.StorageLevel
-    val tmp = Files.createTempDirectory("graft-build-prelease").toString
+    val tmp = Scratch.dir("graft-build-prelease")
     val spec = Config.machineFromConfig(Config.parseYaml(machineYaml.replace(
       "  resolution: 10T\n", "  resolution: 10T\n  n_samples_threshold: 10\n")),
       Some("test-project"), Config.defaultGlobals)
@@ -224,7 +224,7 @@ class BuilderSpec extends AnyFunSuite {
   }
 
   test("score drops smooth columns unless allColumns (P8)") {
-    val tmp = Files.createTempDirectory("graft-smooth").toString
+    val tmp = Scratch.dir("graft-smooth")
     val yamlSmooth = machineYaml.replace("kind: feedforward_hourglass",
       "kind: feedforward_hourglass\n    window: 12\n    smoothing_method: sma")
     val res = ModelBuilder.build(

@@ -88,7 +88,7 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("reliableCheckpoint mode: correct result, files on disk, release removes them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-reliable")
+    val dir = java.nio.file.Paths.get(Scratch.dir("graft-cc-reliable"))
     def rddDirs: Seq[String] = {
       import scala.jdk.CollectionConverters._
       val w = java.nio.file.Files.walk(dir)

@@ -41,7 +41,7 @@ class DiffAnomalySpec extends AnyFunSuite {
       max(abs(m.predictCol("ty") - $"ty")).as("ry")).head()
     assert(resid.getDouble(0) < 1e-9 && resid.getDouble(1) < 1e-9)
     // persistence round-trip via ModelBuilder state
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pca").toString
+    val tmp = Scratch.dir("graft-pca")
     val fitted = DiffAnomaly.fit(wide, Seq("tx", "ty"), "bucket_ts",
       new DiffAnomaly.PcaReconstructor(1), nSplits = 3)
     graft.build.Persistence.save(tmp,

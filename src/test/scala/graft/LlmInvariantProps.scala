@@ -206,8 +206,7 @@ object LlmInvariantProps extends Properties("graft.llm") {
       val cents = vecs.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
       val cb: graft.llm.Similarity.PqCodebook =
         Seq(vecs.map(_.toSeq.take(2)), vecs.map(_.toSeq.drop(2)))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-annprop").toString
+      val dir = Scratch.dir("graft-annprop")
       AnnIndex.save(dir, AnnIndex.Index(cents, Some(cb), nprobe))
       val ld = AnnIndex.load(dir)
       def bits(s: Seq[Double]) =

@@ -202,7 +202,7 @@ class LstmSpec extends AnyFunSuite {
       Seq("tx__lag1", "tx__lag2", "ty__lag1", "ty__lag2"), "bucket_ts",
       new Lstm.LstmReconstructor(seed = 0L, epochs = 80), nSplits = 3,
       targetTags = Seq("tx", "ty"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lstm-rt").toString
+    val tmp = Scratch.dir("graft-lstm-rt")
     graft.build.Persistence.save(tmp,
       graft.build.Persistence.stateOf(fitted, 0L))
     val loaded = graft.build.Persistence.load(tmp)
@@ -218,7 +218,7 @@ class LstmSpec extends AnyFunSuite {
       "stack(2, 'tx', tx, 'ty', ty) as (tag, value)",
       "timestamp_seconds(bucket_ts) as ts")
       .select($"tag", $"ts", $"value")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lstm-impl").toString
+    val tmp = Scratch.dir("graft-lstm-impl")
     val res = graft.build.ModelBuilder.build(
       graft.config.Config.parseYaml(
         """
@@ -274,7 +274,7 @@ class LstmSpec extends AnyFunSuite {
       "stack(2, 'tx', tx, 'ty', ty) as (tag, value)",
       "timestamp_seconds(bucket_ts) as ts")
       .select($"tag", $"ts", $"value")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lstm-la2").toString
+    val tmp = Scratch.dir("graft-lstm-la2")
     val res = graft.build.ModelBuilder.build(
       graft.config.Config.parseYaml(
         """

@@ -65,8 +65,7 @@ object PersistenceProps extends Properties("graft.persistence") {
             smoothAgg, perFold),
           window = window, smoothingMethod = "smm",
           windowing = windowing)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-persist-prop").toString
+        val dir = Scratch.dir("graft-persist-prop")
         try {
           Persistence.save(dir, state)
           val (fd, loadedWindowing) = Persistence.loadFull(dir)

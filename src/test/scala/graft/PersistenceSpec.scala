@@ -43,7 +43,7 @@ class PersistenceSpec extends AnyFunSuite {
     for ((family, frame, xTags, base, offset, impl) <- cases) {
       val fitted = DiffAnomaly.fit(frame, xTags, "bucket_ts", base,
         nSplits = 3, targetTags = tagList, foldOffset = offset)
-      val dir = Files.createTempDirectory("graft-parity")
+      val dir = Paths.get(Scratch.dir("graft-parity"))
       try {
         Persistence.save(dir.toString, Persistence.stateOf(fitted, 600L))
         val model = graft.config.Config.parseYaml(

@@ -53,7 +53,7 @@ class ProjectSpec2 extends AnyFunSuite {
   }
 
   test("buildAll trains every machine in parallel and registers them") {
-    val tmp = Files.createTempDirectory("graft-proj").toString
+    val tmp = Scratch.dir("graft-proj")
     val spec = Project.parse(projectYaml, "proj-x")
     val results = Project.buildAll(spec, longFrame, "tag", "ts", "value",
       outputRoot = s"$tmp/models", registryDir = Some(s"$tmp/registry"),
@@ -133,7 +133,7 @@ class ProjectSpec2 extends AnyFunSuite {
   }
 
   test("model cache is LRU-bounded and serves loaded models") {
-    val tmp = Files.createTempDirectory("graft-cache").toString
+    val tmp = Scratch.dir("graft-cache")
     val spec = Project.parse(projectYaml, "proj-x")
     Project.buildAll(spec, longFrame, "tag", "ts", "value",
       outputRoot = s"$tmp/models", parallelism = 1)
@@ -224,7 +224,7 @@ class ProjectSpec2 extends AnyFunSuite {
   }
 
   test("reporter upserts machine records keyed by name") {
-    val tmp = Files.createTempDirectory("graft-rep").toString
+    val tmp = Scratch.dir("graft-rep")
     val rep = new Reporters.JsonDirReporter(tmp)
     rep.report("m1", Map("model" -> "x"), Map("score" -> 1.0))
     rep.report("m1", Map("model" -> "y"), Map("score" -> 2.0)) // upsert
@@ -236,7 +236,7 @@ class ProjectSpec2 extends AnyFunSuite {
     // embedded Derby from Spark's classpath — derby.system.home keeps
     // derby.log out of the repo; memory: keeps the DB itself off disk
     System.setProperty("derby.system.home",
-      Files.createTempDirectory("graft-derby").toString)
+      Scratch.dir("graft-derby"))
     val rep = new Reporters.JdbcReporter("jdbc:derby:memory:graftdb;create=true")
     try {
       def machine(kind: String) = Map[String, Any](
@@ -273,7 +273,7 @@ class ProjectSpec2 extends AnyFunSuite {
   }
 
   test("K5: metric batch of a real build flattens, logs, and reads back") {
-    val tmp = Files.createTempDirectory("graft-k5").toString
+    val tmp = Scratch.dir("graft-k5")
     val spec = Project.parse(projectYaml, "proj-x")
     val result = Project.buildAll(spec, longFrame, "tag", "ts", "value",
       outputRoot = s"$tmp/models", parallelism = 1).head
@@ -299,7 +299,7 @@ class ProjectSpec2 extends AnyFunSuite {
     assert(math.abs(agg - r2Folds.map(_.value).sum / 3) < 1e-12)
 
     System.setProperty("derby.system.home",
-      Files.createTempDirectory("graft-derby-k5").toString)
+      Scratch.dir("graft-derby-k5"))
     val rep = new Reporters.JdbcReporter("jdbc:derby:memory:graftk5;create=true")
     try {
       // small caps force multi-batch slicing (batch_log_items)

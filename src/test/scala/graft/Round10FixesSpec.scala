@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.TextDedup
 
-/** Regression coverage for the round-9 ADVICE findings and round-10
-  * verdict items: the contaminationFull left-join convenience, sq8's
-  * all-non-finite dimension, and the forwarder fence's legacy-adopt
-  * path. (Its cache-ownership tests live in SessionCacheSpec.) */
+/** Regression coverage for the contaminationFull left-join
+  * convenience, sq8's all-non-finite dimension, and the forwarder
+  * fence's legacy-adopt path. (Its cache-ownership tests live in
+  * SessionCacheSpec.) */
 class Round10FixesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -61,7 +61,7 @@ class Round10FixesSpec extends AnyFunSuite {
     // silently interleave with the stale data
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fence4").toString
+    val tmp = Scratch.dir("graft-fence4")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$tmp/out/batch_id=3.bak"))
     val input =

@@ -1,25 +1,32 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression coverage for the round-12 advice fixes: the staged
-  * atomic publish behind q91's stream-input cache (`Scratch.publishDir`
-  * — two JVMs must not race interleaved part files into one shared
-  * cachedDir slot, and a crashed partial slot must rebuild, not wedge).
+/** Regression coverage for the staged atomic publish behind q91's
+  * stream-input cache (`Scratch.publishDir` — two JVMs must not race
+  * interleaved part files into one shared cachedDir slot, and a crashed
+  * partial slot must rebuild, not wedge).
   */
 class Round12FixesSpec extends AnyFunSuite {
 
   private def mkStage(content: String, marker: Boolean = true): String = {
-    val d = Files.createTempDirectory("graft-r12-stage")
+    val d = Paths.get(Scratch.dir("graft-r12-stage"))
     Files.writeString(d.resolve("part-0"), content)
     if (marker) Files.createFile(d.resolve("_SUCCESS"))
     d.toString
   }
 
+  /** Delete a slot and the `.lock` a recovery leaves beside it. */
+  private def dropSlot(target: Path): Unit = {
+    Scratch.deleteTree(target)
+    Files.deleteIfExists(
+      target.resolveSibling(target.getFileName.toString + ".lock")): Unit
+  }
+
   test("publishDir moves a complete stage into an empty slot atomically") {
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.delete(target) // cachedDir returns a path; the dir may not exist
     val stage = mkStage("winner")
     Scratch.publishDir(stage, target.toString)
@@ -30,7 +37,7 @@ class Round12FixesSpec extends AnyFunSuite {
   }
 
   test("a losing publisher adopts the winner's slot, never overwrites it") {
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.delete(target)
     Scratch.publishDir(mkStage("winner"), target.toString)
     // second JVM raced past the _SUCCESS check and staged its own copy:
@@ -41,21 +48,21 @@ class Round12FixesSpec extends AnyFunSuite {
   }
 
   test("a partial slot without the marker is cleared and rebuilt") {
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.writeString(target.resolve("part-0"), "crashed-partial")
     // no _SUCCESS: a pre-staging-era writer died mid-write
     Scratch.publishDir(mkStage("rebuilt"), target.toString)
     assert(Files.readString(target.resolve("part-0")) == "rebuilt")
     assert(Files.exists(target.resolve("_SUCCESS")))
-    Scratch.deleteTree(target)
+    dropSlot(target)
   }
 
   test("concurrent publishers race one slot: exactly one complete copy wins") {
-    // the ADVICE scenario measured, not just argued: N threads all see
+    // the race measured, not just argued: N threads all see
     // the slot missing, stage privately, and publish at once — the slot
     // must end up holding exactly ONE publisher's complete copy (never
     // interleaved files), and every loser must return without error
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.delete(target)
     val n = 8
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -94,7 +101,7 @@ class Round12FixesSpec extends AnyFunSuite {
     // other's freshly published complete dir; under the per-slot
     // monitor + advisory file lock, the end state must be exactly one
     // complete copy and no thread may error
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.writeString(target.resolve("part-0"), "crashed-partial") // no marker
     val n = 8
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -114,14 +121,12 @@ class Round12FixesSpec extends AnyFunSuite {
     assert(Files.exists(target.resolve("_SUCCESS")))
     assert(Files.readString(target.resolve("part-0"))
       .startsWith("recoverer-"))
-    Scratch.deleteTree(target)
-    Files.deleteIfExists(
-      target.resolveSibling(target.getFileName.toString + ".lock"))
+    dropSlot(target)
     stages.foreach(s => Scratch.deleteTree(Paths.get(s)))
   }
 
   test("ensureBuilt builds exactly once, then serves the completed slot") {
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.delete(target)
     var builds = 0
     def build() = Scratch.ensureBuilt(target.toString) { st =>
@@ -170,7 +175,7 @@ class Round12FixesSpec extends AnyFunSuite {
   }
 
   test("publishDir refuses a stage missing its own completeness marker") {
-    val target = Files.createTempDirectory("graft-r12-slot")
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
     Files.delete(target)
     val stage = mkStage("incomplete", marker = false)
     intercept[IllegalArgumentException] {

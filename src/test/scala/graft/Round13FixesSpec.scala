@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression coverage for the round-13 maintenance items (r12 verdict
-  * item 1 + both actionable ADVICE findings): the q69/q76 derived-input
+/** Regression coverage for derived-input cache maintenance: the q69/q76
   * caches are version-keyed like q91's, abandoned ensureBuilt stage
   * directories are age-sweepable instead of leaking permanently after
   * SIGKILL, and the age sweep never unlinks a recovery .lock file that
@@ -21,8 +20,8 @@ class Round13FixesSpec extends AnyFunSuite {
   test("q69's stream-input cache is derivation-version-keyed (v1)") {
     // run the real query, then assert the slot it built is the
     // VERSIONED one — pins the call site, not just cachedDir's ability
-    // to take a version (r12 verdict: an unversioned witness would
-    // serve a stale frame after a derivation change)
+    // to take a version (an unversioned witness would serve a stale
+    // frame after a derivation change)
     SparkEntry.queries("q69_streaming_anomaly")(SparkTestSession.spark, sf)
       .count()
     val versioned = Scratch.cachedDir(
@@ -43,8 +42,8 @@ class Round13FixesSpec extends AnyFunSuite {
   test("the age sweep reclaims abandoned ensureBuilt stage dirs") {
     // a SIGKILL between staging and publish skips the exit hook; the
     // abandoned '<prefix>-<key>-stage<rand>' dir must be reclaimed by
-    // the next same-prefix sweep once stale (r12 ADVICE: it used to
-    // leak permanently — the name never matched the sibling regex)
+    // the next same-prefix sweep once stale (the sibling regex alone
+    // never matches its name)
     val prefix = "graft-r13-stagesweep"
     val stale = new File(tmp, s"$prefix-0123456789abcdef-stage777")
     assert(stale.mkdir())
@@ -78,7 +77,7 @@ class Round13FixesSpec extends AnyFunSuite {
       assert(lockFile.exists,
         "a HELD .lock must survive the sweep even when mtime-stale — " +
           "unlinking it would let a second recoverer lock a fresh inode " +
-          "alongside the holder (r12 ADVICE)")
+          "alongside the holder")
     } finally { held.release(); ch.close() }
     // released + still stale: now the sweep may reclaim it
     assert(lockFile.setLastModified(staleMs))
@@ -89,7 +88,7 @@ class Round13FixesSpec extends AnyFunSuite {
   }
 
   test("the sweep's lock probe serializes on the slot monitor") {
-    // r13 review (empirically confirmed): on POSIX, closing ANY channel
+    // confirmed empirically: on POSIX, closing ANY channel
     // to a file drops every fcntl lock this process holds on it — so a
     // sweep that opened a .lock while a same-JVM publishDir recovery
     // held it would silently RELEASE the recoverer's cross-JVM lock,
@@ -126,48 +125,21 @@ class Round13FixesSpec extends AnyFunSuite {
     Files.deleteIfExists(witness)
   }
 
-  test("directory-witness identity walk memoizes ONLY under opt-in TTL") {
-    // r12 verdict carried item: the per-call full-lake stat walk is
-    // exact but measurable on a million-file lake; the TTL memo trades
-    // a BOUNDED staleness window for re-key detection. Default (TTL=0)
-    // must keep the exact per-call walk — that is what every gate
-    // verified — so re-keying on a witness change must be immediate.
-    val lake = Files.createTempDirectory("graft-r13-lake")
+  test("directory-witness identity walk re-keys immediately on a witness change") {
+    // the per-call full-lake stat walk is exact: every call re-reads the
+    // lake, so a rewritten part file re-keys the very next call
+    val lake = Paths.get(Scratch.dir("graft-r13-lake"))
     val part = lake.resolve("part-0.parquet")
     Files.writeString(part, "v1")
     assert(part.toFile.setLastModified(1700000000000L))
     val prefix = "graft-r13-wmemo"
     try {
       val key1 = Scratch.cachedDir(prefix, lake.toString)
-      // default off: a rewritten part file re-keys on the NEXT call
       Files.writeString(part, "v2-longer")
       assert(part.toFile.setLastModified(1700000001000L))
       val key2 = Scratch.cachedDir(prefix, lake.toString)
-      assert(key2 != key1, "TTL off: witness change must re-key immediately")
-      // opt in: within the TTL the memoized identity is served, so a
-      // further rewrite does NOT re-key until the TTL lapses
-      System.setProperty("graft.witness.ttlMs", "600000")
-      Scratch.witnessMemo.clear()
-      val key3 = Scratch.cachedDir(prefix, lake.toString)
-      assert(key3 == key2, "first TTL call computes the same identity")
-      Files.writeString(part, "v3-even-longer")
-      assert(part.toFile.setLastModified(1700000002000L))
-      val key4 = Scratch.cachedDir(prefix, lake.toString)
-      assert(key4 == key3,
-        "within the TTL the memoized identity must be served (the " +
-          "documented bounded-staleness trade)")
-      // expiry: back-date the memo entry past the TTL → recompute
-      // (memo key = canonical root + NUL + version; version is "")
-      val memoKey = lake.toFile.getCanonicalPath + "\u0000"
-      val stale = Scratch.witnessMemo.get(memoKey)
-      Scratch.witnessMemo.put(memoKey, (stale._1 - 700000L, stale._2))
-      val key5 = Scratch.cachedDir(prefix, lake.toString)
-      assert(key5 != key3, "past the TTL the walk recomputes and re-keys")
-    } finally {
-      System.clearProperty("graft.witness.ttlMs")
-      Scratch.witnessMemo.clear()
-      Scratch.deleteTree(lake)
-    }
+      assert(key2 != key1, "witness change must re-key immediately")
+    } finally Scratch.deleteTree(lake)
   }
 
   test("null config values reject with contract exceptions, never NPE") {
@@ -269,18 +241,18 @@ class Round13FixesSpec extends AnyFunSuite {
   }
 
   test("publishDir renews a pre-existing stale .lock's mtime on recovery") {
-    // the r12 ADVICE window: a .lock left >=6h stale could be unlinked
-    // by a sibling sweep between open and the old post-acquisition
-    // touch; the touch now lands before acquisition, so after any
-    // recovery the lock file must carry a fresh mtime
-    val target = Files.createTempDirectory("graft-r13-slot")
+    // a .lock left >=6h stale could be unlinked by a sibling sweep
+    // between open and a post-acquisition touch; the touch lands before
+    // acquisition, so after any recovery the lock file must carry a
+    // fresh mtime
+    val target = Paths.get(Scratch.dir("graft-r13-slot"))
     Files.writeString(target.resolve("part-0"), "crashed-partial")
     val lockPath =
       target.resolveSibling(target.getFileName.toString + ".lock")
     Files.createFile(lockPath)
     assert(lockPath.toFile.setLastModified(staleMs))
     val t0 = System.currentTimeMillis()
-    val stage = Files.createTempDirectory("graft-r13-stage")
+    val stage = Paths.get(Scratch.dir("graft-r13-stage"))
     Files.writeString(stage.resolve("part-0"), "rebuilt")
     Files.createFile(stage.resolve("_SUCCESS"))
     Scratch.publishDir(stage.toString, target.toString)
@@ -292,19 +264,19 @@ class Round13FixesSpec extends AnyFunSuite {
   }
 
   test("artifact loads reject a missing/null info.json checksum as loudly as a mismatch") {
-    // the r13 null-hole class, artifact-side: a tampered/truncated
+    // the null-hole class, artifact-side: a tampered/truncated
     // info.json WITHOUT a checksum field (or with `checksum: null`) was
     // an anonymous NoSuchElementException/NPE on the serve path instead
     // of the contract's corrupt-artifact IllegalArgumentException
     for (info <- Seq("{}", "{\"checksum\": null}")) {
-      val md = Files.createTempDirectory("graft-r13-art")
+      val md = Paths.get(Scratch.dir("graft-r13-art"))
       Files.writeString(md.resolve("model.json"), "{\"impl\": \"ridge\"}")
       Files.writeString(md.resolve("info.json"), info)
       val e = intercept[IllegalArgumentException] {
         graft.build.Persistence.load(md.toString)
       }
       assert(e.getMessage.contains("no checksum"), e.getMessage)
-      val ad = Files.createTempDirectory("graft-r13-ann")
+      val ad = Paths.get(Scratch.dir("graft-r13-ann"))
       Files.writeString(ad.resolve("index.json"), "{\"centroids\": []}")
       Files.writeString(ad.resolve("info.json"), info)
       val e2 = intercept[IllegalArgumentException] {
@@ -316,7 +288,7 @@ class Round13FixesSpec extends AnyFunSuite {
   }
 
   test("wire parsers handle malformed time/value cells per contract under ANSI mode") {
-    // the r13 wire-parser fuzz counterexample: {"":{"":5}} is valid JSON
+    // a wire-parser fuzz counterexample: {"":{"":5}} is valid JSON
     // in the dict-of-dicts shape but its timestamp key is not ISO —
     // under Spark 4's default ANSI mode the plain to_timestamp threw an
     // anonymous CAST_INVALID_INPUT job failure; the contract reject

@@ -228,4 +228,31 @@ class SessionCacheSpec extends AnyFunSuite {
         "last release unpersists the shared wide cache")
     } finally pool.shutdownNow(): Unit
   }
+
+  test("DiffAnomaly.fit and fitKfcv never yank a caller's plan-identical indexed frame") {
+    // the CV fit leases the frame CrossValidate.withRowIndexCounted
+    // builds; a caller holding a plan-identical frame (same wide input,
+    // same order column) shares ONE CacheManager entry with it, so a
+    // bare unpersist in the fit would drop the caller's cache
+    val wide = spark.range(48).toDF("bucket_ts")
+      .select($"bucket_ts", ($"bucket_ts" * 0.5).as("tx"),
+        ($"bucket_ts" * 1.5 + 2.0).as("ty"))
+    val (indexed, _) = graft.ml.CrossValidate
+      .withRowIndexCounted(wide, Seq(col("bucket_ts")))
+    val lease = SessionCache.acquire(indexed)
+    try {
+      assert(indexed.storageLevel != StorageLevel.NONE)
+      val base = new graft.ml.DiffAnomaly.TrendReconstructor("bucket_ts", 0L)
+      graft.ml.DiffAnomaly.fit(wide, Seq("tx", "ty"), "bucket_ts", base,
+        nSplits = 3)
+      assert(indexed.storageLevel != StorageLevel.NONE,
+        "fit must return its reference, not unpersist the shared entry")
+      graft.ml.DiffAnomaly.fitKfcv(wide, Seq("tx", "ty"), "bucket_ts", base,
+        nSplits = 3, window = 6)
+      assert(indexed.storageLevel != StorageLevel.NONE,
+        "fitKfcv must return its reference, not unpersist the shared entry")
+    } finally lease.close()
+    assert(indexed.storageLevel == StorageLevel.NONE)
+    assert(!SessionCache.isRegistered(indexed))
+  }
 }

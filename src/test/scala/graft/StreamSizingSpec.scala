@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{Forwarder, StreamSizing, StreamingScoring}
 
-/** The streaming state-partition sizing knob (r14 verdict item 4):
-  * default-off proof (the bench's streaming rows stay byte-comparable),
-  * the configured path's state-store count, and the checkpoint PINNING
-  * that makes the count a first-deployment sizing decision. */
+/** The streaming state-partition sizing knob: default-off proof (the
+  * bench's streaming rows stay byte-comparable), the configured path's
+  * state-store count, and the checkpoint PINNING that makes the count a
+  * first-deployment sizing decision. */
 class StreamSizingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -43,7 +43,7 @@ class StreamSizingSpec extends AnyFunSuite {
   test("default-off: sessionFor returns the caller's session unchanged") {
     assert(StreamSizing.sessionFor(spark) eq spark)
     // and a default-run stream pins the SESSION's shuffle partitions
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssz-def").toString
+    val tmp = Scratch.dir("graft-ssz-def")
     writeDocs(s"$tmp/in", Seq((1L, "a"), (2L, "b")))
     runDedup(tmp, StreamSizing.sessionFor(spark))
     assert(recordedPartitions(s"$tmp/ckpt", 0) ==
@@ -58,7 +58,7 @@ class StreamSizingSpec extends AnyFunSuite {
       assert(sess.conf.get("spark.sql.shuffle.partitions") == "3")
       // the caller's session is untouched — batch plans keep their count
       assert(spark.conf.get("spark.sql.shuffle.partitions") != "3")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ssz-cfg").toString
+      val tmp = Scratch.dir("graft-ssz-cfg")
       writeDocs(s"$tmp/in", Seq((1L, "a"), (2L, "b")))
       runDedup(tmp, sess)
       assert(recordedPartitions(s"$tmp/ckpt", 0) == Some("3"))
@@ -83,7 +83,7 @@ class StreamSizingSpec extends AnyFunSuite {
   }
 
   test("the checkpoint pins the count across restarts with a changed knob") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssz-pin").toString
+    val tmp = Scratch.dir("graft-ssz-pin")
     spark.conf.set(StreamSizing.confKey, "3")
     try {
       writeDocs(s"$tmp/in", Seq((1L, "a"), (2L, "b")))

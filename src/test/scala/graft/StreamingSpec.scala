@@ -40,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
   test("forwarder lands stream batches in the parquet measurement dir") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fwd").toString
+    val tmp = Scratch.dir("graft-fwd")
     val input = MemoryStream[(Long, Double)]
     val q = graft.streaming.Forwarder.toParquet(
       input.toDF().toDF("ts", "value"), s"$tmp/out", s"$tmp/ckpt")
@@ -195,7 +195,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(String, Long, Double)]
     val stream = input.toDF().toDF("tag", "epoch", "value")
       .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-lagrej").toString
+    val tmp = Scratch.dir("graft-lagrej")
     val e = intercept[IllegalArgumentException] {
       StreamingScoring.anomalyJob(lagged, "m1", stream,
         "tag", "ts", "value", res, s"$tmp/out", s"$tmp/ckpt")
@@ -223,7 +223,7 @@ class StreamingSpec extends AnyFunSuite {
       window = None)
     val batch = DiffAnomaly.anomaly(fitted, wide, res)
     assert(!batch.columns.exists(_.startsWith("smooth-")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ordercol").toString
+    val tmp = Scratch.dir("graft-ordercol")
     val input = MemoryStream[(String, Long, Double)]
     val stream = input.toDF().toDF("tag", "epoch", "value")
       .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
@@ -251,7 +251,7 @@ class StreamingSpec extends AnyFunSuite {
   test("forwarder refuses a fresh checkpoint over a sink holding batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fence").toString
+    val tmp = Scratch.dir("graft-fence")
     def run(ckpt: String): Unit = {
       val input = MemoryStream[(Long, Double)]
       val q = Forwarder.toParquet(input.toDF().toDF("id", "v"),
@@ -321,7 +321,7 @@ class StreamingSpec extends AnyFunSuite {
       window = Some(3), smoothingMethod = "smm")
     val batch = DiffAnomaly.anomaly(fitted, wide, res)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-e2e").toString
+    val tmp = Scratch.dir("graft-e2e")
     val input = MemoryStream[(String, Long, Double)]
     val stream = input.toDF().toDF("tag", "epoch", "value")
       .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
@@ -386,7 +386,7 @@ class StreamingSpec extends AnyFunSuite {
       window = Some(3), smoothingMethod = "smm")
     val batch = DiffAnomaly.anomaly(fitted, wide, res)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-e2e-inc").toString
+    val tmp = Scratch.dir("graft-e2e-inc")
     val input = MemoryStream[(String, Long, Double)]
     val stream = input.toDF().toDF("tag", "epoch", "value")
       .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
@@ -416,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
   test("smoothStream rejects a checkpointed restart under a different method (advice: low)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-smethod").toString
+    val tmp = Scratch.dir("graft-smethod")
     def run(method: String, name: String,
             batches: Seq[Seq[(String, Long, Option[Double])]]): Unit = {
       val input = MemoryStream[(String, Long, Option[Double])]
@@ -456,7 +456,7 @@ class StreamingSpec extends AnyFunSuite {
   test("smoothStream rejects a restart with reordered columns or changed width") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scols").toString
+    val tmp = Scratch.dir("graft-scols")
     def run(cols: Seq[(String, String)], width: Int,
             batches: Seq[Seq[(String, Long, Option[Double], Option[Double])]]): Unit = {
       val input = MemoryStream[(String, Long, Option[Double], Option[Double])]
@@ -532,7 +532,7 @@ class StreamingSpec extends AnyFunSuite {
   test("forwarder writes the fence marker before any batch dir, adopts legacy sinks") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fence2").toString
+    val tmp = Scratch.dir("graft-fence2")
     val markerPath = java.nio.file.Paths.get(s"$tmp/out", "_graft_query_id")
     def run(chunks: Seq[(Long, Double)]*): Unit = {
       val input = MemoryStream[(Long, Double)]
@@ -574,7 +574,7 @@ class StreamingSpec extends AnyFunSuite {
         s"$tmp/out", s"$tmp/ckpt")
     }
     assert(e.getMessage.contains("commit log"), e.getMessage)
-    // ...and the gate runs BOTH ways (r10 review): a marker-less sink
+    // ...and the gate runs BOTH ways: a marker-less sink
     // that is merely OLDER than the checkpoint (every id ≤ max
     // committed, but the newest committed batch's dir absent) is a
     // foreign sink too — its low-numbered dirs would never be rewritten
@@ -595,7 +595,7 @@ class StreamingSpec extends AnyFunSuite {
   test("a stale marker on a batch-less sink is dropped, not inherited") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fence3").toString
+    val tmp = Scratch.dir("graft-fence3")
     val out = java.nio.file.Paths.get(s"$tmp/out")
     java.nio.file.Files.createDirectories(out)
     // leftover marker from a dead query, NO batch dirs — it guards
