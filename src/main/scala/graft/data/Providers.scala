@@ -108,12 +108,12 @@ object Providers {
     val parsed = Seq(json).toDF("body")
       .select(from_json($"body",
         MapType(StringType, MapType(StringType, DoubleType))).as("m"))
-    // BOTH contract probes in one pass (r13 ran the parse pipeline
-    // twice — a null-map check, then a null-ts scan — which compounds
+    // BOTH contract probes in one pass (running the parse pipeline
+    // twice — a null-map check, then a null-ts scan — would compound
     // per call on the serving path). The fold is a single Project over
     // the 1-row LocalRelation, so ConvertToLocalRelation evaluates it
     // at optimization time and head() submits NO Spark job at all
-    // (pinned by Round14FixesSpec):
+    // (pinned by SequenceSpec):
     //  * an unparseable body (HTML error page, truncated JSON, non-dict
     //    document) parses to a null map and would otherwise explode to
     //    the empty frame — silently indistinguishable from a valid `{}`
@@ -121,8 +121,8 @@ object Providers {
     //  * a key that is NOT an ISO timestamp violates the wire format —
     //    reject it loudly BY NAME. Under Spark's default ANSI mode the
     //    plain to_timestamp threw an anonymous CAST_INVALID_INPUT job
-    //    failure (r13 wire-parser fuzz); a silent null-ts row would be
-    //    worse (junk rows sorted first).
+    //    failure (found by the wire-parser fuzz); a silent null-ts row
+    //    would be worse (junk rows sorted first).
     // Flattening every inner-map key and keeping the first one
     // try_to_timestamp rejects folds the second probe into the first;
     // a null `m` propagates through the array functions to a null
@@ -132,8 +132,7 @@ object Providers {
     // contribute an empty key array — flatten returns null when ANY
     // element is null, which would silently skip a bad key elsewhere
     // in the same body (`{"a": null, "b": {"junk": 1}}`); the null
-    // series itself stays the r13 behavior (dropped by the explode,
-    // like an empty series).
+    // series itself is dropped by the explode, like an empty series.
     val diag = parsed.select(
       isnull($"m").as("null_map"),
       get(filter(

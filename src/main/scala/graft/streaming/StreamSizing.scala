@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-/** State-partition sizing for streaming jobs (r14 verdict item 4 /
-  * "Not yet optimized" #1).
+/** State-partition sizing for streaming jobs.
   *
   * A stateful streaming query's state-store count is pinned from
   * `spark.sql.shuffle.partitions` at the FIRST micro-batch and recorded
@@ -16,14 +15,13 @@ import org.apache.spark.sql.SparkSession
   * key-space parallelism forever (the checkpoint pins it).
   *
   * [[sessionFor]] reads `graft.streaming.statePartitions` from the
-  * session conf (env `SPARK_GRAFT_STREAM_STATE_PARTITIONS` as fallback
-  * for harness runs) and, when set, returns a NEW session (shared
+  * session conf and, when set, returns a NEW session (shared
   * SparkContext, shared cache, a copy of the caller's runtime SQL conf)
   * whose `spark.sql.shuffle.partitions` is the requested count — streams
   * built through it pin that state-store count into fresh checkpoints.
-  * DEFAULT (unset): returns the caller's session unchanged — exactly
-  * today's behavior, so the driver's bench rows stay comparable and no
-  * local-only tuning is smuggled in.
+  * DEFAULT (unset): returns the caller's session unchanged, so the
+  * bench's streaming rows stay comparable and no local-only tuning is
+  * smuggled in.
   *
   * Production sizing guidance (documented, not defaulted): size state
   * partitions to peak keyspace — roughly
@@ -40,9 +38,7 @@ object StreamSizing {
   val confKey = "graft.streaming.statePartitions"
 
   def sessionFor(spark: SparkSession): SparkSession = {
-    val knob = spark.conf.getOption(confKey)
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS"))
-    knob match {
+    spark.conf.getOption(confKey) match {
       case None => spark
       case Some(v) =>
         val n = v.trim.toIntOption.getOrElse(

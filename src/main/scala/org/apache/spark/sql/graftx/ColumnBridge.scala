@@ -10,8 +10,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql] ExpressionUtils`; a library providing custom expressions
   * (the documented extension path — custom `Expression` with `doGenCode`)
   * reaches it from an `org.apache.spark.sql` subpackage, the same pattern
-  * third-party Spark extensions use. This is the ONLY file outside the
-  * `graft` namespace.
+  * third-party Spark extensions use. The `graftx` package holds every
+  * such bridge (this one, [[FunctionBridge]], [[CheckpointBridge]] and
+  * [[SchedulerBridge]]); no other code sits outside the `graft`
+  * namespace.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

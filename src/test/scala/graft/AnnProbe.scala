@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
@@ -18,8 +18,8 @@ import graft.llm.Similarity
   * The query set starts at `qOffset` (default 100), deliberately
   * DISJOINT from the id-centroid seed ids `0 until nCentroids`: a
   * query that IS a centroid always probes its own list first with
-  * perfect affinity, which inflates the id-quantizer's recall — the
-  * round-7 probe had exactly that bias (queries 0..9 vs seeds 0..15).
+  * perfect affinity, which inflates the id-quantizer's recall (queries
+  * 0..9 against seeds 0..15 would carry exactly that bias).
   *
   * Claims under test:
   *  - SQ8's 4× compression costs bounded recall (the FAISS trade) and
@@ -42,13 +42,7 @@ object AnnProbe {
     val qOffset = if (args.length > 3) args(3).toLong else 100L
     val nprobe = if (args.length > 4) args(4).toInt else 2
     val nCentroids = if (args.length > 5) args(5).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = Tables(spark, dir, "embeddings")

@@ -7,7 +7,7 @@ import graft.llm.Components
 
 /** Dev-only HA probe (test scope): exercises `reliableCheckpoint` under
   * a REAL executor loss — the contract `Components.scala`'s scaladoc
-  * states but the r10 happy-path probe never forced (r10 verdict item 4).
+  * states but a happy-path probe never forces.
   *
   * Setup: `local-cluster[2,1,1024]` — a real standalone master + 2
   * workers inside the driver JVM, each launching its executor as a
@@ -32,6 +32,7 @@ object ComponentsHaProbe {
 
   private val ChainNodes = 512L // diameter 511 → ~9 pointer-jump rounds
 
+  // not LocalSession: killing an executor needs local-cluster processes
   private def session(): SparkSession = {
     val cls = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
       .map(p => new java.io.File(p).getAbsolutePath)

@@ -187,6 +187,40 @@ class ConfigSpec extends AnyFunSuite {
       })
   }
 
+  test("YAML merge keys, duplicate keys, aliases and 1.1 scalars reach the bridge resolved") {
+    // deterministic pins beside the YAML-text fuzz (ConfigFuzzProps):
+    // the bridge depends on snakeyaml resolving these BEFORE toScala —
+    // merge keys flatten with machine-side override precedence,
+    // duplicate mapping keys are last-wins, underscore/hex ints arrive
+    // as Integers, and an anchored list aliased into two slots is the
+    // same logical value in both
+    val doc =
+      """base: &base
+        |  tags: &t [TAG-1, TAG-2]
+        |  resolution: 1H
+        |name: m1
+        |project_name: p
+        |dataset:
+        |  <<: *base
+        |  type: RandomDataset
+        |  row_filter_buffer_size: 9
+        |dataset:
+        |  <<: *base
+        |  resolution: 10T
+        |  target_tag_list: *t
+        |  row_filter_buffer_size: 1_000
+        |  n_samples_threshold: 0x10
+        |model: {sklearn.preprocessing.MinMaxScaler: {}}""".stripMargin
+    val spec = Config.machineFromConfig(Config.parseYaml(doc), None, Map.empty)
+    val ds = Config.datasetConfig(spec)
+    assert(ds.tags == Seq("TAG-1", "TAG-2"), "merge key must flatten the base")
+    assert(ds.targetTags == Seq("TAG-1", "TAG-2"), "alias reuse resolves")
+    assert(ds.resolution == "10T",
+      "the machine-side key overrides the merged base; duplicate dataset is last-wins")
+    assert(ds.rowFilterBufferSize == 1000, "YAML 1.1 underscore int")
+    assert(ds.nSamplesThreshold == 16L, "YAML 1.1 hex int")
+  }
+
   test("datasetConfig applies the documented defaults") {
     val m = Config.machineFromConfig(Config.parseYaml(machineYaml), Some("p"))
     val dc = Config.datasetConfig(m)

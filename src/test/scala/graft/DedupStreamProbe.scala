@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only streaming-dedup scale probe (test scope): runs the q76
@@ -34,16 +33,10 @@ import org.apache.spark.sql.functions._
 object DedupStreamProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // recentProgress is capped (default 100); the probe's batch and
-      // state readings must cover EVERY micro-batch at any scale knob
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // recentProgress is capped (default 100); the probe's batch and
+    // state readings must cover EVERY micro-batch at any scale knob
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -144,8 +144,8 @@ object InfluxProps extends Properties("graft.influx") {
   // response and the S4 dict-of-dicts body) either return a frame or
   // reject with the contract IllegalArgumentException — never an
   // anonymous crash on a proxy's HTML page, truncated JSON, or a
-  // structurally-wrong document (r13, the fuzz discipline extended to
-  // the wire surfaces) ----
+  // structurally-wrong document (the fuzz discipline extended to the
+  // wire surfaces) ----
 
   private val bodyGen: Gen[String] = Gen.frequency(
     3 -> Gen.asciiPrintableStr.map(_.take(120)),
@@ -177,7 +177,7 @@ object InfluxProps extends Properties("graft.influx") {
           "fromJsonBody")
     }
 
-  // ---- structured /query fuzz (r14): whole RESPONSE OBJECTS with the
+  // ---- structured /query fuzz: whole RESPONSE OBJECTS with the
   // shapes the string pool above cannot draw — truncated/overlong
   // values rows, missing time/Value columns, shuffled column orders,
   // absent/foreign tags maps, raw JSON numbers/bools/nulls inside
@@ -188,8 +188,7 @@ object InfluxProps extends Properties("graft.influx") {
   // failed job). The truncated-row case found a real hole on first
   // contact: under ANSI mode element_at threw
   // INVALID_ARRAY_INDEX_IN_ELEMENT_AT for a row shorter than its
-  // column list (fixed with try_element_at, pinned in
-  // Round14FixesSpec).
+  // column list (fixed with try_element_at, pinned in InfluxSpec).
 
   /** A values cell with KNOWN dual semantics: its JSON form, what
     * try_to_timestamp yields for it, what try_cast(double) yields. */

@@ -65,6 +65,28 @@ class InfluxSpec extends AnyFunSuite {
     assert(got(0).getString(0) == "a" && got(0).isNullAt(2))
   }
 
+  test("a truncated influx values row is a null-point row, not a failed job") {
+    // a values row SHORTER than its column list puts the (in-bounds)
+    // column index out of bounds for that row; under Spark's default
+    // ANSI mode element_at throws an anonymous
+    // INVALID_ARRAY_INDEX_IN_ELEMENT_AT job failure. The documented
+    // contract is the influx null-point shape (malformed cell → null
+    // field, neighbors intact), so the parse uses try_element_at;
+    // overlong rows keep their extra cells ignored.
+    val json = """{"results":[{"series":[{"name":"m","tags":{"tag":"T1"},
+      |"columns":["time","Value"],
+      |"values":[["2020-01-01T00:00:00Z"],
+      |["2020-01-01T00:01:00Z","2.5","extra"],
+      |["2020-01-01T00:02:00Z","1.5"]]}]}]}""".stripMargin
+    val rows = Influx.fromQueryResponse(spark, json)
+      .orderBy(col("ts")).collect()
+    assert(rows.length == 3, "short/long rows must not drop or kill rows")
+    assert(!rows(0).isNullAt(1) && rows(0).isNullAt(2),
+      "truncated row -> ts intact, null value")
+    assert(rows(1).getDouble(2) == 2.5, "overlong row -> extra cell ignored")
+    assert(rows(2).getDouble(2) == 1.5)
+  }
+
   test("toLineProtocol escapes and emits nanosecond timestamps") {
     val df = Seq(("tag with space,eq=x", "2024-01-01T00:00:00Z", 0.5))
       .toDF("tag", "ts_str", "value")

@@ -1,19 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev probe (r14 optimization): does hash partitioning survive (a) a
+/** Dev probe: does hash partitioning survive (a) a
   * CacheManager persist and (b) a Dataset.localCheckpoint, under AQE —
   * i.e. do the per-round Components joins actually plan zero exchanges
   * once their inputs are pre-keyed? Run:
   * `sbt "Test/runMain graft.PartitioningProbe"`. */
 object PartitioningProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     println("canChangeCachedPlanOutputPartitioning=" +

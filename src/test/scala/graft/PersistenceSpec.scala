@@ -59,4 +59,17 @@ class PersistenceSpec extends AnyFunSuite {
       } finally Scratch.deleteTree(dir)
     }
   }
+
+  test("q80 integrity fact names a missing/null checksum instead of crashing") {
+    // the same tampered-artifact scenario Persistence.loadFull /
+    // AnnIndex.load reject with the contract exception; the dump
+    // INVENTORY's job is to report, so the fact reports rather than
+    // raising an anonymous NoSuchElementException (no key) or NPE
+    // (checksum: null)
+    val f = graft.operators.AnomalyQueries.checksumFact _
+    assert(f(Map("impl" -> "x"), "ab") == "checksum_missing")
+    assert(f(Map("checksum" -> null), "ab") == "checksum_missing")
+    assert(f(Map("checksum" -> "ab"), "ab") == "checksum_matches_true")
+    assert(f(Map("checksum" -> "cd"), "ab") == "checksum_matches_false")
+  }
 }

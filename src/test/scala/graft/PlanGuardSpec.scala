@@ -51,9 +51,10 @@ class PlanGuardSpec extends AnyFunSuite {
     * regression even while results stay correct. Budgets are the
     * reviewed plan's count — raising one must come with a reason, like
     * the allowlist above. Counted on the pre-execution adaptive plan
-    * (deterministic given the fixed sf0.001 inputs). The first map is
-    * the headline set with per-plan review notes; round 10 extended the
-    * pin to EVERY registered query. */
+    * (deterministic given the fixed sf0.001 inputs), the count
+    * [[ExecCounts.planShuffles]] reads and `JobAudit` prints as
+    * `plan_exchanges`. The first map is the headline set with per-plan
+    * review notes; the second pins every other registered query. */
   test("every registered query stays within its reviewed shuffle budget") {
     val budgets = Map(
       "q01_pricing_summary" -> 2, // partial+final agg, output sort
@@ -63,30 +64,30 @@ class PlanGuardSpec extends AnyFunSuite {
       "q07_topk_per_group" -> 3, // window partition, agg, sort
       "q13_resample_mean" -> 2, // bucket agg + sort
       "q21_getdata_composed" -> 4, // resample, grid join, pivot agg, sort
-      // r14: 3 → 5 — wideClickView is now session-cached (one assembly
-      // for q29/q43/q69/q74 instead of one per eager job); the cached
+      // wideClickView is session-cached (one assembly for
+      // q29/q43/q69/q74 instead of one per eager job); the cached
       // subtree's resample+pivot exchanges PRINT under the
-      // InMemoryTableScan, so the fingerprint grows while the runtime
-      // shuffle count per execution strictly drops
+      // InMemoryTableScan, so the fingerprint counts them while the
+      // runtime shuffle count per execution does not
       "q29_anomaly_frame" -> 5,
       "q33_fingerprints" -> 1, // pure map + output sort
-      // r14: +1 — the shared shingle frame spreads an under-parallel
-      // scan (input splits < cores) with one round-robin exchange before
-      // the shingle compute; a no-op at lake scale where the scan
-      // already has >= cores splits, so nothing extra ships there.
-      // r15: 4 → 5 — the verified-pair pipeline is now session-cached
-      // (shared with q87, which reads it twice), and the cached
-      // subtree's exchanges PRINT under the InMemoryTableScan; runtime
-      // shuffles per warm execution dropped to 1 (the output sort) —
-      // pinned in RuntimeShuffleSpec
+      // the shared shingle frame spreads an under-parallel scan (input
+      // splits < cores) with one round-robin exchange before the
+      // shingle compute; a no-op at lake scale where the scan already
+      // has >= cores splits, so nothing extra ships there. The
+      // verified-pair pipeline is session-cached (shared with q87,
+      // which reads it twice), and the cached subtree's exchanges PRINT
+      // under the InMemoryTableScan; the runtime shuffles per warm
+      // execution are 1 (the output sort), pinned in RuntimeShuffleSpec
       "q34_minhash_dup_pairs" -> 5,
       "q35_ann_topk" -> 2, // per-query top-k agg + sort (queries broadcast)
       "q45_simhash_neardup" -> 2, // band bucket join (bcast), dedup, sort
       "q50_winnowing" -> 1, // pure map + output sort
       "q57_asof_join" -> 8, // union window + chunk-carry frame (ids/finals/prefix scan)
       "q68_partitioned_source" -> 4) ++ // pruned scan then the q21 pipeline
-      // The rest of the registry, pinned from the round-10 full-plan
-      // sweep (Test/runMain graft.ShuffleCount): each value is the
+      // The rest of the registry, pinned from a full-plan sweep (the
+      // failure message below, or JobAudit's plan_exchanges column,
+      // lists every count): each value is the
       // REVIEWED static count on the pre-execution plan, INCLUDING the
       // subtrees printed under InMemoryTableScan nodes — a cached
       // assembly's child exchanges count once per appearance, so these
@@ -108,9 +109,9 @@ class PlanGuardSpec extends AnyFunSuite {
         "q23_metrics_linear" -> 3, "q25_minmax_scale" -> 3,
         "q26_robust_scale" -> 3, "q27_inf_imputer" -> 3,
         "q38_sliding_windows" -> 3, "q39_trailing_align" -> 4,
-        // r14: +2 fingerprint each — the shared wideClickView cache's
-        // subtree prints under the scan (see q29 note); runtime shuffles
-        // per execution are fewer, not more
+        // the shared wideClickView cache's subtree prints under the
+        // scan (see q29 note): +2 fingerprint each; runtime shuffles per
+        // execution are fewer, not more
         "q43_pca_anomaly" -> 5, "q74_ewm_anomaly_frame" -> 4,
         // driver-side fits returning small frames
         "q24_cv_folds" -> 1, "q40_kfcv_thresholds" -> 0,
@@ -119,10 +120,10 @@ class PlanGuardSpec extends AnyFunSuite {
         "q30_text_stats" -> 2, "q31_quality_scores" -> 1,
         "q32_langid_confusion" -> 2, "q36_ann_lsh_buckets" -> 2,
         "q37_multimodal_features" -> 1, "q42_embedding_neardup" -> 2,
-        // q46 r14: +1 for the shingle spread (see q34 note)
+        // q46: +1 for the shingle spread (see q34 note)
         "q46_ngram_jaccard" -> 3, "q48_fingerprint_dup_groups" -> 2,
         "q52_ngram_jaccard_ppjoin" -> 5, "q88_repetition_stats" -> 1,
-        // q89/q90 r14: +1 for the conditional documents spread before
+        // q89/q90: +1 for the conditional documents spread before
         // the 8-gram explode (see the q34 note — a no-op at lake scale)
         "q89_contamination" -> 5,
         // q89's plan + the corpus-id left join (broadcast: the hits agg
@@ -138,13 +139,12 @@ class PlanGuardSpec extends AnyFunSuite {
         // full build round-trips; the window (M6/M10) builds carry the
         // lag-window + interpolation-grid stages, with the cached
         // bounds-agg subtree printed under each consumer
-        // r14: build+score queries now assemble ONCE into a session
-        // cache shared by the build's CV passes, the serve probes, and
-        // the returned frame (previously 3-4 full re-assemblies per
-        // query); the cached assembly's exchanges print under the
-        // InMemoryTableScan so the FINGERPRINT grows — runtime shuffles
-        // per execution dropped. q51/q72 additionally print the
-        // now-cached wideClickView under their own projection cache
+        // build+score queries assemble ONCE into a session cache shared
+        // by the build's CV passes, the serve probes, and the returned
+        // frame; the cached assembly's exchanges print under the
+        // InMemoryTableScan so the FINGERPRINT counts them while the
+        // runtime shuffles per execution do not. q51/q72 additionally
+        // print the cached wideClickView under their own projection cache
         // (nested InMemoryTableScans each print their subtree).
         "q41_config_build" -> 7, "q49_target_tags_build" -> 7,
         "q51_lstm_forecast" -> 11, "q72_lookahead_forecast" -> 21,
@@ -177,21 +177,22 @@ class PlanGuardSpec extends AnyFunSuite {
     val stale = budgets.keySet -- SparkEntry.queries.keySet
     assert(stale.isEmpty,
       s"budgets for unregistered queries: ${stale.toSeq.sorted.mkString(", ")}")
-    val over = budgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
-      val plan = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      val n = "Exchange (hash|range)partitioning".r.findAllMatchIn(plan).size
-      if (n > budget) Some(s"$name: $n shuffles (budget $budget)") else None
+    val measured = budgets.keys.toSeq.sorted.map(name =>
+      name -> ExecCounts.planShuffles(SparkEntry.queries(name)(spark, sf)))
+    val over = measured.collect {
+      case (name, n) if n > budgets(name) =>
+        s"$name: $n shuffles (budget ${budgets(name)})"
     }
     assert(over.isEmpty,
-      s"shuffle budget exceeded:\n${over.mkString("\n")}")
+      s"shuffle budget exceeded:\n${over.mkString("\n")}\n" +
+        s"(all measured: ${measured.map { case (n, g) => s"$n=$g" }.mkString(", ")})")
   }
 
   test("scan-heavy queries keep a whole-stage-codegen span in the hot path") {
-    // the r9 interpreted-HOF lesson (one sf0.1 task burning 875 s CPU)
-    // made this a named risk: an Expression without codegen support, or
-    // an RDD hop, silently drops the scan pipeline out of
-    // WholeStageCodegen and the hot loop goes interpreted/virtual. For
+    // an interpreted higher-order function once left one sf0.1 task
+    // burning 875 s CPU, so this is a named risk: an Expression without
+    // codegen support, or an RDD hop, silently drops the scan pipeline
+    // out of WholeStageCodegen and the hot loop goes interpreted. For
     // the pure scan→project/agg queries the span must exist at all.
     val scanHeavy = Seq("q01_pricing_summary", "q02_select_where",
       "q13_resample_mean", "q30_text_stats", "q33_fingerprints",

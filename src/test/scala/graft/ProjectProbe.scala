@@ -21,6 +21,7 @@ object ProjectProbe {
     val dir = args(0)
     val parallelism = if (args.length > 1) args(1).toInt else 8
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // not LocalSession: FAIR pools need the scheduler mode at context start
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,54 +1,30 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** RUNTIME shuffle-count guard (r14 verdict item 8): PlanGuardSpec's
-  * budgets are plan FINGERPRINTS — the printed plan repeats a cached
-  * assembly's exchanges under every `InMemoryTableScan` appearance, so
-  * r14's caching work RAISED several fingerprints while the shuffles a
-  * query actually executes strictly dropped. This spec pins the real
-  * quantity: the number of DISTINCT shuffle dependencies whose map
-  * stages run during a query's construction + full materialization,
-  * counted from the scheduler's own `StageInfo.shuffleDepId` (stage
-  * retries share the id, so nothing double-counts).
+/** Runtime shuffle-count guard. PlanGuardSpec's budgets are plan
+  * fingerprints: the printed plan repeats a cached assembly's exchanges
+  * under every `InMemoryTableScan` appearance, so caching can raise a
+  * fingerprint while the shuffles a query actually executes drop. This
+  * spec pins the real quantity: the number of distinct shuffle
+  * dependencies whose map stages run during a query's construction +
+  * full materialization, as [[ExecCounts]] reads them from the
+  * scheduler's own `StageInfo.shuffleDepId` (stage retries share the id,
+  * so nothing double-counts).
   *
-  * Counts are asserted on the SECOND back-to-back run: the first run
-  * fills the session caches (`SessionCache` pins are
-  * session-wide, so cross-suite ordering would otherwise decide who
-  * pays the fill), and the warm count is exactly the steady-state
-  * per-execution cost the r14 optimizations reduced. Exceeding a pinned
-  * count means a shuffle crept back in (a lost cache hit, a re-keyed
-  * join, a repartition) — raising one needs a plan review, like the
-  * PlanGuardSpec budgets. */
+  * Counts are asserted on the second back-to-back run: the first run
+  * fills the session caches (`SessionCache` pins are session-wide, so
+  * cross-suite ordering would otherwise decide who pays the fill), and
+  * the warm count is exactly the steady-state per-execution cost.
+  * Exceeding a pinned count means a shuffle crept back in (a lost cache
+  * hit, a re-keyed join, a repartition); raising one needs a plan
+  * review, like the PlanGuardSpec budgets. */
 class RuntimeShuffleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** Distinct shuffle-dep ids whose stages completed while `body` ran.
-    * The listener bus is asynchronous — poll until the set is stable
-    * for 200 ms (bounded at 10 s) before reading it. */
-  private def shufflesDuring(body: => Unit): Int = {
-    val ids = scala.collection.concurrent.TrieMap.empty[Int, Unit]
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        org.apache.spark.graftx.StageInfoAccess.shuffleDepId(s.stageInfo)
-          .foreach(id => ids.put(id, ()): Unit)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             System.nanoTime() - stableSince < 200L * 1000 * 1000) {
-        if (ids.size != last) { last = ids.size; stableSince = System.nanoTime() }
-        Thread.sleep(20)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    ids.size
-  }
+  private def shufflesDuring(body: => Unit): Int =
+    ExecCounts.during(spark.sparkContext)(body)._2.shuffles
 
   private def runWarm(name: String): Int = {
     def once(): Int = shufflesDuring {
@@ -65,22 +41,18 @@ class RuntimeShuffleSpec extends AnyFunSuite {
     // measured on the reviewed tree (local[4], shuffle.partitions=4,
     // sf0.001). Contrast with PlanGuardSpec's fingerprints: q72's
     // fingerprint is 21 (nested cached subtrees print repeatedly) while
-    // its warm runtime count is 6 — this spec pins the quantity that
-    // r14's caching actually reduced. q41 (7): one cached-assembly scan
-    // feeds build + CV + serve; what's left per execution is the CV's
+    // its warm runtime count is 6. q41 (6): one cached-assembly scan
+    // feeds build + CV + serve, and the scoring-scaler fit rides the
+    // segmented CV pass; what's left per execution is the CV's
     // segmented-stats and grouped-test aggregations, the row-index
     // chunk passes, and the score frame's final sort. q29 (5): the
     // wideClickView cache absorbs the resample+pivot exchanges; the
     // detector's CV aggregations + frame sort remain. q72 (6): the
     // q51-projection and lag-frame caches absorb their own fills on the
-    // warm run.
-    // q34 (r15): the verified-pair frame is session-cached (shared with
-    // q87), so a warm run's only shuffle is the output sort — the plan
-    // FINGERPRINT grew to 5 (cached subtree printing) while this count
-    // dropped; q87 warm = the CC loop's per-round exchanges + window
-    // over the cached pairs, with the pair pipeline fully absorbed.
-    // q41 tightened 7 → 6 after the scoring-scaler fit fused into the
-    // segmented CV pass (its single-partition agg exchange is gone)
+    // warm run. q34 (1): the verified-pair frame is session-cached
+    // (shared with q87), so a warm run's only shuffle is the output
+    // sort. q87: the CC loop's per-round exchanges + window over the
+    // cached pairs, with the pair pipeline fully absorbed.
     val pinned = Map(
       "q41_config_build" -> 6,
       "q29_anomaly_frame" -> 5,

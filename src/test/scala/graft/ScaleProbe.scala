@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only scale probe (test scope — not part of the shipped library):
   * times the auto-scaled embedding near-dup path on a given table dir,
@@ -13,13 +12,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val emb = Tables(spark, dir, "embeddings")
     val n = emb.count()

@@ -82,6 +82,59 @@ class SequenceSpec extends AnyFunSuite {
     assert(Providers.fromJsonBody(spark, "{}").collect().isEmpty)
   }
 
+  test("fromJsonBody probes both wire contracts without a single Spark job") {
+    // the null-map check and the null-ts scan are one folded probe: a
+    // single Project over the 1-row LocalRelation (no Generate), so
+    // Catalyst's ConvertToLocalRelation evaluates it at optimization
+    // time and head() submits no job at all; two sequential driver jobs
+    // per request on the serve path would be the unfolded cost.
+    // ExecCounts scopes the count to this body, so parallel suites in the
+    // shared session cannot pollute it
+    val (_, c) = ExecCounts.during(spark.sparkContext) {
+      // construction runs the probes only; no action on the result yet
+      Providers.fromJsonBody(spark,
+        """{"t1": {"2020-01-01T00:10:00Z": 2.5,
+          |        "2020-01-01T00:00:00Z": 1.5},
+          | "t2": {"2020-01-01T00:05:00Z": 9.0}}""".stripMargin)
+    }
+    assert(c.jobs == 0,
+      s"fromJsonBody's folded probe must submit no job, ran ${c.jobs}")
+    // control: the same recorder does see a body's job, so the zero
+    // above is a reading, not a blind spot
+    val (n, control) = ExecCounts.during(spark.sparkContext)(spark.range(2).count())
+    assert(n == 2)
+    assert(control.jobs >= 1, "the control job must be counted")
+  }
+
+  test("the folded probe keeps both loud contract rejects and valid-body results") {
+    import Providers.fromJsonBody
+    // non-dict / unparseable bodies: loud, named, NOT the empty frame
+    for (bad <- Seq("<html>oops</html>", "[1, 2]", "null", "{\"a\": {"))
+      assert(intercept[IllegalArgumentException](fromJsonBody(spark, bad))
+        .getMessage.contains("dict-of-dicts"), s"body: '$bad'")
+    // non-ISO key: loud, names the offending key
+    val e = intercept[IllegalArgumentException](
+      fromJsonBody(spark, "{\"t\": {\"not a ts\": 1.0}}"))
+    assert(e.getMessage.contains("non-ISO timestamp key"), e.getMessage)
+    assert(e.getMessage.contains("not a ts"), e.getMessage)
+    // a null inner series must not MASK a bad key elsewhere in the
+    // same body: flatten() returns null when any element is null, so a
+    // naive fold would silently skip this reject; the probe coalesces
+    // null series to the empty array
+    val masked = intercept[IllegalArgumentException](
+      fromJsonBody(spark, "{\"a\": null, \"b\": {\"junk\": 1}}"))
+    assert(masked.getMessage.contains("non-ISO timestamp key"),
+      masked.getMessage)
+    assert(masked.getMessage.contains("junk"), masked.getMessage)
+    // a LONE null series is dropped like an empty series, not a reject
+    assert(fromJsonBody(spark, "{\"a\": null}").collect().isEmpty)
+    // a valid body and the `{}` no-data body are unaffected
+    val got = fromJsonBody(spark,
+      "{\"t1\": {\"2020-01-01T00:00:00Z\": 1.5}}").collect()
+    assert(got.length == 1 && got(0).getDouble(2) == 1.5)
+    assert(fromJsonBody(spark, "{}").collect().isEmpty)
+  }
+
   test("nested JSON response groups columns by namespace") {
     val frame = Seq((100L, 200L, 1.5, 0.25))
       .toDF("start", "end", "model-output.tx", "total-anomaly-scaled")

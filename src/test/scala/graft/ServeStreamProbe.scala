@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only q91 scale probe (test scope — r11 verdict item 2): the
+/** Dev-only q91 scale probe (test scope): the
   * streaming SERVE path — q51's lag-feature detector applied by
   * `StreamingScoring.scoreStream` to an arriving pre-windowed stream
   * and landed through the fenced exactly-once `Forwarder` — over a
@@ -25,16 +24,10 @@ import org.apache.spark.sql.functions._
 object ServeStreamProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // recentProgress is capped (default 100); the probe's batch and
-      // state readings must cover EVERY micro-batch at any scale knob
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // recentProgress is capped (default 100); the probe's batch and
+    // state readings must cover EVERY micro-batch at any scale knob
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

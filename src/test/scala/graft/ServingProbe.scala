@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * over 6 models at capacity 2 with an 80/20 hot/cold access mix.
   * Under capacity pressure the cold models continually evict each
   * other, which drives the LruCache eviction-mid-load re-insert path
-  * under REAL contention (the round-7 race fix) while the two hot
+  * under REAL contention (its race is fixed) while the two hot
   * models must stay resident.
   *
   * Reports wall, scores/sec, disk loads vs accesses (hit rate), and
@@ -28,6 +28,7 @@ object ServingProbe {
     val capacity = if (args.length > 2) args(2).toInt else 2
     val perThread = 25
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // not LocalSession: FAIR pools need the scheduler mode at context start
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
