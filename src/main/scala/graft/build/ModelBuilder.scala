@@ -1,6 +1,7 @@
 package graft.build
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.config.{Config, ModelRegistry}
@@ -313,31 +314,50 @@ object ModelBuilder {
 
   /** Re-apply a persisted model's windowing to a raw serve-time frame
     * (M6): the saved lag feature columns are rebuilt from the base tags
-    * exactly as at fit time; row-local models pass through.
-    *
-    * Duplicate time values in a client frame are REJECTED here, the one
-    * entry every serve path crosses: the smoothing windows, the ewm
-    * recursion, and the lag-window surgery all order by the time column,
-    * and Spark gives tied rows NO defined order (unlike pandas, whose
-    * duplicate index rows keep their positional order) — the smooth-*
-    * and lag-feature outputs would silently differ run to run. Loud
-    * beats run-dependent; the check is one trivial agg on a
-    * request-sized frame. The fit path never reaches here and its
-    * assembly resamples to unique buckets by construction. */
+    * exactly as at fit time; row-local models pass through. Every serve
+    * path crosses this entry, so it is also where [[requireUniqueOrder]]
+    * rejects duplicate time values. */
   private def serveFrame(fd: graft.ml.DiffAnomaly.FittedDetector,
                          windowing: Option[(Seq[String], Int, Int)],
                          wide: DataFrame): DataFrame = {
-    val dup = wide.groupBy(col(fd.orderCol)).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"serve frame has duplicate ${fd.orderCol} values (e.g. " +
-        s"${dup.headOption.map(_.get(0)).getOrElse("")}) — windows over " +
-        "tied rows have no defined order; deduplicate or resample first")
+    requireUniqueOrder(wide, fd.orderCol)
     windowing match {
       case Some((baseTags, lb, la)) =>
         graft.ml.Windows.withLookback(wide, baseTags, fd.orderCol, lb, la)._1
       case None => wide
     }
+  }
+
+  /** Duplicate time values in a client frame are REJECTED: the
+    * smoothing windows, the ewm recursion, and the lag-window surgery all
+    * order by the time column, and Spark gives tied rows NO defined order
+    * (unlike pandas, whose duplicate index rows keep their positional
+    * order) — the smooth-* and lag-feature outputs would silently differ
+    * run to run. Loud beats run-dependent. The fit path never reaches
+    * here and its assembly resamples to unique buckets by construction.
+    *
+    * A request frame built from local rows (also behind
+    * `Serving.verifyColumns`' projection) optimizes to a `LocalRelation`:
+    * its order column is already on the driver, so it is collected by a
+    * local table scan and checked with a hash set, with no Spark job. The
+    * scoring plan folds to a `LocalRelation` too, so such a request runs
+    * no job at all, where the aggregate alone cost 2. Any other frame
+    * keeps the aggregate, so a batch frame is never collected to the
+    * driver. A null order value is a key on both paths, as in `groupBy`. */
+  private def requireUniqueOrder(wide: DataFrame, orderCol: String): Unit = {
+    val order = wide.select(col(orderCol))
+    val repeat = order.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val seen = new java.util.HashSet[Any]
+        order.collect().iterator.map(_.get(0)).find(v => !seen.add(v))
+      case _ =>
+        wide.groupBy(col(orderCol)).count()
+          .filter(col("count") > 1).limit(1).collect().headOption.map(_.get(0))
+    }
+    require(repeat.isEmpty,
+      s"serve frame has duplicate $orderCol values (e.g. " +
+        s"${repeat.getOrElse("")}) — windows over " +
+        "tied rows have no defined order; deduplicate or resample first")
   }
 
   /** §3.3 `/prediction` equivalent: model-input/output only, no targets

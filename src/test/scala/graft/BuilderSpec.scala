@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{ModelBuilder, Persistence}
+import graft.build.{ModelBuilder, Persistence, Serving}
 import graft.config.Config
 
 /** End-to-end build: YAML machine config → dataset assembly → CV fit →
@@ -129,6 +134,99 @@ class BuilderSpec extends AnyFunSuite {
       ModelBuilder.score(s"$tmp/model", dup, 600L)
     }
     assert(e.getMessage.contains("duplicate"), e.getMessage)
+  }
+
+  /** A closed-form 4-tag model over 200 x 10-min points, and 144-row
+    * request frames for it in the three forms a client can send: local
+    * rows, local rows behind `Serving.verifyColumns`, and a parquet scan.
+    * The serve guard checks the first two on the driver and the third
+    * with a Spark aggregate. */
+  private object Serve {
+    val tags = Seq("tag-a", "tag-b", "tag-c", "tag-d")
+    private val t0 = 1704067200L
+    val dir: String = {
+      val tmp = Scratch.dir("graft-serve-guard")
+      val long = (for { (tag, k) <- tags.zipWithIndex; i <- 0 until 200 }
+        yield (tag, t0 + i * 600L, 10.0 * (k + 1) + math.sin(i * 0.1 + k) * (k + 1)))
+        .toDF("tag", "epoch", "value")
+        .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
+      ModelBuilder.build(Config.parseYaml(machineYaml.replace(
+          "tag_list: [tag-a, tag-b]", tags.mkString("tag_list: [", ", ", "]"))),
+        Config.defaultGlobals, long, "tag", "ts", "value",
+        outputDir = s"$tmp/model", projectName = Some("test-project"),
+        closedForm = true).modelDir
+    }
+    private val schema = StructType(StructField("bucket_ts", LongType) +:
+      tags.map(StructField(_, DoubleType, nullable = false)))
+    /** 144 rows after the training window; `ts(i)` overrides row i's
+      * bucket_ts. */
+    def rows(ts: PartialFunction[Int, java.lang.Long] = PartialFunction.empty)
+        : java.util.List[Row] =
+      (0 until 144).map { i =>
+        val t = ts.applyOrElse(i, (_: Int) => java.lang.Long.valueOf(t0 + (200 + i) * 600L))
+        Row.fromSeq(t +: tags.indices.map(k => 10.0 * (k + 1) + math.cos(i * 0.2 + k)))
+      }.asJava
+    def local(r: java.util.List[Row]): DataFrame = spark.createDataFrame(r, schema)
+    def verified(r: java.util.List[Row]): DataFrame =
+      Serving.verifyColumns(local(r), tags, orderCol = Some("bucket_ts"))
+    def distributed(r: java.util.List[Row]): DataFrame = {
+      val path = s"${Scratch.dir("graft-serve-guard-frame")}/frame.parquet"
+      local(r).write.parquet(path)
+      spark.read.parquet(path)
+    }
+    val forms: Seq[(String, java.util.List[Row] => DataFrame)] = Seq(
+      "local" -> local, "verified" -> verified, "distributed" -> distributed)
+    val cache = new Serving.ModelCache(2)
+    val entries: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "score" -> (df => ModelBuilder.score(dir, df, 600L)),
+      "scoreCached" -> (df => ModelBuilder.scoreCached(cache, dir, df, 600L)),
+      "predict" -> (df => ModelBuilder.predict(dir, df, 600L)))
+  }
+
+  test("the duplicate-timestamp guard agrees on driver-local and distributed frames") {
+    val unique = Serve.rows()
+    // both guard paths are exercised: the local forms optimize to a
+    // LocalRelation, the parquet scan does not
+    assert(Serve.forms.map { case (_, f) =>
+      f(unique).select($"bucket_ts").queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    } == Seq(true, true, false))
+    val repeatTs = 1704067200L + 210 * 600L
+    val rejected = Seq(
+      s"(e.g. $repeatTs)" -> Serve.rows { case 100 => repeatTs },
+      "(e.g. null)" -> Serve.rows { case 7 | 90 => null })
+    // one message on both paths: the frames hold a single repeated value,
+    // so even the `e.g.` example agrees
+    for ((example, rows) <- rejected) {
+      val messages = for ((form, f) <- Serve.forms; (entry, serve) <- Serve.entries)
+        yield s"$entry on $form: " +
+          intercept[IllegalArgumentException](serve(f(rows)).collect()).getMessage
+      for (m <- messages) {
+        assert(m.contains("serve frame has duplicate bucket_ts values"), m)
+        assert(m.contains(example), m)
+      }
+      assert(messages.map(_.dropWhile(_ != ':')).distinct.size == 1, messages)
+    }
+    // the unique frame is accepted on both paths and scores identically
+    for ((entry, serve) <- Serve.entries) {
+      val scored = Serve.forms.map { case (_, f) =>
+        serve(f(unique)).collect().sortBy(_.getAs[Long]("start")).toSeq }
+      assert(scored.head.size == 144, entry)
+      assert(scored.forall(_ == scored.head), entry)
+    }
+  }
+
+  test("a driver-local request frame is scored without a Spark job") {
+    val frame = Serve.verified(Serve.rows())
+    for ((entry, serve) <- Serve.entries.filter(_._1 != "score")) {
+      val (rows, c) = ExecCounts.during(spark.sparkContext)(serve(frame).collect())
+      assert(rows.length == 144, entry)
+      assert(c.jobs == 0, s"$entry on a driver-local frame ran ${c.jobs} jobs")
+    }
+    // control: the same recorder does see a body's job, so the zero
+    // above is a reading, not a blind spot
+    val (n, control) = ExecCounts.during(spark.sparkContext)(spark.range(2).count())
+    assert(n == 2)
+    assert(control.jobs >= 1, "the control job must be counted")
   }
 
   test("a registry cache hit materializes the model in the REQUESTED dir") {
