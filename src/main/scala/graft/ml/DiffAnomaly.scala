@@ -63,23 +63,89 @@ object DiffAnomaly {
       * fit by merging segment buffers on the driver (fold train sets are
       * unions of row segments: prefixes for TimeSeriesSplit, complements
       * for KFold). Turns CV from O(n_folds) full-data train passes into
-      * O(1). Merging re-associates floating-point reductions, so values
-      * can differ from a flat fit in the last bits — same class of
-      * difference as changing the partition count. */
+      * O(1). Merging closed-form statistics re-associates floating-point
+      * reductions, so values can differ from a flat fit in the last bits
+      * — same class of difference as changing the partition count. A
+      * [[RowReconstructor]]'s row buffer merges exactly: its decode
+      * trains on the same rows, in the same order, as a per-fold fit. */
     def segPlan(xTags: Seq[String], yTags: Seq[String],
-                feature: String => Column): Option[SegPlan[Fitted]] = None
+                feature: String => Column): Option[SegPlan[_, Fitted]] = None
   }
 
-  /** Mergeable per-segment statistics: `aggs` compute one segment's
-    * buffer (one row of a `groupBy(segment)` aggregation), `fromRow`
-    * extracts it, `merge` combines two segments' buffers (must be
-    * associative), `decode` turns a merged buffer into the fitted
-    * result. */
-  case class SegPlan[A](
+  /** Mergeable per-segment buffers of type `B`: `aggs` compute one
+    * segment's buffer (one row of a `groupBy(segment)` aggregation over
+    * the CV's `__row`-indexed frame), `fromRow` extracts it,
+    * `merge` combines two segments' buffers (must be associative),
+    * `decode` turns a merged buffer into the fitted result.
+    *
+    * Closed-form families (trend, ridge, PCA, the window autoencoder and
+    * the minmax scaler) buffer named sufficient statistics ([[Stats]]).
+    * The collect-based families (MLP, LSTM) buffer the segment's rows
+    * themselves as a dense [[RowBuffer]]; its decode orders the merged
+    * rows by `__row` before training. */
+  case class SegPlan[B, A](
       aggs: Seq[Column],
-      fromRow: org.apache.spark.sql.Row => Map[String, Double],
-      merge: (Map[String, Double], Map[String, Double]) => Map[String, Double],
-      decode: Map[String, Double] => A)
+      fromRow: org.apache.spark.sql.Row => B,
+      merge: (B, B) => B,
+      decode: B => A)
+
+  /** A closed-form segment buffer: sufficient statistics by name. */
+  type Stats = Map[String, Double]
+
+  /** A segment's training rows: `rows(i)` is the `__row` index of the
+    * cells `cells(i)` = (x…, y…), null cells read as NaN. Segments
+    * arrive in any order and `collect_list` keeps no order, so the
+    * buffer is unordered until [[RowReconstructor]]'s decode sorts it. */
+  final case class RowBuffer(rows: Array[Long], cells: Array[Array[Double]])
+
+  /** A collect-based family (MLP, LSTM): it trains in-process on the
+    * per-machine matrix of (x…, y…) rows in time order (SURVEY §3.1:
+    * "fit collects the per-machine matrix"). Rows with any null or NaN
+    * cell are dropped (`na.drop("any")`, row-wise deletion — the
+    * standard NN treatment; `ModelBuilder` already drops gap rows, this
+    * covers direct callers).
+    *
+    * `fit` collects the train frame's matrix. `segPlan` is the row
+    * buffer: each segment collects its rows as `collect_list(struct(
+    * __row, array(x…, y…)))`, segments merge by concatenation, and
+    * decode sorts the merged rows by `__row`, drops the same rows and
+    * trains. A CV fold's fit therefore sees the same rows in time order
+    * whatever the partitioning, and one pass serves every fold. */
+  trait RowReconstructor extends Reconstructor {
+    /** Train on the matrix of (x…, y…) rows, in row order. */
+    private[ml] def fitRows(rows: Array[Array[Double]], xTags: Seq[String],
+                            yTags: Seq[String], feature: String => Column): Fitted
+
+    private def cellCols(xTags: Seq[String], yTags: Seq[String],
+                         feature: String => Column): Seq[Column] =
+      (xTags ++ yTags).map(t => feature(t).cast("double"))
+
+    final def fit(train: DataFrame, xTags: Seq[String], yTags: Seq[String],
+                  feature: String => Column): Fitted =
+      fitRows(train.select(cellCols(xTags, yTags, feature): _*)
+        .na.drop("any").collect()
+        .map(r => Array.tabulate(r.length)(r.getDouble)), xTags, yTags, feature)
+
+    override def segPlan(xTags: Seq[String], yTags: Seq[String],
+                         feature: String => Column)
+        : Option[SegPlan[RowBuffer, Fitted]] = Some(SegPlan[RowBuffer, Fitted](
+      Seq(collect_list(struct(col("__row"),
+        array(cellCols(xTags, yTags, feature): _*))).as("__rowbuf")),
+      row => {
+        val items = row.getList[org.apache.spark.sql.Row](row.fieldIndex("__rowbuf"))
+        RowBuffer(Array.tabulate(items.size)(i => items.get(i).getLong(0)),
+          Array.tabulate(items.size) { i =>
+            val cells = items.get(i).getList[java.lang.Double](1)
+            Array.tabulate(cells.size) { j =>
+              val v = cells.get(j)
+              if (v == null) Double.NaN else v.doubleValue
+            }
+          })
+      },
+      (a, b) => RowBuffer(a.rows ++ b.rows, a.cells ++ b.cells),
+      buf => fitRows(buf.rows.indices.sortBy(buf.rows(_)).iterator
+        .map(buf.cells).filterNot(_.exists(_.isNaN)).toArray, xTags, yTags, feature)))
+  }
 
   trait Fitted {
     /** Column expression reconstructing `tag` from the current row. */
@@ -121,8 +187,8 @@ object DiffAnomaly {
       * co-moments merge with the standard pairwise (Chan et al.) update,
       * the same formula Spark uses to combine partition buffers. */
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
-                         feature: String => Column): Option[SegPlan[Fitted]] =
-      Some(SegPlan(
+                         feature: String => Column): Option[SegPlan[Stats, Fitted]] =
+      Some(SegPlan[Stats, Fitted](
         count(lit(1)).cast("double").as("tr_n") +:
           avg(x).as("tr_mx") +: var_pop(x).as("tr_vx") +:
           yTags.flatMap(t => Seq(
@@ -222,9 +288,9 @@ object DiffAnomaly {
     }
     /** Segmented fit: Gram-product sums merge by plain addition. */
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
-                         feature: String => Column): Option[SegPlan[Fitted]] = {
+                         feature: String => Column): Option[SegPlan[Stats, Fitted]] = {
       val (aggs, names) = gramPlan(xTags, yTags, feature)
-      Some(SegPlan(
+      Some(SegPlan[Stats, Fitted](
         aggs,
         row => names.map(n => n -> aggCell(row, n)).toMap,
         (a, b) => names.map(n => n -> (a(n) + b(n))).toMap,
@@ -338,14 +404,14 @@ object DiffAnomaly {
       * means and co-moments merge with the pairwise (Chan et al.) update
       * — the same combine Spark's covar_pop uses across partitions. */
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
-                         feature: String => Column): Option[SegPlan[Fitted]] = {
+                         feature: String => Column): Option[SegPlan[Stats, Fitted]] = {
       require(xTags == yTags,
         "PCA reconstruction is an autoencoder: target_tag_list must equal tag_list")
       val tags = xTags
       val m = tags.size
       val pairs = for { i <- 0 until m; j <- i until m } yield (i, j)
       val (aggs, _) = aggPlan(xTags, yTags, feature).get
-      Some(SegPlan(
+      Some(SegPlan[Stats, Fitted](
         count(lit(1)).cast("double").as("pc_n") +: aggs,
         row => {
           val n = row.getAs[Double]("pc_n")
@@ -538,7 +604,7 @@ object DiffAnomaly {
         .map { case (aggs, dec) => (aggs, dec.andThen(adapt(xTags, feature))) }
     }
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
-                         feature: String => Column): Option[SegPlan[Fitted]] = {
+                         feature: String => Column): Option[SegPlan[Stats, Fitted]] = {
       validate(xTags, yTags)
       inner(xTags).segPlan(xTags, xTags, feature)
         .map(sp => sp.copy(decode = sp.decode.andThen(adapt(xTags, feature))))
@@ -600,14 +666,21 @@ object DiffAnomaly {
     * rolling values are NaN; max skips them → only full frames count).
     * Then refit model+scaler on the full series.
     *
-    * When the base model and scaler expose [[SegPlan]]s (all built-ins
-    * do), the whole CV runs as TWO distributed passes regardless of
-    * nSplits: one segmented stats pass (fold train sets are prefixes =
-    * unions of segments, merged on the driver) and one grouped test pass
-    * (every fold's rolling thresholds and metrics, grouped by fold).
-    * Otherwise (preprocessing pipelines, robust error scaler) it falls
-    * back to the per-fold loop — 2 passes per fold. */
-  /** @param scoringScalerKind DEFERRED scoring scaler (guide §1.2):
+    * When the base model and the error scaler expose [[SegPlan]]s, the
+    * whole CV runs as TWO distributed passes regardless of nSplits: one
+    * segmented stats pass (fold train sets are prefixes = unions of
+    * segments, merged in-process) and one grouped test pass (every
+    * fold's rolling thresholds and metrics, grouped by fold). Every
+    * built-in family has one: the closed forms (trend, ridge, PCA,
+    * window autoencoder) merge statistics, the MLP and LSTM families
+    * merge their training rows ([[RowReconstructor]]) and train
+    * in-process once per fold. The per-fold loop — a train pass (two for a
+    * model without an `aggPlan`) and a test pass per fold, then the
+    * final fit's — remains for preprocessing pipelines
+    * (`Pipeline[MinMaxScaler, …]`: chained stage fits do not merge), the
+    * robust error scaler and frames with a null cell.
+    *
+    * @param scoringScalerKind DEFERRED scoring scaler:
     *   fit the fold-metric scaler of this kind over the full frame
     *   INSIDE the CV passes instead of the caller paying a separate
     *   full-frame aggregation job first. On the fused path with a
@@ -637,9 +710,9 @@ object DiffAnomaly {
     // already holds (ModelBuilder's lease) or cached itself is shared,
     // never yanked: closing this lease only returns our reference.
     val lease = graft.SessionCache.acquire(wide)
-    // the row count rides the indexing's own bounds aggregation — the
-    // previous separate count() was a second full pass for a number the
-    // indexing had already computed (guide §1.2)
+    // the row count rides the indexing's own bounds aggregation: a
+    // separate count() would be a second full pass for a number the
+    // indexing has already computed
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(wide, Seq(col(orderCol)))
     val indexedLease = graft.SessionCache.acquire(indexed0)
@@ -741,7 +814,7 @@ object DiffAnomaly {
         (res, fm, fs)
       }
 
-      def fusedPath(mp: SegPlan[Fitted], sp: SegPlan[FittedScaler])
+      def fusedPath[MB, SB](mp: SegPlan[MB, Fitted], sp: SegPlan[SB, FittedScaler])
           : (Seq[(CrossValidate.Fold, String => Double)], Fitted, FittedScaler) = {
           // ---- segments bounded by the fold TRAIN ends (for plain
           // folds trainEnd == testStart; windowed folds leave a gap of
@@ -771,8 +844,8 @@ object DiffAnomaly {
               checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
           }
           if (!clean) return loopPath()
-          val mBufs = segRows.map(mp.fromRow)
-          val sBufs = segRows.map(sp.fromRow)
+          val mBufs = segRows.toSeq.map(mp.fromRow)
+          val sBufs = segRows.toSeq.map(sp.fromRow)
           var mAcc = mBufs(0)
           var sAcc = sBufs(0)
           val fits = folds.map { f =>
@@ -926,7 +999,8 @@ object DiffAnomaly {
               y.map(t => abs(qc(t) - m.predictCol(t)).as(s"__mae_$t"))): _*)
         }.reduce(_ unionByName _), None)
 
-      def fusedScattered(mp: SegPlan[Fitted], sp: SegPlan[FittedScaler])
+      def fusedScattered[MB, SB](mp: SegPlan[MB, Fitted],
+                                 sp: SegPlan[SB, FittedScaler])
           : (DataFrame, Option[(Fitted, FittedScaler)]) = {
         val foldOf = folds.tail.foldLeft(
           when(col("__row") < folds.head.testEnd, lit(0))) {

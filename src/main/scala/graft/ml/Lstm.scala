@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
+import graft.ml.DiffAnomaly.{Fitted, RowReconstructor}
 
 /** The in-house recurrent cell (SURVEY M6/M10; ref: `KerasLSTMForecast` /
   * `KerasLSTMAutoEncoder`, `gordo/machine/model/models.py:463-710`,
@@ -15,9 +15,8 @@ import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
   * (SURVEY §3.1), inputs/targets standardize, weights init
   * Xavier-uniform from a FIXED seed, and full-batch Adam runs a fixed
   * number of epochs — bit-deterministic across runs and cluster layouts.
-  * This closes the round-4 fidelity gap: `lstm_*` kinds train a real
-  * recurrent cell (gates over a time-ordered sequence, shared weights
-  * across steps), not a window-flattened MLP.
+  * `lstm_*` kinds train a real recurrent cell (gates over a time-ordered
+  * sequence, shared weights across steps), not a window-flattened MLP.
   *
   * The sequence view reassembles from the builder's lag feature columns
   * (`Windows.withLookback` names, `<tag>__lag<k>`): step order is oldest
@@ -29,6 +28,10 @@ import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
   * travel in the task closure (KBs), the forward pass is one JVM
   * function per row, and per-target predictions share the forward array
   * through codegen subexpression elimination.
+  *
+  * Cross-validation takes the fused path like [[Mlp]]: as a
+  * [[DiffAnomaly.RowReconstructor]], one segmented pass collects the
+  * rows and every fold trains on its merged, time-ordered rows.
   */
 object Lstm {
 
@@ -151,14 +154,11 @@ object Lstm {
     */
   class LstmReconstructor(units: Int = 0, seed: Long = 0L,
                           epochs: Int = 200, lr: Double = 0.02)
-      extends Reconstructor {
+      extends RowReconstructor {
     def impl: String = "lstm"
 
-    def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-            yTags: Seq[String], feature: String => Column): Fitted = {
-      val cols = xTags.map(t => feature(t).cast("double")) ++
-        yTags.map(t => feature(t).cast("double"))
-      val rows = train.select(cols: _*).na.drop("any").collect()
+    private[ml] def fitRows(rows: Array[Array[Double]], xTags: Seq[String],
+                            yTags: Seq[String], feature: String => Column): Fitted = {
       require(rows.nonEmpty, "LSTM fit on an empty (or all-null) frame")
       val n = rows.length
       val nin = xTags.size
@@ -168,8 +168,8 @@ object Lstm {
       val nfeat = seqIdx.head.length
       val nu = if (units > 0) units else math.max(4, 2 * nfeat)
 
-      val x = Array.tabulate(n, nin)((r, i) => rows(r).getDouble(i))
-      val yv = Array.tabulate(n, nout)((r, j) => rows(r).getDouble(nin + j))
+      val x = Array.tabulate(n, nin)((r, i) => rows(r)(i))
+      val yv = Array.tabulate(n, nout)((r, j) => rows(r)(nin + j))
       def stats(m: Array[Array[Double]], d: Int): (Array[Double], Array[Double]) = {
         val mu = Array.tabulate(d)(i => m.map(_(i)).sum / n)
         val sd = Array.tabulate(d) { i =>

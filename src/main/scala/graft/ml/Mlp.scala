@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
+import graft.ml.DiffAnomaly.{Fitted, RowReconstructor}
 
 /** The in-house feedforward autoencoder (SURVEY M4/M5/M9, §7.3(b); ref:
   * `gordo/machine/model/factories/feedforward_autoencoder.py:16-251`,
@@ -29,9 +29,12 @@ import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
   * elimination evaluates the network once per row however many targets
   * are selected.
   *
-  * No aggPlan/segPlan: an iterative fit has no mergeable sufficient
-  * statistics, so CV uses the per-fold loop — sklearn's clone-and-refit
-  * semantics per fold, exactly like the reference's cross_validate.
+  * No aggPlan: an iterative fit has no mergeable sufficient statistics.
+  * It is a [[DiffAnomaly.RowReconstructor]]: the CV's one segmented
+  * pass collects every segment's rows, and each fold (then the final
+  * fit) trains from scratch on the merged rows in time order —
+  * sklearn's clone-and-refit semantics per fold, exactly like the
+  * reference's cross_validate, without a collect per fold.
   */
 object Mlp {
 
@@ -148,7 +151,7 @@ object Mlp {
     */
   class MlpReconstructor(encodingDims: Seq[Int], seed: Long = 0L,
                          epochs: Int = 300, lr: Double = 0.01)
-      extends Reconstructor {
+      extends RowReconstructor {
     def impl: String = "mlp"
     require(encodingDims.nonEmpty && encodingDims.forall(_ >= 1),
       s"encoding dims must be positive: $encodingDims")
@@ -163,21 +166,14 @@ object Mlp {
       (hidden, (hidden.map(_ => ActTanh) :+ ActLinear).toArray)
     }
 
-    def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-            yTags: Seq[String], feature: String => Column): Fitted = {
-      // the single collect of the per-machine matrix (SURVEY §3.1) —
-      // X and y columns in one pass. Rows with any null are dropped
-      // (row-wise deletion — the standard NN treatment; the builder path
-      // already drops gap rows, this covers direct callers)
-      val cols = xTags.map(t => feature(t).cast("double")) ++
-        yTags.map(t => feature(t).cast("double"))
-      val rows = train.select(cols: _*).na.drop("any").collect()
+    private[ml] def fitRows(rows: Array[Array[Double]], xTags: Seq[String],
+                            yTags: Seq[String], feature: String => Column): Fitted = {
       require(rows.nonEmpty, "MLP fit on an empty (or all-null) frame")
       val n = rows.length
       val nin = xTags.size
       val nout = yTags.size
-      val x = Array.tabulate(n, nin)((r, i) => rows(r).getDouble(i))
-      val yv = Array.tabulate(n, nout)((r, j) => rows(r).getDouble(nin + j))
+      val x = Array.tabulate(n, nin)((r, i) => rows(r)(i))
+      val yv = Array.tabulate(n, nout)((r, j) => rows(r)(nin + j))
 
       def stats(m: Array[Array[Double]], d: Int): (Array[Double], Array[Double]) = {
         val mu = Array.tabulate(d)(i => m.map(_(i)).sum / n)
@@ -378,13 +374,13 @@ object Mlp {
   class AutoReconstructor(seed: Long = 0L, epochs: Int = 300,
                           lr: Double = 0.01,
                           compressionFactor: Double = 0.5,
-                          encodingLayers: Int = 2) extends Reconstructor {
+                          encodingLayers: Int = 2) extends RowReconstructor {
     def impl: String = "mlp"
-    def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-            yTags: Seq[String], feature: String => Column): Fitted =
+    private[ml] def fitRows(rows: Array[Array[Double]], xTags: Seq[String],
+                            yTags: Seq[String], feature: String => Column): Fitted =
       new MlpReconstructor(
         Windows.hourglassDims(compressionFactor, encodingLayers,
           math.max(2, xTags.size)), seed, epochs, lr)
-        .fit(train, xTags, yTags, feature)
+        .fitRows(rows, xTags, yTags, feature)
   }
 }

@@ -74,10 +74,10 @@ object Scalers {
     * mergeable sufficient statistic (exact percentiles don't compose) —
     * callers fall back to per-fold fits. */
   def segPlan(kind: String, cols: Seq[String])
-      : Option[DiffAnomaly.SegPlan[FittedScaler]] = kind match {
+      : Option[DiffAnomaly.SegPlan[DiffAnomaly.Stats, FittedScaler]] = kind match {
     case "minmax" =>
       val (aggs, _) = aggPlan("minmax", cols)
-      Some(DiffAnomaly.SegPlan[FittedScaler](
+      Some(DiffAnomaly.SegPlan[DiffAnomaly.Stats, FittedScaler](
         aggs,
         row => cols.flatMap(c => Seq(
           s"min_$c" -> DiffAnomaly.aggCell(row, s"__min_$c"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.DiffAnomaly
+import graft.ml.{DiffAnomaly, Lstm, Mlp}
 import graft.ml.DiffAnomaly.{RidgeReconstructor, TrendReconstructor}
 
 class DiffAnomalySpec extends AnyFunSuite {
@@ -125,18 +125,56 @@ class DiffAnomalySpec extends AnyFunSuite {
     assert(!kfcv.thresholds.aggregateThreshold.isNaN)
   }
 
+  /** Wrapper hiding segPlan: forces the per-fold fallback loop. */
+  private class NoSeg(inner: DiffAnomaly.Reconstructor) extends DiffAnomaly.Reconstructor {
+    def impl: String = inner.impl
+    def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
+            yTags: Seq[String],
+            feature: String => org.apache.spark.sql.Column): DiffAnomaly.Fitted =
+      inner.fit(train, xTags, yTags, feature)
+    override def aggPlan(xTags: Seq[String], yTags: Seq[String],
+                         feature: String => org.apache.spark.sql.Column) =
+      inner.aggPlan(xTags, yTags, feature)
+  }
+
+  /** The families that collect their training rows (few epochs: the
+    * tests compare paths, not model quality). */
+  private def collectBased: Seq[DiffAnomaly.Reconstructor] = Seq(
+    new Mlp.AutoReconstructor(epochs = 30),
+    new Mlp.RawSpecReconstructor(Seq((3, "tanh"), (2, "linear")), epochs = 30),
+    new Lstm.LstmReconstructor(epochs = 20))
+
+  /** Exact equality of everything a fit produces (NaN equals NaN). */
+  private def assertSameDetector(a: DiffAnomaly.FittedDetector,
+                                 b: DiffAnomaly.FittedDetector, what: String): Unit = {
+    def same(x: Seq[Double], y: Seq[Double]): Boolean =
+      x.size == y.size &&
+        x.zip(y).forall { case (u, v) => java.lang.Double.compare(u, v) == 0 }
+    def sameMap(x: Map[String, Double], y: Map[String, Double]): Boolean =
+      x.keySet == y.keySet && x.keys.forall(k => same(Seq(x(k)), Seq(y(k))))
+    val (ta, tb) = (a.thresholds, b.thresholds)
+    assert(sameMap(a.model.params, b.model.params), s"$what: params")
+    assert(a.scaler.kind == b.scaler.kind && a.scaler.stats.keySet == b.scaler.stats.keySet &&
+      a.scaler.stats.forall { case (k, (c, sc)) =>
+        same(Seq(c, sc), Seq(b.scaler.stats(k)._1, b.scaler.stats(k)._2)) },
+      s"$what: error scaler ${a.scaler} vs ${b.scaler}")
+    assert(same(Seq(ta.aggregateThreshold), Seq(tb.aggregateThreshold)),
+      s"$what: aggregate threshold ${ta.aggregateThreshold} vs ${tb.aggregateThreshold}")
+    assert(sameMap(ta.featureThresholds, tb.featureThresholds),
+      s"$what: feature thresholds ${ta.featureThresholds} vs ${tb.featureThresholds}")
+    assert(same(ta.smoothAggregateThreshold.toSeq, tb.smoothAggregateThreshold.toSeq),
+      s"$what: smooth aggregate threshold")
+    assert(ta.smoothFeatureThresholds.isDefined == tb.smoothFeatureThresholds.isDefined &&
+      ta.smoothFeatureThresholds.forall(sameMap(_, tb.smoothFeatureThresholds.get)),
+      s"$what: smooth feature thresholds")
+    assert(sameMap(ta.perFoldAggregate, tb.perFoldAggregate),
+      s"$what: per-fold aggregates ${ta.perFoldAggregate} vs ${tb.perFoldAggregate}")
+    assert(a.foldScores.keySet == b.foldScores.keySet &&
+      a.foldScores.forall { case (k, v) => same(v, b.foldScores(k)) },
+      s"$what: fold scores ${a.foldScores} vs ${b.foldScores}")
+  }
+
   test("fused segmented CV matches the per-fold loop for every reconstructor") {
-    // wrapper hiding segPlan: forces the per-fold fallback loop
-    class NoSeg(inner: DiffAnomaly.Reconstructor) extends DiffAnomaly.Reconstructor {
-      def impl: String = inner.impl
-      def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-              yTags: Seq[String],
-              feature: String => org.apache.spark.sql.Column): DiffAnomaly.Fitted =
-        inner.fit(train, xTags, yTags, feature)
-      override def aggPlan(xTags: Seq[String], yTags: Seq[String],
-                           feature: String => org.apache.spark.sql.Column) =
-        inner.aggPlan(xTags, yTags, feature)
-    }
     // noisy series so thresholds/metrics are non-trivial
     val noisy = (0 until 60).map { i =>
       (i * 600L, 10.0 + i + math.sin(i * 0.9) * 3.0,
@@ -189,6 +227,21 @@ class DiffAnomalySpec extends AnyFunSuite {
         assert(close(fusedK.thresholds.featureThresholds(t),
           loopedK.thresholds.featureThresholds(t)), s"kfcv $t: $base")
     }
+    // collect-based families: every fold trains on the same rows in the
+    // same order as the loop's per-fold collect, so the results are
+    // EXACTLY equal, not just close
+    for (base <- collectBased) {
+      val fused = DiffAnomaly.fit(noisy, Seq("tx", "ty"), "bucket_ts", base,
+        nSplits = 3, window = Some(12), foldMetrics = metrics)
+      val looped = DiffAnomaly.fit(noisy, Seq("tx", "ty"), "bucket_ts",
+        new NoSeg(base), nSplits = 3, window = Some(12), foldMetrics = metrics)
+      assertSameDetector(fused, looped, s"fit ${base.getClass.getSimpleName}")
+      val fusedK = DiffAnomaly.fitKfcv(noisy, Seq("tx", "ty"), "bucket_ts",
+        base, nSplits = 5, window = 12)
+      val loopedK = DiffAnomaly.fitKfcv(noisy, Seq("tx", "ty"), "bucket_ts",
+        new NoSeg(base), nSplits = 5, window = 12)
+      assertSameDetector(fusedK, loopedK, s"kfcv ${base.getClass.getSimpleName}")
+    }
     // windowed fold geometry (foldOffset > 0): folds computed on the
     // raw count leave lag-context GAP rows between folds — the fused
     // path's segment boundaries and test membership must match the
@@ -239,16 +292,6 @@ class DiffAnomalySpec extends AnyFunSuite {
         if (i == 7) null.asInstanceOf[java.lang.Double]
         else java.lang.Double.valueOf(25.0 + 2.0 * i + math.cos(i * 1.3) * 4.0))
     }.toDF("bucket_ts", "tx", "ty")
-    class NoSeg(inner: DiffAnomaly.Reconstructor) extends DiffAnomaly.Reconstructor {
-      def impl: String = inner.impl
-      def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-              yTags: Seq[String],
-              feature: String => org.apache.spark.sql.Column): DiffAnomaly.Fitted =
-        inner.fit(train, xTags, yTags, feature)
-      override def aggPlan(xTags: Seq[String], yTags: Seq[String],
-                           feature: String => org.apache.spark.sql.Column) =
-        inner.aggPlan(xTags, yTags, feature)
-    }
     val base = new TrendReconstructor("bucket_ts", 0L)
     val a = DiffAnomaly.fit(withNull, Seq("tx", "ty"), "bucket_ts", base,
       nSplits = 3)
@@ -257,6 +300,13 @@ class DiffAnomalySpec extends AnyFunSuite {
     assert(a.thresholds.aggregateThreshold == b.thresholds.aggregateThreshold)
     assert(a.thresholds.featureThresholds == b.thresholds.featureThresholds)
     assert(a.model.params == b.model.params)
+    // the collect-based families' row buffer takes the same fallback
+    for (base <- collectBased)
+      assertSameDetector(
+        DiffAnomaly.fit(withNull, Seq("tx", "ty"), "bucket_ts", base, nSplits = 3),
+        DiffAnomaly.fit(withNull, Seq("tx", "ty"), "bucket_ts", new NoSeg(base),
+          nSplits = 3),
+        s"null ${base.getClass.getSimpleName}")
     val ak = DiffAnomaly.fitKfcv(withNull, Seq("tx", "ty"), "bucket_ts",
       base, nSplits = 5)
     val bk = DiffAnomaly.fitKfcv(withNull, Seq("tx", "ty"), "bucket_ts",
@@ -269,6 +319,43 @@ class DiffAnomalySpec extends AnyFunSuite {
     assert(ak.thresholds.aggregateThreshold.isNaN,
       "this fixture is SHORTER than the kfcv window; a non-NaN " +
         "threshold means the null-percentile guard regressed")
+  }
+
+  test("fused CV of a collect-based family drops the loop's NaN rows") {
+    // NaN passes the null check (count() counts it), so the fused path
+    // runs; its decode must drop the rows the loop's na.drop drops — a
+    // NaN in fold 0's train span and one in fold 1's test span
+    val withNaN = (0 until 60).map { i =>
+      (i * 600L, 10.0 + i + math.sin(i * 0.9) * 3.0,
+        if (i == 7 || i == 40) Double.NaN
+        else 25.0 + 2.0 * i + math.cos(i * 1.3) * 4.0)
+    }.toDF("bucket_ts", "tx", "ty")
+    for (base <- collectBased) {
+      val fused = DiffAnomaly.fit(withNaN, Seq("tx", "ty"), "bucket_ts", base,
+        nSplits = 3)
+      val looped = DiffAnomaly.fit(withNaN, Seq("tx", "ty"), "bucket_ts",
+        new NoSeg(base), nSplits = 3)
+      assert(fused.model.params.values.forall(!_.isNaN),
+        s"NaN rows reached training: ${base.getClass.getSimpleName}")
+      assertSameDetector(fused, looped, s"NaN ${base.getClass.getSimpleName}")
+    }
+  }
+
+  test("an MLP fit runs the same number of jobs whatever the fold count") {
+    // the fused path runs one segmented pass and one test pass however
+    // many folds there are; a per-fold loop adds passes with every fold
+    val series = (0 until 120).map { i =>
+      (i * 600L, 10.0 + i + math.sin(i * 0.9) * 3.0,
+        25.0 + 2.0 * i + math.cos(i * 1.3) * 4.0)
+    }.toDF("bucket_ts", "tx", "ty")
+    def jobsAt(nSplits: Int): Int =
+      ExecCounts.during(spark.sparkContext) {
+        DiffAnomaly.fit(series, Seq("tx", "ty"), "bucket_ts",
+          new Mlp.AutoReconstructor(epochs = 10), nSplits = nSplits)
+      }._2.jobs
+    val (at3, at5) = (jobsAt(3), jobsAt(5))
+    assert(at3 > 0, "the counter saw no job")
+    assert(at5 == at3, s"jobs grew with the fold count: $at3 at 3 folds, $at5 at 5")
   }
 
   test("kfcv with more splits than rows tolerates empty folds") {

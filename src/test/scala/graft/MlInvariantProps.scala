@@ -373,12 +373,14 @@ object MlInvariantProps extends Properties("graft.ml") {
                     model: graft.ml.DiffAnomaly.Reconstructor): Prop = {
         val Some((aggs, dec)) = model.aggPlan(tags, tags, feat)
         val flat = dec(df.agg(aggs.head, aggs.tail: _*).head()).params
-        val Some(sp) = model.segPlan(tags, tags, feat)
-        val bufs = df.groupBy($"__seg").agg(sp.aggs.head, sp.aggs.tail: _*)
-          .collect().map(sp.fromRow)
-        val merged = sp.decode(bufs.reduce(sp.merge)).params
+        val merged = mergedFit(model.segPlan(tags, tags, feat).get).params
         Prop(tolOk(flat, merged)) :| s"$name: flat=$flat merged=$merged"
       }
+      // a Reconstructor's plan hides its buffer type: bind it here
+      def mergedFit[B](sp: graft.ml.DiffAnomaly.SegPlan[B,
+          graft.ml.DiffAnomaly.Fitted]): graft.ml.DiffAnomaly.Fitted =
+        sp.decode(df.groupBy($"__seg").agg(sp.aggs.head, sp.aggs.tail: _*)
+          .collect().toSeq.map(sp.fromRow).reduce(sp.merge))
       val scalerProp = {
         val (aggs, dec) = Scalers.aggPlan("minmax", tags)
         val flat = dec(df.agg(aggs.head, aggs.tail: _*).head()).stats

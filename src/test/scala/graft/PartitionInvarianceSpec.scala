@@ -52,4 +52,36 @@ class PartitionInvarianceSpec extends AnyFunSuite {
         s"rows moved with partitioning, e.g.: ${diff.mkString("; ")}"
       })
     }
+
+  test("an MLP fit on more than 4096 rows is invariant to the shuffle partition count (2 vs 7)") {
+    // past 4096 rows the row index is value-chunked and the chunks are
+    // hash-partitioned, so any collect of the training rows arrives in
+    // a partition-dependent order; the fit must train in time order
+    import spark.implicits._
+    val series = (0 until 4500).map { i =>
+      (i * 600L, 10.0 + math.sin(i * 0.01) * 5.0 + math.sin(i * 0.9),
+        25.0 + math.cos(i * 0.013) * 4.0 + math.cos(i * 1.3))
+    }.toDF("bucket_ts", "tx", "ty")
+    def fitAt(parts: String) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      try graft.ml.DiffAnomaly.fit(series, Seq("tx", "ty"), "bucket_ts",
+        new graft.ml.Mlp.AutoReconstructor(epochs = 20), nSplits = 3)
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val (a, b) = (fitAt("2"), fitAt("7"))
+    val moved = a.model.params.keys.filter(k =>
+      !b.model.params.get(k).contains(a.model.params(k))).toSeq.sorted
+    assert(a.model.params.keySet == b.model.params.keySet && moved.isEmpty,
+      s"MLP params moved with partitioning: ${moved.size} of " +
+        s"${a.model.params.size}, e.g. ${moved.take(3).map(k =>
+          s"$k ${a.model.params(k)} vs ${b.model.params.get(k)}").mkString("; ")}")
+    assert(a.thresholds.aggregateThreshold == b.thresholds.aggregateThreshold,
+      s"aggregate threshold moved: ${a.thresholds.aggregateThreshold} vs " +
+        s"${b.thresholds.aggregateThreshold}")
+    assert(a.thresholds.featureThresholds == b.thresholds.featureThresholds,
+      "feature thresholds moved with partitioning")
+    assert(a.thresholds.perFoldAggregate == b.thresholds.perFoldAggregate,
+      "per-fold aggregates moved with partitioning")
+  }
 }
