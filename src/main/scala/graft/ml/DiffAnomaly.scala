@@ -105,7 +105,8 @@ object DiffAnomaly {
     * standard NN treatment; `ModelBuilder` already drops gap rows, this
     * covers direct callers).
     *
-    * `fit` collects the train frame's matrix. `segPlan` is the row
+    * `fit` collects the train frame's matrix, in `__row` order when the
+    * frame carries that index. `segPlan` is the row
     * buffer: each segment collects its rows as `collect_list(struct(
     * __row, array(x…, y…)))`, segments merge by concatenation, and
     * decode sorts the merged rows by `__row`, drops the same rows and
@@ -120,11 +121,19 @@ object DiffAnomaly {
                          feature: String => Column): Seq[Column] =
       (xTags ++ yTags).map(t => feature(t).cast("double"))
 
+    /** A frame carrying the CV's `__row` is collected with it and sorted
+      * by it, the same rule as the row buffer's decode: past 4096 rows
+      * the index is value-chunked and a plain collect arrives in
+      * partition order. */
     final def fit(train: DataFrame, xTags: Seq[String], yTags: Seq[String],
-                  feature: String => Column): Fitted =
-      fitRows(train.select(cellCols(xTags, yTags, feature): _*)
-        .na.drop("any").collect()
-        .map(r => Array.tabulate(r.length)(r.getDouble)), xTags, yTags, feature)
+                  feature: String => Column): Fitted = {
+      val key = if (train.columns.contains("__row")) Seq(col("__row")) else Nil
+      val cells = cellCols(xTags, yTags, feature)
+      val rows = train.select(key ++ cells: _*).na.drop("any").collect()
+      val ordered = if (key.isEmpty) rows else rows.sortBy(_.getLong(0))
+      fitRows(ordered.map(r => Array.tabulate(cells.size)(i => r.getDouble(key.size + i))),
+        xTags, yTags, feature)
+    }
 
     override def segPlan(xTags: Seq[String], yTags: Seq[String],
                          feature: String => Column)

@@ -12,7 +12,12 @@ import org.apache.spark.sql.SparkSession
   * job pays one state-store commit (and its WAL/maintenance work) per
   * partition per stateful operator, so an oversized count multiplies
   * fixed costs on small streams, while an undersized one caps the
-  * key-space parallelism forever (the checkpoint pins it).
+  * key-space parallelism forever (the checkpoint pins it). Each store
+  * commit writes two checkpoint files (the delta and Spark's
+  * `.delta.crc`). Measured on a 4-vCPU box with 2-row state, one store
+  * commit costs ~55 ms through Spark's default Hadoop `FileContext`
+  * manager and ~1 ms through [[LocalCheckpointFileManager]], which
+  * [[Forwarder.toParquet]] installs for `file:` checkpoints.
   *
   * [[sessionFor]] reads `graft.streaming.statePartitions` from the
   * session conf and, when set, returns a NEW session (shared

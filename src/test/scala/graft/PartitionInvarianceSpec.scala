@@ -53,13 +53,18 @@ class PartitionInvarianceSpec extends AnyFunSuite {
       })
     }
 
-  test("an MLP fit on more than 4096 rows is invariant to the shuffle partition count (2 vs 7)") {
-    // past 4096 rows the row index is value-chunked and the chunks are
-    // hash-partitioned, so any collect of the training rows arrives in
-    // a partition-dependent order; the fit must train in time order
+  /** Fit an MLP on 4,500 rows under 2 and then 7 shuffle partitions;
+    * params and every threshold must be exactly equal. Past 4096 rows
+    * the row index is value-chunked and the chunks are hash-partitioned,
+    * so any collect of the training rows arrives in a partition-dependent
+    * order; the fit must train in time order. A null cell sends the fit
+    * down the per-fold loop instead of the fused segmented pass. */
+  private def assertMlpFitInvariant(nullAt: Option[Int]): Unit = {
     import spark.implicits._
     val series = (0 until 4500).map { i =>
-      (i * 600L, 10.0 + math.sin(i * 0.01) * 5.0 + math.sin(i * 0.9),
+      (i * 600L,
+        Option(10.0 + math.sin(i * 0.01) * 5.0 + math.sin(i * 0.9))
+          .filterNot(_ => nullAt.contains(i)),
         25.0 + math.cos(i * 0.013) * 4.0 + math.cos(i * 1.3))
     }.toDF("bucket_ts", "tx", "ty")
     def fitAt(parts: String) = {
@@ -83,5 +88,13 @@ class PartitionInvarianceSpec extends AnyFunSuite {
       "feature thresholds moved with partitioning")
     assert(a.thresholds.perFoldAggregate == b.thresholds.perFoldAggregate,
       "per-fold aggregates moved with partitioning")
+  }
+
+  test("an MLP fit on more than 4096 rows is invariant to the shuffle partition count (2 vs 7)") {
+    assertMlpFitInvariant(nullAt = None)
+  }
+
+  test("a per-fold-loop MLP fit (one null cell) on more than 4096 rows is invariant to the shuffle partition count (2 vs 7)") {
+    assertMlpFitInvariant(nullAt = Some(2222))
   }
 }

@@ -14,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoints. Any other call site would bypass the reference count and
   * could drop a cache entry a plan-identical sibling still uses.
   *
+  * Streaming sinks: [[graft.streaming.Forwarder]] is the only library
+  * code that starts a `writeStream`, so every engine stream writes its
+  * checkpoint through the manager Forwarder installs.
+  *
   * Spark execution counts: [[ExecCounts]] is the only code in main or
   * test sources that registers a scheduler listener, so every job, stage
   * and shuffle count is scoped and drained the same way. */
@@ -49,6 +53,15 @@ class StorageOwnershipSpec extends AnyFunSuite {
       Set("SessionCache.scala", "CheckpointBridge.scala"))
     assert(found.isEmpty,
       "storage calls outside SessionCache (take a SessionCache lease):\n" +
+        found.mkString("\n"))
+  }
+
+  test("only Forwarder starts a writeStream in src/main") {
+    val found = hits(Seq("src/main/scala"), """\.writeStream\b""".r,
+      Set("Forwarder.scala"))
+    assert(found.isEmpty,
+      "streams started outside Forwarder (their checkpoints skip " +
+        "LocalCheckpointFileManager; sink through Forwarder.toParquet):\n" +
         found.mkString("\n"))
   }
 
