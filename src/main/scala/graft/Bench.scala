@@ -23,9 +23,9 @@ object Bench {
     // codegen cache, and file-system cache warm — the figure that tracks
     // plan quality rather than single-run machine noise); reps recorded
     // in the JSON
-    // default 3: the driver box is shared, and with 2 reps one noisy
-    // neighbor inflates min() — the r4 q36/q37/q48 "regressions" were
-    // exactly this (judge re-run confirmed no plan change)
+    // default 3: a shared box's noisy neighbor inflates min() of 2 reps
+    // into a phantom regression (seen on q36/q37/q48; a re-run showed no
+    // plan change)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     // optional subset (comma-separated names) — scale-probe runs bench a
     // few targeted queries against synthesized larger inputs
@@ -34,12 +34,12 @@ object Bench {
     val selected = subset.fold(SparkEntry.queries)(s =>
       SparkEntry.queries.view.filterKeys(s).toMap)
     // sub-second queries get extra reps on top of `reps`: at the 0.3–1 s
-    // scale a single noisy-neighbor rep dominates min-of-3, and three
-    // rounds of phantom 4–11× "regressions" (r4 q36/q37/q48, r6, r7
-    // q31/q32/q42/q56) all judge-re-benched to box noise
+    // scale a single noisy-neighbor rep dominates min-of-3: phantom
+    // 4–11× "regressions" (q36/q37/q48, q31/q32/q42/q56) re-benched to
+    // box noise
     val subSecExtra = sys.env.getOrElse("SPARK_GRAFT_SUBSEC_EXTRA", "2").toInt
-    // machine-load context (r10 verdict item 5): the driver box is
-    // shared, and identical-code totals have swung 59.8→81.1 s between
+    // machine-load context: on a shared box identical-code totals have
+    // swung 59.8→81.1 s between
     // runs — the 1-min loadavg sampled at run start/end plus after each
     // query's reps lets a noisy record carry its own explanation
     // (NaN on platforms without /proc/loadavg)
@@ -99,10 +99,9 @@ object Bench {
       if (times.nonEmpty && times.min < 1.0)
         times = times ++ (1 to subSecExtra).flatMap(_ => timeOnce())
       // alongside min (the plan-quality figure), record median + spread
-      // (max − min) per query: five rounds of phantom driver-bench
-      // spikes on untouched code each cost a judge re-bench — a spike
-      // whose own record shows median ≈ min with a fat spread
-      // self-identifies as box noise without one
+      // (max − min) per query: phantom spikes on untouched code each
+      // needed a re-bench — a spike whose own record shows median ≈ min
+      // with a fat spread self-identifies as box noise without one
       val (mn, md, sp) =
         if (times.isEmpty) (Double.NaN, Double.NaN, Double.NaN)
         else {
@@ -145,22 +144,20 @@ object Bench {
       catch { case e: Exception =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}") }
     writeArtifact(outPath, line)
-    // a ~2000-char stdout tail has clipped the full line three rounds
-    // running — r11's tail held only the load_after_query map, which
-    // reads as absurd query times. Print a SHORT summary line LAST
-    // (r11 verdict item 1): whatever suffix of stdout the driver keeps,
-    // it now ends with the totals, and a last-JSON-line parser picks up
-    // a complete object. The per-query map rides it too (the driver's
+    // a ~2000-char stdout tail clips the full line — such a tail holds
+    // only the load_after_query map, which reads as absurd query times.
+    // Print a SHORT summary line LAST: whatever suffix of stdout a
+    // reader keeps ends with the totals, and a last-JSON-line parser
+    // picks up a complete object. The per-query map rides it too (a
     // last-line parser only ever sees this line); medians/spreads stay
     // on the first line and in the $outPath artifact.
     val shortLine = summaryLine(total, reps, results.map { case (k, t) => k -> t._1 },
       errors.toMap, sfDir, outPath)
     println(shortLine)
-    // file-artifact fallback for the driver's last-line parser (r12
-    // verdict item 4: BENCH_r12.json still recorded "parsed": null even
-    // with the short line in the tail — build.sbt now strips the
-    // "[info] " prefix and the "[success]" footer, and this file is the
-    // recipe-independent copy). Subset smokes keep the committed
+    // file-artifact fallback for a last-line parser (a tail carrying
+    // sbt's "[info] " prefix and "[success]" footer once parsed to null
+    // — build.sbt strips both, and this file is the recipe-independent
+    // copy). Subset smokes keep the committed
     // full-suite summary intact, same discipline as outPath above.
     val summaryPath =
       if (subset.isDefined) "/tmp/BENCH_SUBSET_SUMMARY.json"

@@ -49,7 +49,7 @@ object Tables {
     * only to `events` — any future table with an epoch-seconds Long `ts`
     * column must opt in explicitly.
     */
-  /** Resolved-plan memo (r14, guide §6 metadata caching): every
+  /** Resolved-plan memo (metadata caching): every
     * [[apply]] call previously re-ran `spark.read.parquet` — a parquet
     * footer/schema-inference JOB (~25-50 ms) plus a directory probe —
     * and the bench pays that per table per rep across 91 queries. The
@@ -148,7 +148,7 @@ object Tables {
       .write.mode("overwrite").partitionBy("event_date").parquet(outPath)
   }
 
-  /** Materialize a HYBRID lake copy of an sf dir (the r10 layout-parity
+  /** Materialize a HYBRID lake copy of an sf dir (the layout-parity
     * probe's shape, now a harness mode — `SPARK_GRAFT_LAYOUT=partitioned`
     * in [[Verify]]): `events` and `documents` as Hive-partitioned
     * directory-per-table trees (`event_date=` day partitions; `part_lang=`

@@ -8,7 +8,7 @@ object Verify {
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // layout mode (r10 verdict item 1): SPARK_GRAFT_LAYOUT=partitioned
+    // layout mode: SPARK_GRAFT_LAYOUT=partitioned
     // re-runs the WHOLE suite against a hybrid Hive-partitioned lake
     // copy of sfDir (events/documents directory-per-table, the rest
     // single-file) — the oracle compare against the original tables

@@ -211,10 +211,10 @@ object ModelBuilder {
     // dispatch on the CONFIGURED scaler class (a RobustScaler must not be
     // silently substituted with MinMax — it skews the fold-metric scores).
     // The default minmax scorer of an UNWINDOWED spec is DEFERRED into
-    // the CV's own segmented stats pass (r15, guide §1.2: this eager
-    // full-frame aggregation was a whole extra execution per build for
-    // stats the CV pass already computes; min/max merge exactly, so the
-    // values are unchanged). Windowed specs keep the eager fit: the
+    // the CV, whose final minmax error scaler it is: an eager full-frame
+    // aggregation would be a whole extra execution per build for stats
+    // the CV already computes, and min/max is exact, so the values are
+    // the same. Windowed specs keep the eager fit: the
     // reference fits the scorer on the PRE-window frame, whose head rows
     // the CV frame has dropped. Robust has no mergeable statistic.
     val (scoringScaler, deferredScoringKind) =

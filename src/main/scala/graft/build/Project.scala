@@ -74,8 +74,8 @@ object Project {
     * a shared long frame. Spark schedules the concurrent jobs across the
     * cluster; per-machine state (fit aggregations) is tiny.
     *
-    * One lake scan per machine GROUP (r15, guide §2.4/§5 — the r14
-    * candidate re-landed with a size-adaptive cache layout): machines
+    * One lake scan per machine GROUP, with a size-adaptive cache
+    * layout: machines
     * whose dataset configs differ only by tag list share ONE
     * filter→resample pass over the union of their tags, cached; each
     * machine's grid/interpolate/pivot then reads its tags from the
@@ -83,10 +83,10 @@ object Project {
     * filtering, so values are unchanged. The shared cache is
     * repartitioned to a partition count derived from the INPUT's size
     * (≈64 MB of source bytes per partition, clamped to the session's
-    * shuffle partitions) — the r14 attempt pinned the session shuffle
-    * count into the cache and every downstream per-machine stage ran
-    * that many micro-tasks at small scale, which is exactly the
-    * documented cause of its local regression. The group frame is built
+    * shuffle partitions) — pinning the session shuffle count into the
+    * cache would make every downstream per-machine stage run that many
+    * micro-tasks at small scale, a measured local regression. The group
+    * frame is built
     * only when ≥2 machines actually MISS the model registry: a
     * fully-cached second buildAll (the q75 gate's contract) must stay
     * zero-Spark-work. */

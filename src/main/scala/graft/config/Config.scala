@@ -241,7 +241,7 @@ object Config {
     * from params (the jinja surface the CLI uses for model configs,
     * `gordo/cli/cli.py:187-216`; full jinja is deliberately out).
     *
-    * Scope evidence (surveyed round 6): no machine/model config in the
+    * Scope evidence: no machine/model config in the
     * reference uses any jinja construct at all — every YAML under
     * `examples` and every config YAML under `tests` contains zero
     * `{{ }}` or `{% %}` occurrences. Filters, conditionals, and loops
@@ -277,8 +277,8 @@ object Config {
       case _ => None
     }
     // explicit null (`requests:`) means no block; a non-map scalar is a
-    // config ERROR — the raw asInstanceOf was an anonymous NPE/CCE on
-    // user YAML (same hole class as the r13 tag-list fix)
+    // config ERROR — a raw asInstanceOf would be an anonymous NPE/CCE on
+    // user YAML (the same hole as a null inside a tag list)
     def block(key: String): Map[String, Any] = resources.get(key) match {
       case None | Some(null) => Map.empty
       case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
@@ -337,8 +337,8 @@ object Config {
     // not Spark-castable — normalize dates back to ISO-instant strings
     def isoStr(k: String): Option[String] =
       ds.get(k).filter(_ != null).map(v => parseTzAware(v).toInstant.toString)
-    // a null element inside a tag list (YAML `- ~` / `-`) was an
-    // anonymous NPE from `_.toString` (ConfigFuzzProps, r13 ×30 hammer);
+    // a null element inside a tag list (YAML `- ~` / `-`) would be an
+    // anonymous NPE from `_.toString` (ConfigFuzzProps draws it);
     // non-string scalars (an unquoted numeric tag name) stringify
     def strList(field: String, l: List[_]): Seq[String] = l.map {
       case null => throw new ConfigException(

@@ -93,9 +93,9 @@ object ModelRegistry {
   }
 
   private def num(v: Any): Double = v match {
-    // a null kwarg reaching here was an anonymous NPE (ConfigFuzzProps,
-    // r13 ×30 hammer); garbage text stays NumberFormatException — both
-    // now land inside the contract's accepted reject types
+    // a null kwarg reaching here would be an anonymous NPE
+    // (ConfigFuzzProps draws it); garbage text stays NumberFormatException
+    // — both land inside the contract's accepted reject types
     case null => throw new CompileException("expected a number, got null")
     case _ => v.toString.toDouble
   }

@@ -110,12 +110,12 @@ object Influx {
         // element_at(_, 0) is an ERROR in Spark — nullif turns a
         // malformed series into null cells instead of a failed job.
         // try_element_at, not element_at: a TRUNCATED values row
-        // (fewer cells than columns) made the in-bounds column index
+        // (fewer cells than columns) makes the in-bounds column index
         // out of bounds for THAT row, and under ANSI mode element_at
-        // threw an anonymous INVALID_ARRAY_INDEX_IN_ELEMENT_AT job
-        // failure instead of the documented null-point row (r14
-        // structured wire fuzz — same ANSI hole class as r13's
-        // to_timestamp/cast finds; identical on well-formed rows)
+        // throws an anonymous INVALID_ARRAY_INDEX_IN_ELEMENT_AT job
+        // failure instead of the documented null-point row (the same
+        // ANSI hole as to_timestamp/cast below; identical on well-formed
+        // rows)
         try_element_at($"cells",
           nullif(array_position($"columns", "time"), lit(0L)).cast("int"))
           .as("ts_str"),
@@ -128,7 +128,7 @@ object Influx {
       // documented contract is the influx null-point shape (malformed
       // cell → null field, neighbors intact), which is exactly what the
       // try_ variants restore (identical to the plain forms on every
-      // well-formed cell). Found by the r13 wire-parser fuzz property.
+      // well-formed cell). The wire-parser fuzz property draws such cells.
       .select($"tag", try_to_timestamp($"ts_str").as("ts"),
         $"v".try_cast("double").as("value"))
       .orderBy($"ts", $"tag")

@@ -400,10 +400,10 @@ object TimeSeries {
     // median — the expensive part) on both sides, doubling the work and
     // adding a shuffle. The windows share one Exchange+Sort on the series
     // key; per-series buffering is bounded (calendar span × 144 rows/day).
-    // (r14 note: a sorted-array rolling median — collect_list +
-    // array_sort + interpolated element_at — was tried here and measured
-    // ~3× SLOWER than the percentile window at width 72; the aggregate's
-    // buffer reuse beats per-row array allocation. Kept as-is.)
+    // (A sorted-array rolling median — collect_list + array_sort +
+    // interpolated element_at — measured ~3× SLOWER than the percentile
+    // window at width 72: the aggregate's buffer reuse beats per-row
+    // array allocation.)
     val wk = Window.partitionBy(keys.map(col): _*)
     val withResid = df
       .withColumn("__med", percentile(col(valueCol), lit(0.5)).over(w))
@@ -475,8 +475,8 @@ object TimeSeries {
       keyCol, valueCol, cfg)
 
   /** The PRE-grid stage of [[getData]] — tag/time filters,
-    * known_filter_periods, per-(tag, bucket) resample — split out (r15)
-    * so a machine GROUP whose dataset configs differ only by tag list
+    * known_filter_periods, per-(tag, bucket) resample — split out so a
+    * machine GROUP whose dataset configs differ only by tag list
     * (Project.buildAll's shape) can run it ONCE over the union of tags
     * and share the result: per-(tag, bucket) resampling commutes exactly
     * with tag filtering (the groups are keyed by tag, so a tag filter

@@ -136,7 +136,7 @@ object Components {
     // plan ZERO exchanges — only the neighbor-min aggregation and the
     // jump's l-side re-key per round.
     // Superseded rounds are freed by closing their own leases, never by
-    // scanning a frame's lineage: round-0 `labels` derives from the
+    // scanning a frame's lineage: the first round's `labels` derive from the
     // CALLER's edges plan, and a lineage scan there would free a
     // still-live checkpoint frame the caller passed as input (e.g. a
     // prior connectedComponents result used as edges).

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * codec needed) and each frame is a JPEG the JRE's ImageIO decodes
   * ([[decodeVideo]] / [[sampleFramesAvi]]); all three gated bit-exactly
   * by LlmSpec. For compressed codecs the JRE cannot decode, METADATA is
-  * still real (round 6): [[parseMp3]] walks MP3 frame headers
+  * still real: [[parseMp3]] walks MP3 frame headers
   * (rate/channels/bitrate/duration) and [[parseH264Sps]] parses the
   * H.264 sequence parameter set (profile/level/cropped dimensions via
   * exp-Golomb) — pure byte/bit arithmetic, surfaced by
@@ -523,7 +523,7 @@ object Multimodal {
   }
 
   // --------------------------------------------------------------------
-  // Compressed-codec METADATA parsers (round 6, VERDICT r5 #8): pure
+  // Compressed-codec METADATA parsers: pure
   // byte/bit arithmetic like the RIFF walker — no sample/pixel decode,
   // so no codec dependency. They shrink decodeStub's domain to actual
   // compressed payload DATA: dimensions/duration/rate of MP3 audio and
@@ -624,7 +624,7 @@ object Multimodal {
     * (which no MP3 header has — MP3's valid layers are nonzero, so the
     * two sniffs cannot claim each other's streams), sampling-frequency
     * index, channel configuration, and the 13-bit frame length that
-    * chains frame to frame. Same hardening as [[parseMp3]]: one
+    * chains frame to frame. Same guard as [[parseMp3]]: one
     * plausible header in random bytes is weak evidence — demand at
     * least two CHAINED frames, and treat a malformed candidate before
     * the first accepted frame as scan-forward, after it as stream end.

@@ -121,7 +121,7 @@ object TextDedup {
     * per-pair re-explosion). At loose thresholds the prefix is most of
     * each doc, candidates approach "every pair sharing any shingle",
     * and the verify step's candidates × shingles re-explosion dwarfs
-    * Σ df² — measured round 9 at a 100× corpus (t = 0.3): 113 M
+    * Σ df² — measured at a 100× corpus (t = 0.3): 113 M
     * candidates × ~52 shingles ≈ 6 B verify rows exhausted an 80 GB
     * spill volume and killed the job, while the direct join's 127 M
     * aggregated rows completed in ~90 s. Loose-threshold total-recall

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * frame: [0, testStart) is train, [testStart, testEnd) is test — half-
   * open, 0-based, exactly sklearn's expanding-window split. The
   * boundaries are pure arithmetic on the row count (one `count()` job);
-  * fold membership is then a filter on a row_number column, so each fold
-  * is a DataFrame view, not a materialized copy.
+  * fold membership is then a filter ([[trainFold]]) or a span id
+  * ([[spanId]]) on a row_number column, so each fold is a DataFrame
+  * view, not a materialized copy.
   */
 object CrossValidate {
 
@@ -133,8 +134,26 @@ object CrossValidate {
       Some(n))
   }
 
-  def testFold(indexed: DataFrame, fold: Fold): DataFrame =
-    indexed.filter(col("__row") >= fold.testStart && col("__row") < fold.testEnd)
+  /** The id of the half-open `__row` span holding each row: `i` for
+    * `spans(i)._1 ≤ __row < spans(i)._2`, null for a row in no span.
+    * Every segment and fold-membership column is this one form:
+    * windowed folds leave lag-context gap rows between one fold's test
+    * end and the next's test start, which a boundary-only `__row < end`
+    * chain would misassign. */
+  def spanId(spans: Seq[(Long, Long)]): Column = {
+    def in(span: (Long, Long)): Column =
+      col("__row") >= span._1 && col("__row") < span._2
+    spans.zipWithIndex.tail.foldLeft(when(in(spans.head), lit(0))) {
+      case (acc, (span, i)) => acc.when(in(span), lit(i))
+    }
+  }
+
+  /** A per-fold expression: `cases`' column for the fold id in
+    * `__fold`, null for any other row. */
+  def onFold(cases: Seq[(Int, Column)]): Column =
+    cases.tail.foldLeft(when(col("__fold") === lit(cases.head._1), cases.head._2)) {
+      case (acc, (i, c)) => acc.when(col("__fold") === lit(i), c)
+    }
 
   def trainFold(indexed: DataFrame, fold: Fold): DataFrame =
     if (fold.complementTrain)

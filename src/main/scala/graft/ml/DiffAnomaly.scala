@@ -52,8 +52,8 @@ object DiffAnomaly {
       fit(train, tags, tags, feature)
     /** Single-pass protocol: when defined, (aggregate columns, result-row
       * decoder) let a caller FUSE this fit into a wider aggregation over
-      * the same frame (the CV fold loop runs model + error-scaler fit as
-      * ONE distributed pass per fold instead of two). Aliases are
+      * the same frame (the per-fold CV fit source runs model +
+      * error-scaler fit as ONE distributed pass per fold instead of two). Aliases are
       * name-spaced per model so plans compose. */
     def aggPlan(xTags: Seq[String], yTags: Seq[String],
                 feature: String => Column)
@@ -661,12 +661,15 @@ object DiffAnomaly {
       window: Option[Int],
       smoothingMethod: String,
       /** Per-metric raw fold values when `foldMetrics` were requested at
-        * fit time (A8 input) — computed inside the SAME fold loop as the
+        * fit time (A8 input) — computed in the SAME test pass as the
         * thresholds, so no second CV pass refits the base models. */
       foldScores: Map[String, Seq[Double]] = Map.empty,
       /** CV fold row spans, for split metadata
         * (`build_model.py:build_split_dict` — K5 reporter input). */
       folds: Seq[CrossValidate.Fold] = Nil)
+
+  /** A CV fit: the base model and the error scaler trained on one span. */
+  private type Fit = (Fitted, FittedScaler)
 
   /** Fit + cross_validate (`diff.py:166-264`): per expanding-window fold,
     * fit the base model and scaler on train, score the test span, take
@@ -675,31 +678,33 @@ object DiffAnomaly {
     * rolling values are NaN; max skips them → only full frames count).
     * Then refit model+scaler on the full series.
     *
-    * When the base model and the error scaler expose [[SegPlan]]s, the
-    * whole CV runs as TWO distributed passes regardless of nSplits: one
-    * segmented stats pass (fold train sets are prefixes = unions of
-    * segments, merged in-process) and one grouped test pass (every
-    * fold's rolling thresholds and metrics, grouped by fold). Every
-    * built-in family has one: the closed forms (trend, ridge, PCA,
-    * window autoencoder) merge statistics, the MLP and LSTM families
-    * merge their training rows ([[RowReconstructor]]) and train
-    * in-process once per fold. The per-fold loop — a train pass (two for a
-    * model without an `aggPlan`) and a test pass per fold, then the
-    * final fit's — remains for preprocessing pipelines
-    * (`Pipeline[MinMaxScaler, …]`: chained stage fits do not merge), the
-    * robust error scaler and frames with a null cell.
+    * This and [[fitKfcv]] are one CV engine: [[foldFits]] supplies every
+    * fold's fit and the final fit, and ONE test pass scores every fold's
+    * span with its own fold's fit ([[scoreTestSpans]]). Here that pass
+    * rolls grouped by fold (frames reset per fold) and aggregates every
+    * fold's thresholds and metrics in one grouped aggregation. The fits
+    * come from one of two sources:
+    *  - segmented, when the base model and the error scaler expose
+    *    [[SegPlan]]s: ONE stats pass, fold k's train set being the
+    *    prefix of row segments 0..k, merged in-process. Every built-in
+    *    family has one: the closed forms (trend, ridge, PCA, window
+    *    autoencoder) merge statistics, the MLP and LSTM families merge
+    *    their training rows ([[RowReconstructor]]) and train in-process
+    *    once per fold;
+    *  - per-fold otherwise: a train pass per fold (two for a model
+    *    without an `aggPlan`), then the final fit's. Preprocessing
+    *    pipelines (`Pipeline[MinMaxScaler, …]`: chained stage fits do
+    *    not merge), the robust error scaler and frames with a null cell
+    *    train fold by fold.
     *
-    * @param scoringScalerKind DEFERRED scoring scaler:
-    *   fit the fold-metric scaler of this kind over the full frame
-    *   INSIDE the CV passes instead of the caller paying a separate
-    *   full-frame aggregation job first. On the fused path with a
-    *   matching error-scaler kind it decodes from the segmented pass's
-    *   full merge — min/max merge exactly, so the stats equal a flat
-    *   fit (the same equivalence the final error scaler already relies
-    *   on); otherwise it falls back to one eager aggregation, today's
-    *   behavior. Mutually exclusive with `scoringScaler` (an
-    *   already-fitted scaler, e.g. fit on a pre-windowing frame the CV
-    *   never sees). */
+    * @param scoringScalerKind DEFERRED scoring scaler: the fold-metric
+    *   scaler of this kind over the full frame, fit INSIDE the CV instead
+    *   of the caller paying a separate full-frame aggregation job first.
+    *   With a matching error-scaler kind it is the final error scaler,
+    *   from either source — min/max is exact, so the stats equal a flat
+    *   fit; a kind mismatch runs one eager aggregation. Mutually
+    *   exclusive with `scoringScaler` (an already-fitted scaler, e.g.
+    *   fit on a pre-windowing frame the CV never sees). */
   def fit(wide: DataFrame, tags: Seq[String], orderCol: String,
           base: Reconstructor, scalerKind: String = "minmax",
           nSplits: Int = 3, window: Option[Int] = None,
@@ -714,7 +719,7 @@ object DiffAnomaly {
     // y columns (`target_tag_list`, diff.py fit(X, y)); empty -> y = X
     val y = if (targetTags.isEmpty) tags else targetTags
     // lease the assembled frame FIRST: withRowIndex runs two small jobs
-    // (chunk bounds + counts) before the fold loop, which would otherwise
+    // (chunk bounds + counts) before the CV passes, which would otherwise
     // recompute the upstream resample/align per job. A frame the caller
     // already holds (ModelBuilder's lease) or cached itself is shared,
     // never yanked: closing this lease only returns our reference.
@@ -744,23 +749,29 @@ object DiffAnomaly {
           CrossValidate.Fold(f.index, 0, f.testStart - foldOffset,
             f.testStart, f.testEnd - foldOffset)
         }
-      val feat: String => Column = t => qc(t).cast("double")
-      val widths = (6 +: window.toSeq).distinct
-      def sclWith(ss: Option[FittedScaler])(c: Column, t: String): Column =
-        ss match {
-          case Some(s) =>
-            val (ctr, s0) = s.stats(t)
-            (c - lit(ctr)) / lit(Scalers.nonZeroScale(s0))
-          case None => c
+      // segments end at the fold TRAIN ends (for plain folds trainEnd ==
+      // testStart; windowed folds leave a gap of lag-context rows between
+      // them) and fold k trains on segments 0..k; a segment with no rows
+      // takes the per-fold source
+      val (fits, (finalModel, finalScaler)) = foldFits(indexed, tags, y,
+        orderCol, base, scalerKind, folds, folds.map(_.trainEnd) :+ n,
+        present =>
+          if (present.size < folds.size + 1) None
+          else Some(folds.map(f => f -> (0 to f.index))))
+      val scoring = scoringScaler.orElse(scoringScalerKind.map { k =>
+        if (k == scalerKind) finalScaler
+        else {
+          val (aggs, dec) = Scalers.aggPlan(k, y)
+          dec(indexed.agg(aggs.head, aggs.tail: _*).head())
         }
-      // eager deferred-scoring fit — the fallback when the segmented
-      // pass can't supply the stats (loop path, or a kind mismatch):
-      // one aggregation over the cached indexed frame, exactly the job
-      // the caller used to run itself
-      def eagerScoring(kind: String): FittedScaler = {
-        val (aggs, dec) = Scalers.aggPlan(kind, y)
-        dec(indexed.agg(aggs.head, aggs.tail: _*).head())
+      })
+      def scaled(c: Column, t: String): Column = scoring match {
+        case Some(s) =>
+          val (ctr, s0) = s.stats(t)
+          (c - lit(ctr)) / lit(Scalers.nonZeroScale(s0))
+        case None => c
       }
+      val widths = (6 +: window.toSeq).distinct
       // the AGGREGATE rolling column's alias lives in a namespace no
       // tag-derived alias can reach (`__rminagg__<w>` — tag aliases are
       // `__rmin<w>__<tag>` and w starts with a digit): a tag literally
@@ -770,165 +781,29 @@ object DiffAnomaly {
           y.map(t => (s"__mae_$t", s"__rmin${w}__$t", "min", w)))
       // A8/M13/M14 fold metric scores ride the same test pass — metric
       // over scoring-scaler-transformed y/ŷ, averaged over tags
-      // (`build_model.py:274-289,377-446`). Built per path because a
-      // DEFERRED scoring scaler's stats only exist once that path has
-      // resolved them (segmented-merge decode or the eager fallback).
-      def testAggsFor(ss: Option[FittedScaler]): Seq[Column] = {
-        val scl = sclWith(ss) _
-        val metricAggs = for { (name, fn) <- foldMetrics; t <- y }
-          yield fn(scl(qc(s"__y_$t"), t), scl(qc(s"__p_$t"), t))
-            .as(s"${name}__$t")
-        widths.flatMap(w =>
-          max(col(s"__rminagg__$w")).as(s"__agg__$w") +:
-            y.map(t => max(qc(s"__rmin${w}__$t")).as(s"__f${w}__$t"))) ++
-          metricAggs
-      }
+      // (`build_model.py:274-289,377-446`)
+      val metricAggs = for { (name, fn) <- foldMetrics; t <- y }
+        yield fn(scaled(qc(s"__y_$t"), t), scaled(qc(s"__p_$t"), t))
+          .as(s"${name}__$t")
+      val testAggs = widths.flatMap(w =>
+        max(col(s"__rminagg__$w")).as(s"__agg__$w") +:
+          y.map(t => max(qc(s"__rmin${w}__$t")).as(s"__f${w}__$t"))) ++
+        metricAggs
+      val scored = scoreTestSpans(indexed, folds, fits, y,
+        withPredictions = foldMetrics.nonEmpty)
+      val relOf = CrossValidate.onFold(
+        folds.map(f => f.index -> (col("__row") - lit(f.testStart))))
+      val rows = Windows.chunkedTrailingMultiGrouped(scored, "__row",
+        col("__fold"), relOf, rollSpecs, boundedRows = folds.map(_.nTest).max)
+        .groupBy(col("__fold"))
+        .agg(testAggs.head, testAggs.tail: _*)
+        .collect().map(r => r.getAs[Int]("__fold") -> r).toMap
       // a fold shorter than a rolling width has no full frame: pandas
       // rolling().min() is all-NaN and .max() of that is NaN — mirror it
       def getterOf(row: org.apache.spark.sql.Row): String => Double =
         name => if (row.isNullAt(row.fieldIndex(name))) Double.NaN
                 else row.getAs[Double](name)
-
-      val fusedPlan = for {
-        mp <- base.segPlan(tags, y, feat)
-        sp <- Scalers.segPlan(scalerKind, y)
-      } yield (mp, sp)
-
-      // ---- per-fold loop: 2 passes per fold (model+scaler fused into
-      // one train agg; thresholds+metrics into one test agg). Used when
-      // the base/scaler has no mergeable statistics (preprocessing
-      // pipelines, robust scaler) or the frame fails the null check ----
-      def loopPath(): (Seq[(CrossValidate.Fold, String => Double)],
-          Fitted, FittedScaler) = {
-        val testAggs = testAggsFor(
-          scoringScaler.orElse(scoringScalerKind.map(eagerScoring)))
-        val res = folds.map { f =>
-          val train = CrossValidate.trainFold(indexed, f)
-          val test = CrossValidate.testFold(indexed, f)
-          val (m, sc) = fitModelAndScaler(train, tags, y, base, scalerKind)
-          val metricInputs =
-            if (foldMetrics.isEmpty) Nil
-            else y.flatMap(t =>
-              Seq(qc(t).as(s"__y_$t"), m.predictCol(t).as(s"__p_$t")))
-          val scored = test.select(
-            (col("__row") +:
-              scaledMseCol(m, sc, y).as("__mse") +:
-              (y.map(t => abs(qc(t) - m.predictCol(t)).as(s"__mae_$t")) ++
-                metricInputs)): _*)
-          val rolled = Windows.chunkedTrailingMulti(scored, "__row",
-            f.testStart, rollSpecs, totalRows = f.nTest)
-          f -> getterOf(rolled.agg(testAggs.head, testAggs.tail: _*).head())
-        }
-        val (fm, fs) = fitModelAndScaler(indexed, tags, y, base, scalerKind)
-        (res, fm, fs)
-      }
-
-      def fusedPath[MB, SB](mp: SegPlan[MB, Fitted], sp: SegPlan[SB, FittedScaler])
-          : (Seq[(CrossValidate.Fold, String => Double)], Fitted, FittedScaler) = {
-          // ---- segments bounded by the fold TRAIN ends (for plain
-          // folds trainEnd == testStart; windowed folds leave a gap of
-          // lag-context rows between them); ONE stats pass, fold k's
-          // train fit = merge of segments 0..k ----
-          val segOf = folds.tail.foldLeft(
-            when(col("__row") < folds.head.trainEnd, lit(0))) {
-            (acc, f) => acc.when(col("__row") < f.trainEnd, lit(f.index))
-          }.otherwise(lit(folds.size))
-          // null-integrity counts ride the same pass: the mergeable
-          // statistics weight segments by row count, which only equals
-          // the aggregates' (null-skipping) population on null-free
-          // data — any null falls back to the per-fold loop, whose
-          // pairwise-deletion semantics match the flat fit exactly
-          val checkCols = (tags ++ y).distinct
-          val nullAggs = count(lit(1)).as("__n_all") +:
-            count(col(orderCol)).as("__n_ord") +:
-            checkCols.zipWithIndex.map { case (t, i) =>
-              count(feat(t)).as(s"__n_$i") }
-          val aggsAll = nullAggs ++ mp.aggs ++ sp.aggs
-          val segRows = indexed.groupBy(segOf.as("__seg"))
-            .agg(aggsAll.head, aggsAll.tail: _*)
-            .collect().sortBy(_.getAs[Int]("__seg"))
-          val clean = segRows.length == folds.size + 1 && segRows.forall { r =>
-            val na = r.getAs[Long]("__n_all")
-            r.getAs[Long]("__n_ord") == na &&
-              checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
-          }
-          if (!clean) return loopPath()
-          val mBufs = segRows.toSeq.map(mp.fromRow)
-          val sBufs = segRows.toSeq.map(sp.fromRow)
-          var mAcc = mBufs(0)
-          var sAcc = sBufs(0)
-          val fits = folds.map { f =>
-            if (f.index > 0) {
-              mAcc = mp.merge(mAcc, mBufs(f.index))
-              sAcc = sp.merge(sAcc, sBufs(f.index))
-            }
-            f -> ((mp.decode(mAcc), sp.decode(sAcc)))
-          }
-          mAcc = mp.merge(mAcc, mBufs(folds.size))
-          sAcc = sp.merge(sAcc, sBufs(folds.size))
-          // deferred scoring scaler: the full merge above IS the
-          // full-frame fit of `scalerKind` over y — when the scoring
-          // kind matches (minmax is the only SegPlan kind, and the
-          // fused path requires the error scaler to have one), decode
-          // it instead of running a separate full-frame aggregation;
-          // min/max merge exactly, so the stats equal a flat fit. A
-          // kind mismatch falls back to the one eager aggregation the
-          // caller used to run.
-          val testAggs = testAggsFor(scoringScaler.orElse(
-            scoringScalerKind.map { k =>
-              if (k == scalerKind) sp.decode(sAcc) else eagerScoring(k)
-            }))
-
-          // ---- ONE grouped test pass: per-row expressions dispatch on
-          // the fold id; rolling frames reset per fold; final aggregates
-          // group by fold ----
-          def byFold(e: ((Fitted, FittedScaler)) => Column): Column =
-            fits.tail.foldLeft(
-              when(col("__fold") === lit(fits.head._1.index), e(fits.head._2))) {
-              case (acc, (f, ms)) =>
-                acc.when(col("__fold") === lit(f.index), e(ms))
-            }
-          // membership is an explicit BETWEEN per fold: windowed folds
-          // have gap rows between one fold's test end and the next's
-          // test start (consumed as lag context), which a boundary-only
-          // chain would misassign
-          def inTest(f: CrossValidate.Fold): Column =
-            col("__row") >= f.testStart && col("__row") < f.testEnd
-          val foldOf = folds.tail.foldLeft(
-            when(inTest(folds.head), lit(0))) {
-            (acc, f) => acc.when(inTest(f), lit(f.index))
-          }
-          val metricInputs =
-            if (foldMetrics.isEmpty) Nil
-            else y.flatMap(t => Seq(qc(t).as(s"__y_$t"),
-              byFold { case (m, _) => m.predictCol(t) }.as(s"__p_$t")))
-          val scored = indexed.withColumn("__fold", foldOf)
-            .filter(col("__fold").isNotNull)
-            .select(
-              (col("__row") +: col("__fold") +:
-                byFold { case (m, sc) => scaledMseCol(m, sc, y) }.as("__mse") +:
-                (y.map(t => byFold { case (m, _) => abs(qc(t) - m.predictCol(t)) }
-                  .as(s"__mae_$t")) ++ metricInputs)): _*)
-          val relOf = fits.tail.foldLeft(
-            when(col("__fold") === lit(fits.head._1.index),
-              col("__row") - lit(fits.head._1.testStart))) {
-            case (acc, (f, _)) =>
-              acc.when(col("__fold") === lit(f.index),
-                col("__row") - lit(f.testStart))
-          }
-          val rolled = Windows.chunkedTrailingMultiGrouped(scored, "__row",
-            col("__fold"), relOf, rollSpecs, boundedRows = folds.map(_.nTest).max)
-          val rows = rolled.groupBy(col("__fold"))
-            .agg(testAggs.head, testAggs.tail: _*)
-            .collect().map(r => r.getAs[Int]("__fold") -> r).toMap
-          (folds.map(f => f -> getterOf(rows(f.index))),
-            mp.decode(mAcc), sp.decode(sAcc))
-      }
-
-      val (results, finalModel, finalScaler) = fusedPlan match {
-        case Some((mp, sp)) => fusedPath(mp, sp)
-        case None => loopPath()
-      }
+      val results = folds.map(f => f -> getterOf(rows(f.index)))
 
       var lastFeat: Map[String, Double] = Map.empty
       var lastAgg = Double.NaN
@@ -961,11 +836,18 @@ object DiffAnomaly {
     } finally { indexedLease.close(); lease.close() }
   }
 
+
   /** M12 `DiffBasedKFCVAnomalyDetector` (`diff.py:461-635`): KFold CV,
     * per-fold predictions scattered back onto the full time index, the
     * validation metrics smoothed (default smm window 144), thresholds =
     * `threshold_percentile` quantile of the smoothed series (NaN-prefix
     * rows excluded, as pandas quantile skips NaN).
+    *
+    * The CV engine of [[fit]] with KFold folds: [[foldFits]] supplies
+    * each fold's fit on its complement, from the segmented source (the
+    * segments are the folds themselves, a complement is the merge of the
+    * other folds' buffers) or the per-fold source, and the one test pass
+    * scores every row by the model that did NOT see it.
     *
     * Divergence note: the reference defaults to shuffle=True KFold;
     * replicating numpy's permutation bit-for-bit is not portable, so
@@ -986,84 +868,19 @@ object DiffAnomaly {
     try {
       val n = nOpt.getOrElse(indexed.count())
       val folds = CrossValidate.kFold(n, nSplits)
-      val feat: String => Column = t => qc(t).cast("double")
-      val fusedPlan = for {
-        mp <- base.segPlan(tags, y, feat)
-        sp <- Scalers.segPlan(scalerKind, y)
-      } yield (mp, sp)
-      // per-fold: fit on the complement, score the fold's span; union =
-      // every row scored exactly once by the model that did NOT see it.
-      // With SegPlans, every complement fit comes from ONE segmented
-      // stats pass (segments = the folds themselves; complement = merge
-      // of the other folds' buffers) and the scoring is ONE pass whose
-      // expressions dispatch on the fold id — O(1) full-data scans.
-      def loopScattered(): (DataFrame, Option[(Fitted, FittedScaler)]) =
-        (folds.map { f =>
-          val train = CrossValidate.trainFold(indexed, f)
-          val test = CrossValidate.testFold(indexed, f)
-          val (m, sc) = fitModelAndScaler(train, tags, y, base, scalerKind)
-          test.select(
-            (col("__row") +:
-              scaledMseCol(m, sc, y).as("__mse") +:
-              y.map(t => abs(qc(t) - m.predictCol(t)).as(s"__mae_$t"))): _*)
-        }.reduce(_ unionByName _), None)
-
-      def fusedScattered[MB, SB](mp: SegPlan[MB, Fitted],
-                                 sp: SegPlan[SB, FittedScaler])
-          : (DataFrame, Option[(Fitted, FittedScaler)]) = {
-        val foldOf = folds.tail.foldLeft(
-          when(col("__row") < folds.head.testEnd, lit(0))) {
-          (acc, f) => acc.when(col("__row") < f.testEnd, lit(f.index))
-        }
-        // null-integrity counts (see fit): mergeable statistics assume a
-        // null-free frame — fall back to the per-fold loop otherwise
-        val checkCols = (tags ++ y).distinct
-        val nullAggs = count(lit(1)).as("__n_all") +:
-          count(col(orderCol)).as("__n_ord") +:
-          checkCols.zipWithIndex.map { case (t, i) =>
-            count(feat(t)).as(s"__n_$i") }
-        val aggsAll = nullAggs ++ mp.aggs ++ sp.aggs
-        val segRows = indexed.groupBy(foldOf.as("__seg"))
-          .agg(aggsAll.head, aggsAll.tail: _*).collect()
-        val clean = segRows.forall { r =>
-          val na = r.getAs[Long]("__n_all")
-          r.getAs[Long]("__n_ord") == na &&
-            checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
-        }
-        if (!clean) return loopScattered()
-        // n < nSplits leaves trailing folds empty (sklearn still yields
-        // them): empty segments have no stats row — skip them in the
-        // complement merges; they contribute no scored rows either
-        val mBufs = segRows.map(r => r.getAs[Int]("__seg") -> mp.fromRow(r)).toMap
-        val sBufs = segRows.map(r => r.getAs[Int]("__seg") -> sp.fromRow(r)).toMap
-        val present = folds.indices.filter(mBufs.contains).sorted
-        // with a single non-empty fold its complement is empty — nothing
-        // to train on; let the loop path surface that degenerate case
-        if (present.size < 2) return loopScattered()
-        val fits = folds.filter(f => mBufs.contains(f.index)).map { f =>
-          val others = present.filterNot(_ == f.index)
-          f -> ((mp.decode(others.map(mBufs).reduce(mp.merge)),
-            sp.decode(others.map(sBufs).reduce(sp.merge))))
-        }
-        def byFold(e: ((Fitted, FittedScaler)) => Column): Column =
-          fits.tail.foldLeft(
-            when(col("__fold") === lit(fits.head._1.index), e(fits.head._2))) {
-            case (acc, (f, ms)) =>
-              acc.when(col("__fold") === lit(f.index), e(ms))
-          }
-        val scat = indexed.withColumn("__fold", foldOf).select(
-          (col("__row") +:
-            byFold { case (m, sc) => scaledMseCol(m, sc, y) }.as("__mse") +:
-            y.map(t => byFold { case (m, _) => abs(qc(t) - m.predictCol(t)) }
-              .as(s"__mae_$t"))): _*)
-        (scat, Some((mp.decode(present.map(mBufs).reduce(mp.merge)),
-          sp.decode(present.map(sBufs).reduce(sp.merge)))))
-      }
-
-      val (scattered, finalFit) = fusedPlan match {
-        case Some((mp, sp)) => fusedScattered(mp, sp)
-        case None => loopScattered()
-      }
+      // n < nSplits leaves trailing folds empty (sklearn still yields
+      // them): empty segments have no stats row, so complements skip
+      // them and they score no rows. With a single non-empty fold its
+      // complement is empty — nothing to train on; the per-fold source
+      // surfaces that degenerate case
+      val (fits, (finalModel, finalScaler)) = foldFits(indexed, tags, y,
+        orderCol, base, scalerKind, folds, folds.map(_.testEnd),
+        present =>
+          if (present.size < 2) None
+          else Some(folds.filter(f => present.contains(f.index))
+            .map(f => f -> present.filterNot(_ == f.index))))
+      val scattered = scoreTestSpans(indexed, folds, fits, y,
+        withPredictions = false)
       // aggregate alias `__smagg`: disjoint from every `__sm_<tag>` (a
       // tag named "mse" must not overwrite the aggregate's smooth column)
       val smoothed = smoothingMethod match {
@@ -1098,13 +915,99 @@ object DiffAnomaly {
         else row.getAs[Double](name)
       val featureTh = y.map(t => t -> thOf(s"__f_$t")).toMap
       val aggTh = thOf("__agg")
-      val (finalModel, finalScaler) = finalFit.getOrElse(
-        fitModelAndScaler(indexed, tags, y, base, scalerKind))
       FittedDetector(finalModel, finalScaler,
         Thresholds(featureTh, aggTh, None, None, Map.empty),
         tags, y, orderCol, Some(window), smoothingMethod,
         folds = folds)
     } finally { indexedLease.close(); lease.close() }
+  }
+
+
+  /** The CV fit source [[fit]] and [[fitKfcv]] share: each scored fold's
+    * (model, error scaler) and the final full-frame fit.
+    *
+    * `segEnds` cut the indexed frame into the half-open `__row` segments
+    * [0, e₀), [e₀, e₁), …; given the sorted ids of the non-empty ones,
+    * `trainSegs` lists each scored fold's train segments, or None when
+    * they cannot serve the folds. The segmented source runs when the
+    * base and the error scaler both have a [[SegPlan]]: ONE grouped
+    * stats pass buffers every segment, a fold's fit decodes the left
+    * fold of its segments' buffers in the listed order, and the final
+    * fit that of every segment. Null-integrity counts ride the same
+    * pass: the mergeable statistics weight segments by row count, which
+    * only equals the aggregates' (null-skipping) population on
+    * null-free data. A missing plan, any null or a `trainSegs` of None
+    * takes the per-fold source instead: [[fitModelAndScaler]] on every
+    * fold's `trainFold`, then on the whole frame, whose pairwise-deletion
+    * semantics match a flat fit exactly. */
+  private def foldFits(indexed: DataFrame, tags: Seq[String], y: Seq[String],
+                       orderCol: String, base: Reconstructor, scalerKind: String,
+                       folds: Seq[CrossValidate.Fold], segEnds: Seq[Long],
+                       trainSegs: Seq[Int] => Option[Seq[(CrossValidate.Fold, Seq[Int])]])
+      : (Seq[(CrossValidate.Fold, Fit)], Fit) = {
+    val feat: String => Column = t => qc(t).cast("double")
+    def segmented[B](plan: SegPlan[B, Fit]): Option[(Seq[(CrossValidate.Fold, Fit)], Fit)] = {
+      val checkCols = (tags ++ y).distinct
+      val aggs = (count(lit(1)).as("__n_all") +:
+        count(col(orderCol)).as("__n_ord") +:
+        checkCols.zipWithIndex.map { case (t, i) => count(feat(t)).as(s"__n_$i") }) ++
+        plan.aggs
+      val segRows = indexed
+        .groupBy(CrossValidate.spanId((0L +: segEnds.init).zip(segEnds)).as("__seg"))
+        .agg(aggs.head, aggs.tail: _*).collect()
+      val clean = segRows.forall { r =>
+        val na = r.getAs[Long]("__n_all")
+        r.getAs[Long]("__n_ord") == na &&
+          checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
+      }
+      if (!clean) None
+      else {
+        val bufs = segRows.map(r => r.getAs[Int]("__seg") -> plan.fromRow(r)).toMap
+        val present = bufs.keys.toSeq.sorted
+        def fitOf(segs: Seq[Int]): Fit = plan.decode(segs.map(bufs).reduce(plan.merge))
+        trainSegs(present).map(ts =>
+          (ts.map { case (f, segs) => f -> fitOf(segs) }, fitOf(present)))
+      }
+    }
+    val plan = for {
+      mp <- base.segPlan(tags, y, feat)
+      sp <- Scalers.segPlan(scalerKind, y)
+    } yield pairPlan(mp, sp)
+    plan.flatMap(segmented(_)).getOrElse((
+      folds.map(f => f -> fitModelAndScaler(CrossValidate.trainFold(indexed, f),
+        tags, y, base, scalerKind)),
+      fitModelAndScaler(indexed, tags, y, base, scalerKind)))
+  }
+
+  /** A model plan and an error-scaler plan as one plan over both buffers. */
+  private def pairPlan[MB, SB](mp: SegPlan[MB, Fitted], sp: SegPlan[SB, FittedScaler])
+      : SegPlan[(MB, SB), Fit] = SegPlan[(MB, SB), Fit](
+    mp.aggs ++ sp.aggs,
+    row => (mp.fromRow(row), sp.fromRow(row)),
+    (a, b) => (mp.merge(a._1, b._1), sp.merge(a._2, b._2)),
+    buf => (mp.decode(buf._1), sp.decode(buf._2)))
+
+  /** The CV test pass [[fit]] and [[fitKfcv]] share: every row of a
+    * fold's test span with its fold id `__fold`, scored by that fold's
+    * fit — the scaled `__mse`, the per-target `__mae_<t>` and, with
+    * `withPredictions`, the `__y_<t>`/`__p_<t>` fold-metric inputs. */
+  private def scoreTestSpans(indexed: DataFrame, folds: Seq[CrossValidate.Fold],
+                             fits: Seq[(CrossValidate.Fold, Fit)], y: Seq[String],
+                             withPredictions: Boolean): DataFrame = {
+    def byFold(e: Fit => Column): Column =
+      CrossValidate.onFold(fits.map { case (f, fit) => f.index -> e(fit) })
+    val predictions =
+      if (!withPredictions) Nil
+      else y.flatMap(t => Seq(qc(t).as(s"__y_$t"),
+        byFold(_._1.predictCol(t)).as(s"__p_$t")))
+    indexed
+      .withColumn("__fold",
+        CrossValidate.spanId(folds.map(f => (f.testStart, f.testEnd))))
+      .filter(col("__fold").isNotNull)
+      .select((col("__row") +: col("__fold") +:
+        byFold { case (m, sc) => scaledMseCol(m, sc, y) }.as("__mse") +:
+        (y.map(t => byFold { case (m, _) => abs(qc(t) - m.predictCol(t)) }
+          .as(s"__mae_$t")) ++ predictions)): _*)
   }
 
   private def fitScaler(kind: String, df: DataFrame, tags: Seq[String]): FittedScaler =

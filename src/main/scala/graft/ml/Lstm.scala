@@ -29,7 +29,7 @@ import graft.ml.DiffAnomaly.{Fitted, RowReconstructor}
   * function per row, and per-target predictions share the forward array
   * through codegen subexpression elimination.
   *
-  * Cross-validation takes the fused path like [[Mlp]]: as a
+  * Cross-validation takes the segmented fit source like [[Mlp]]: as a
   * [[DiffAnomaly.RowReconstructor]], one segmented pass collects the
   * rows and every fold trains on its merged, time-ordered rows.
   */

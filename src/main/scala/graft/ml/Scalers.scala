@@ -37,8 +37,8 @@ object Scalers {
 
   /** Single-pass protocol: (aggregate columns, result-row decoder) so a
     * caller can fuse the scaler fit into ITS aggregation pass over the
-    * same frame (the CV fold loop fits model + scaler in one job). Agg
-    * aliases are name-spaced per scaler, so plans compose. */
+    * same frame (the per-fold CV fit source fits model + scaler in one
+    * job). Agg aliases are name-spaced per scaler, so plans compose. */
   def aggPlan(kind: String, cols: Seq[String])
       : (Seq[org.apache.spark.sql.Column], org.apache.spark.sql.Row => FittedScaler) =
     kind match {

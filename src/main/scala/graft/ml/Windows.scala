@@ -93,7 +93,7 @@ object Windows {
       chunkSize, totalRows)
 
   /** Multi-width variant: each output column carries its own trailing
-    * width (the CV fold loop computes the width-6 thresholds AND the
+    * width (the CV test pass computes the width-6 thresholds AND the
     * width-144 smooth thresholds in ONE pass — carry rows cover the
     * largest width; narrower frames are correct a fortiori).
     *

@@ -108,7 +108,7 @@ object AnomalyQueries {
     // carries a DERIVATION VERSION (v1 = click/view tags, complete-bucket
     // filter, +366d sentinel): the witness only tracks the source table,
     // so a changed derivation must bump the version or the cache serves
-    // the stale frame and fails the oracle as a phantom bug (r12 verdict).
+    // the stale frame and fails the oracle as a phantom bug.
     val in = graft.Scratch.ensureBuilt(graft.Scratch.cachedDir(
       "graft-stream-in", graft.Tables.witness(dir, "events"),
       version = "v1")) { stage =>
@@ -262,7 +262,7 @@ object AnomalyQueries {
     * whose info.json has NO checksum (or `checksum: null`) is its own
     * named diagnostic row, not an anonymous NoSuchElementException/NPE —
     * the same hole Persistence.loadFull and AnnIndex.load close with a
-    * contract reject (r13); here the contract is a report, so the fact
+    * contract reject; here the contract is a report, so the fact
     * reports. A present checksum pins equality against the recomputed
     * sha256 as before. */
   private[graft] def checksumFact(info: Map[String, Any],
@@ -491,7 +491,7 @@ object AnomalyQueries {
     (lagged, fitted)
   }
 
-  /** M6 sequence-model SERVING, oracle-gated (r10 verdict item 3): the
+  /** M6 sequence-model SERVING, oracle-gated: the
     * q51 lag-feature detector served through a real checkpointed
     * streaming job — rows arrive already windowed (the reference's
     * serving contract: clients supply `window` rows of ordered history,
@@ -511,7 +511,7 @@ object AnomalyQueries {
     // frame): the witness only tracks the source table, so a future
     // change to the lag spec must bump the version or the cache keeps
     // serving the stale frame and fails the oracle as a phantom
-    // streaming bug (r11 ADVICE). ensureBuilt stages privately and
+    // streaming bug. ensureBuilt stages privately and
     // atomically renames into the slot — two JVMs that both see the
     // marker missing cannot race interleaved part files into one dir.
     val in = graft.Scratch.ensureBuilt(graft.Scratch.cachedDir(

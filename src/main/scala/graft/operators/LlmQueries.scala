@@ -34,14 +34,13 @@ object LlmQueries {
   /** Per-document token counts and the composite quality score. */
   def qualityScores(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // kernels BELOW the ORDER BY exchange, behind a CONDITIONAL spread
-    // (r15, fixing the r14 kernels-above-exchange shape): evaluating the
-    // kernels above a range exchange of (doc_id, text) made the sort
-    // shuffle carry the raw corpus — at lake scale the scan already has
-    // ≥ cores splits and the kernels run parallel in the scan stage, so
-    // that shape range-shuffled every text byte for zero parallelism
-    // gain (guide §2.3: shuffle fewer bytes beats §2.5 above the
-    // exchange). The round-robin spread fires ONLY when the scan has
+    // kernels BELOW the ORDER BY exchange, behind a CONDITIONAL spread:
+    // evaluating the kernels above a range exchange of (doc_id, text)
+    // would make the sort shuffle carry the raw corpus — at lake scale
+    // the scan already has ≥ cores splits and the kernels run parallel
+    // in the scan stage, so that shape range-shuffles every text byte
+    // for zero parallelism gain (shuffling fewer bytes beats computing
+    // above the exchange). The round-robin spread fires ONLY when the scan has
     // fewer splits than the session's parallelism (a small file = one
     // task) and is a no-op at scale; the ORDER BY's range exchange then
     // carries doc_id + three scalars, never the text.
@@ -109,8 +108,8 @@ object LlmQueries {
       TextDedup.withShingles(spread(Tables(spark, dir, "documents")),
         "doc_id", "text", ngram = 3)).df
 
-  /** The SHARED verified MinHash near-dup pair frame for q34/q87 (r15,
-    * guide §2.4 reuse): the banded candidate join + exact-Jaccard verify
+  /** The SHARED verified MinHash near-dup pair frame for q34/q87
+    * (reuse): the banded candidate join + exact-Jaccard verify
     * is the expensive pipeline both queries derive, and q87 additionally
     * reads it TWICE (the connected-components edge list symmetrizes via
     * a union of (a,b) and (b,a) projections). One session cache — the
@@ -147,8 +146,8 @@ object LlmQueries {
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // kernels below the ORDER BY exchange behind the conditional spread
-    // (r15 — the qualityScores rationale): the sort shuffle carries
-    // doc_id + two scalar fractions, never the text.
+    // (the qualityScores rationale): the sort shuffle carries doc_id +
+    // two scalar fractions, never the text.
     spread(Tables(spark, dir, "documents").select($"doc_id", $"text"))
       .select($"doc_id",
         r4(TextAnalysis.dupWordFrac($"text")).as("dup_word_frac"),
@@ -171,8 +170,7 @@ object LlmQueries {
   private def spreadDocs(spark: SparkSession, dir: String): DataFrame =
     spread(Tables(spark, dir, "documents"))
 
-  /** The SHARED contamination hits frame for q89/q90 (r15, guide §2.4
-    * reuse): the 8-gram explode + benchmark join + per-doc distinct
+  /** The SHARED contamination hits frame for q89/q90 (reuse): the 8-gram explode + benchmark join + per-doc distinct
     * count is the expensive pipeline BOTH queries derive — q90's
     * contaminationFull composes the exact same contamination() subplan,
     * so one session cache (canonical-plan matched by the CacheManager)
@@ -189,8 +187,7 @@ object LlmQueries {
       .orderBy($"doc_id")
   }
 
-  /** [[contaminationScan]]'s FULL variant, oracle-gated (r10 verdict
-    * item 2): one row for EVERY non-benchmark corpus doc — clean docs
+  /** [[contaminationScan]]'s FULL variant, oracle-gated: one row for EVERY non-benchmark corpus doc — clean docs
     * (no shared 8-grams, or shorter than 8 tokens) report n_shared = 0,
     * so `n_shared == 0` really selects the clean set (the inner-join
     * contract's documented foot-gun that [[TextDedup.contaminationFull]]
@@ -310,8 +307,8 @@ object LlmQueries {
     * — `planesFor(N)` (planes ∝ log N, the 100-TB knob) derives the
     * plane count from one corpus count, 4 OR-combined hash tables for
     * recall, pair-dedup, exact cosine ≥ 0.4 verification. This gates the
-    * configuration the library actually ships at scale (round-4 verdict:
-    * the fixed-planes form is the documented quadratic anti-pattern and
+    * configuration the library actually ships at scale (the
+    * fixed-planes form is the documented quadratic anti-pattern and
     * survives only in the scale table); the oracle replays
     * `ceil(log2(N/32))` from its own count, so the gate breaks if the
     * auto-sizing math drifts. */
@@ -328,7 +325,7 @@ object LlmQueries {
     * family next to MinHash (q34) and embedding-cosine (q42). */
   def simhashNearDups(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // conditional post-scan spread (r14, the shingleFrame/spreadDocs
+    // conditional post-scan spread (the shingleFrame/spreadDocs
     // rationale): the simhash32 kernel — one digest per token — is the
     // expensive per-row work and otherwise evaluates at input-split
     // parallelism on BOTH sides of the band self-join (one task each on
@@ -341,7 +338,7 @@ object LlmQueries {
 
   /** EXACT n-gram Jaccard dedup at the recall-oriented t = 0.3 — the
     * total-recall contrast to MinHash's probabilistic candidates.
-    * `jaccardPairs` routes by threshold (round 9): below t = 0.5 it
+    * `jaccardPairs` routes by threshold: below t = 0.5 it
     * runs the direct posting join with in-join aggregation — at loose
     * thresholds the prefix is ~70% of each doc, candidates approach
     * "every pair sharing any shingle", and the verify re-explosion
@@ -420,10 +417,10 @@ object LlmQueries {
   def winnowing(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // kernel below the ORDER BY exchange behind the conditional spread
-    // (r15 — the qualityScores rationale): the r14 shape range-shuffled
-    // (doc_id, text) so the winnowing walk could run above the
-    // exchange, which at lake scale ships the whole corpus through the
-    // sort shuffle for zero parallelism gain. Spread conditionally,
+    // (the qualityScores rationale): range-shuffling (doc_id, text) so
+    // the winnowing walk could run above the exchange would, at lake
+    // scale, ship the whole corpus through the sort shuffle for zero
+    // parallelism gain. Spread conditionally,
     // compute the walk in the (already parallel at scale) map side, and
     // let the final sort exchange carry only (doc_id, fp) scalars.
     TextDedup.winnowingFingerprints(
@@ -443,15 +440,13 @@ object LlmQueries {
   def sqlKernels(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     Tables(spark, dir, "documents").createOrReplaceTempView("graft_documents_q58")
-    // kernels below the ORDER BY exchange behind the conditional spread
-    // (r15, fixing the r14 kernels-above-exchange shape): the r14 plan
-    // range-shuffled (doc_id, text, tk) — the corpus TWICE over, text
-    // plus its tokenized copy — so the kernels could run above the
-    // exchange; at lake scale the scan already has ≥ cores splits and
-    // the kernels run parallel below it anyway. The conditional
-    // round-robin spread (no-op at scale) restores bench-scale
-    // parallelism, and the final sort exchange carries doc_id + three
-    // scalar kernel outputs only (guide §2.3: shuffle fewer bytes).
+    // kernels below the ORDER BY exchange behind the conditional spread:
+    // running them above the exchange would range-shuffle (doc_id,
+    // text, tk) — the corpus TWICE over, text plus its tokenized copy;
+    // at lake scale the scan already has ≥ cores splits and the kernels
+    // run parallel below it anyway. The conditional round-robin spread
+    // (no-op at scale) restores bench-scale parallelism, and the final
+    // sort exchange carries doc_id + three scalar kernel outputs only.
     spread(spark.sql(
       "SELECT doc_id, text FROM graft_documents_q58"))
       .selectExpr("doc_id", "text", "split(trim(text), ' ') AS tk")
@@ -481,7 +476,7 @@ object LlmQueries {
     // carries a DERIVATION VERSION (v1 = doc_id/text projection + the
     // constant 2024-01-01 event time, 8 partitions): the witness only
     // tracks the source table, so a changed projection must bump the
-    // version or the cache serves the stale frame (r12 verdict).
+    // version or the cache serves the stale frame.
     val in = graft.Scratch.ensureBuilt(graft.Scratch.cachedDir(
       "graft-q76-in", graft.Tables.witness(dir, "documents"),
       version = "v1")) { stage =>

@@ -54,14 +54,14 @@ object MlQueries {
     import spark.implicits._
     val ev = Tables(spark, dir, "events").filter($"event_type" === "click")
     val r = TimeSeries.resample(ev, Seq("event_type"), "ts", "value", 3600L)
-    // the DiffAnomaly.fit segmented-CV shape in miniature (guide §1.2:
-    // fewer full passes): the row count rides the indexing's bounds agg,
-    // the fold train means derive from ONE segmented sum/count pass
-    // (fold i's train span = segments 0..i — prefix sums merged on the
-    // driver), and every fold's test MSE comes from ONE grouped agg.
-    // 7 jobs → 3. Merging segment sums re-associates float addition —
-    // the same class of difference as changing the partition count, and
-    // the oracle's r4 rounding is the documented tolerance for it.
+    // the DiffAnomaly.fit segmented-CV shape in miniature: the row count
+    // rides the indexing's bounds agg, the fold train means derive from
+    // ONE segmented sum/count pass (fold i's train span = segments 0..i
+    // — prefix sums merged on the driver), and every fold's test MSE
+    // comes from ONE grouped agg. Merging segment sums re-associates
+    // float addition — the same class of difference as changing the
+    // partition count, and the oracle's r4 rounding is the documented
+    // tolerance for it.
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(r, Seq($"bucket_ts"))
     val indexedLease = graft.SessionCache.acquire(indexed0)
@@ -69,11 +69,9 @@ object MlQueries {
     try {
       val n = nOpt.getOrElse(indexed.count())
       val folds = CrossValidate.timeSeriesSplit(n, 3)
-      val segOf = folds.tail.foldLeft(
-        when($"__row" < folds.head.testStart, lit(0))) {
-        (acc, f) => acc.when($"__row" < f.testStart, lit(f.index))
-      }.otherwise(lit(folds.size))
-      val segRows = indexed.groupBy(segOf.as("__seg"))
+      val segEnds = folds.map(_.testStart) :+ n
+      val segRows = indexed
+        .groupBy(CrossValidate.spanId((0L +: segEnds.init).zip(segEnds)).as("__seg"))
         .agg(sum($"value").as("__sum"), count(lit(1)).as("__cnt"))
         .collect().map(r => r.getAs[Int]("__seg") ->
           (r.getAs[Double]("__sum"), r.getAs[Long]("__cnt"))).toMap
@@ -82,16 +80,11 @@ object MlQueries {
           .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
         f.index -> s / c
       }.toMap
-      val foldOf = folds.tail.foldLeft(
-        when($"__row" < folds.head.testEnd, lit(folds.head.index))) {
-        (acc, f) => acc.when($"__row" < f.testEnd, lit(f.index))
-      }
-      val trainMeanOf = folds.tail.foldLeft(
-        when($"__fold" === folds.head.index, lit(trainMeans(folds.head.index)))) {
-        (acc, f) => acc.when($"__fold" === f.index, lit(trainMeans(f.index)))
-      }
+      val trainMeanOf = CrossValidate.onFold(
+        folds.map(f => f.index -> lit(trainMeans(f.index))))
       val testRows = indexed.filter($"__row" >= folds.head.testStart)
-        .withColumn("__fold", foldOf)
+        .withColumn("__fold",
+          CrossValidate.spanId(folds.map(f => (f.testStart, f.testEnd))))
         .groupBy($"__fold")
         .agg(r4(avg(pow($"value" - trainMeanOf, 2))).as("mse"),
           count(lit(1)).as("n_test"))

@@ -10,7 +10,7 @@ import graft.data.TimeSeries
 import graft.ml.CrossValidate
 
 /** Oracle gates for the serving/build components that were previously
-  * ScalaTest-only (round-3 verdict item 4): K2 nested JSON responses,
+  * ScalaTest-only: K2 nested JSON responses,
   * A8 CV score aggregation, P1 serve-time column verification, F8 tag
   * normalization. Each query drives the REAL component over the test
   * tables and re-expresses its observable output as rows DuckDB can
@@ -69,22 +69,17 @@ object ServingQueries {
     val ev = Tables(spark, dir, "events").filter($"event_type" === "click")
     val series = TimeSeries.resample(ev, Seq("event_type"), "ts", "value", 3600L)
       .select($"bucket_ts", $"value")
-    // the indexing's bounds aggregation already counts the rows (was a
-    // second full pass), and ALL fold scores come from ONE grouped agg
-    // over the fold id instead of one driver job per fold — 4 jobs → 2
-    // (guide §1.2: fewer passes; §2.3: aggregate before you shuffle).
-    // Values unchanged: each fold's avg aggregates exactly its test span.
+    // the indexing's bounds aggregation already counts the rows, and ALL
+    // fold scores come from ONE grouped agg over the fold id rather than
+    // one job per fold; each fold's avg aggregates exactly its test span.
     val (indexed0, nOpt) =
       CrossValidate.withRowIndexCounted(series, Seq($"bucket_ts"))
     val indexed = graft.SessionCache.acquire(indexed0).df
     val n = nOpt.getOrElse(indexed.count())
     val folds = CrossValidate.timeSeriesSplit(n, 3)
-    val foldOf = folds.tail.foldLeft(
-      when($"__row" < folds.head.testEnd, lit(folds.head.index))) {
-      (acc, f) => acc.when($"__row" < f.testEnd, lit(f.index))
-    }
     val scores = indexed.filter($"__row" >= folds.head.testStart)
-      .groupBy(foldOf.as("__fold"))
+      .groupBy(CrossValidate.spanId(folds.map(f => (f.testStart, f.testEnd)))
+        .as("__fold"))
       .agg(avg($"value").as("__avg"))
       .collect().map(r => r.getAs[Int]("__fold") -> r.getAs[Double]("__avg"))
       .toMap

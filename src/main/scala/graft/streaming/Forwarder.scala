@@ -3,8 +3,10 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryException}
 
 /** K6 forwarder analog: the reference's client forwards resampled
   * sensors + predictions into InfluxDB measurements
@@ -32,7 +34,7 @@ object Forwarder {
     * high-numbered dirs from the old run. Clear the sink (or pick a new
     * one) when reprocessing from scratch.
     *
-    * Fence ordering and portability (hardening round 10):
+    * Fence ordering and portability:
     *  - the marker is written BEFORE any `batch_id=` dir can exist — at
     *    start when the checkpoint already has metadata (a restart), and
     *    inside the first `foreachBatch` otherwise (Spark has committed
@@ -54,8 +56,10 @@ object Forwarder {
     *    directory.
     *
     * Checkpoint I/O: unless the caller already named a manager in
-    * `spark.sql.streaming.checkpointFileManagerClass`, this sets it on the
-    * stream's session to [[LocalCheckpointFileManager]] before `start()`.
+    * `spark.sql.streaming.checkpointFileManagerClass`, this query runs
+    * with [[LocalCheckpointFileManager]]; the key is set on the stream's
+    * session for the query's start and unset again once the query has
+    * initialized, so later streams on that session do not inherit it.
     * Spark's default manager pays ~30 ms of Hadoop local-filesystem work
     * per checkpoint file, and a stateful micro-batch writes one per log
     * plus two per state store; java.nio writes the same files, sidecars
@@ -207,11 +211,20 @@ object Forwarder {
     // remote sink an exists() per micro-batch is a per-trigger round
     // trip for the lifetime of the query
     @volatile var markerDone = false
+    // the checkpoint manager is this query's own setting: the caller's
+    // session gets its value back once the query holds every manager it
+    // makes. The offset and commit logs and the state stores read the
+    // session clone the query takes at construction, but the file
+    // source's metadata log reads the caller's session, on the query
+    // thread while the query initializes — so the key is unset only
+    // after initialization (a query that dies first surfaces its error
+    // to the caller through the returned handle, as before).
     val conf = stream.sparkSession.conf
-    if (conf.getOption(LocalCheckpointFileManager.confKey).isEmpty)
+    val installed = conf.getOption(LocalCheckpointFileManager.confKey).isEmpty
+    if (installed)
       conf.set(LocalCheckpointFileManager.confKey,
         classOf[LocalCheckpointFileManager].getName)
-    val q = stream.writeStream
+    try startQuery(stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!markerDone) {
           if (!sinkFs.exists(marker)) {
@@ -223,8 +236,20 @@ object Forwarder {
         }
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId"): Unit
       }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      .option("checkpointLocation", checkpointDir))
+    finally if (installed) conf.unset(LocalCheckpointFileManager.confKey)
+  }
+
+  /** Start `writer` and wait (up to a minute) until its query has
+    * initialized its sources. */
+  private def startQuery(writer: DataStreamWriter[Row]): StreamingQuery = {
+    val q = writer.start()
+    q match {
+      case w: StreamingQueryWrapper =>
+        try w.streamingQuery.awaitInitialization(60000L)
+        catch { case _: StreamingQueryException => }
+      case _ =>
+    }
     q
   }
 }

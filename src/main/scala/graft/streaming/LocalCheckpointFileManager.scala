@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.io.{BufferedOutputStream, DataOutputStream, FileNotFoundException,
   IOException, OutputStream}
+import java.net.URI
 import java.nio.file.{FileSystemException, Files, LinkOption, NoSuchFileException,
   NotDirectoryException, Paths, StandardCopyOption, StandardOpenOption,
   Path => NioPath}
@@ -12,8 +13,9 @@ import java.util.zip.CRC32
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException,
-  FileStatus, FileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataInputStream,
+  FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter,
+  RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -42,7 +44,14 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *  - `cancel`, and a failed publish, leave no temp file behind.
   *  - `list`, `exists`, `mkdirs` and `delete` are java.nio; `list` hides
   *    sidecars as `ChecksumFs` does, `delete` removes the sidecar too.
-  *  - `open` goes to Spark's own manager, so reads behave as before.
+  *  - `open` reads through Hadoop's `ChecksumFileSystem`, which checks
+  *    every chunk against the sidecar and throws `ChecksumException` on
+  *    a mismatch; a file with no sidecar reads unchecked, as in Hadoop.
+  *    Spark's own manager reads `file:` paths through `FileContext`'s
+  *    `LocalFs`, which ignores sidecars, so a flipped byte would read
+  *    back silently. The reader wraps the raw local filesystem rather
+  *    than `LocalFileSystem`, whose checksum-failure hook moves the
+  *    failing file into a `bad_files` directory at the top of the device.
   *
   * Any other scheme goes entirely to the manager
   * `CheckpointFileManager.create` picks when no class is configured.
@@ -79,7 +88,15 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
         overwriteIfPossible)
     }
 
-  override def open(p: Path): FSDataInputStream = delegate.open(p)
+  private lazy val checksummed: FileSystem = {
+    val fs = new ChecksumFileSystem(new RawLocalFileSystem) {}
+    fs.setConf(hadoopConf)
+    fs.initialize(URI.create("file:///"), hadoopConf)
+    fs
+  }
+
+  override def open(p: Path): FSDataInputStream =
+    if (!local) delegate.open(p) else checksummed.open(p)
 
   override def list(p: Path, filter: PathFilter): Array[FileStatus] =
     if (!local) delegate.list(p, filter)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Partitioning-preserving checkpoint (r14 optimization).
+/** Partitioning-preserving checkpoint.
   *
   * `Dataset.localCheckpoint`/`checkpoint` truncate lineage but record
   * `UnknownPartitioning` on the resulting `LogicalRDD` under AQE (the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.{DiffAnomaly, Lstm, Mlp}
+import graft.ml.{CrossValidate, DiffAnomaly, Lstm, Mlp, Scalers}
 import graft.ml.DiffAnomaly.{RidgeReconstructor, TrendReconstructor}
 
 class DiffAnomalySpec extends AnyFunSuite {
@@ -356,6 +356,46 @@ class DiffAnomalySpec extends AnyFunSuite {
     val (at3, at5) = (jobsAt(3), jobsAt(5))
     assert(at3 > 0, "the counter saw no job")
     assert(at5 == at3, s"jobs grew with the fold count: $at3 at 3 folds, $at5 at 5")
+  }
+
+  test("the per-fold source scores every fold in one test pass") {
+    // NoSeg forces the per-fold source: an extra fold adds its train
+    // aggregation and nothing else — all folds share one test pass
+    val noisy = (0 until 60).map { i =>
+      (i * 600L, 10.0 + i + math.sin(i * 0.9) * 3.0,
+        25.0 + 2.0 * i + math.cos(i * 1.3) * 4.0)
+    }.toDF("bucket_ts", "tx", "ty")
+    val tags = Seq("tx", "ty")
+    val base = new TrendReconstructor("bucket_ts", 0L)
+    def jobsAt(nSplits: Int): Int =
+      ExecCounts.during(spark.sparkContext) {
+        DiffAnomaly.fit(noisy, tags, "bucket_ts", new NoSeg(base), nSplits = nSplits)
+      }._2.jobs
+    // one fold's train fit: model and error-scaler aggregates in one pass
+    // over a row range of the cached indexed frame
+    val (mAggs, _) = base.aggPlan(tags, tags, t => col(t).cast("double")).get
+    val trainAggs = mAggs ++ Scalers.aggPlan("minmax", tags)._1
+    val indexed = SessionCache.acquire(CrossValidate.withRowIndex(noisy, Seq($"bucket_ts")))
+    val trainJobs = try {
+      indexed.df.count()
+      ExecCounts.during(spark.sparkContext) {
+        indexed.df.filter($"__row" < 30L).agg(trainAggs.head, trainAggs.tail: _*).head()
+      }._2.jobs
+    } finally indexed.close()
+    val (at3, at5) = (jobsAt(3), jobsAt(5))
+    assert(trainJobs > 0, "the counter saw no job")
+    assert(at5 - at3 == 2 * trainJobs,
+      s"$at3 jobs at 3 folds, $at5 at 5; one train aggregation runs $trainJobs")
+  }
+
+  test("PCA fit on a tag with no finite values fails loudly instead of fitting zero stats") {
+    val df = Seq((0L, 1.0), (1L, 2.0), (2L, 3.0))
+      .toDF("t", "tx")
+      .withColumn("ty", lit(null).cast("double"))
+    val e = intercept[IllegalArgumentException] {
+      new DiffAnomaly.PcaReconstructor(1).fit(df, Seq("tx", "ty"))
+    }
+    assert(e.getMessage.contains("null"))
   }
 
   test("kfcv with more splits than rows tolerates empty folds") {

@@ -13,7 +13,8 @@ import org.apache.hadoop.fs.{ChecksumException, ChecksumFileSystem, FSDataOutput
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.streaming.checkpointing.{CommitLog,
   CommitMetadata, FileContextBasedCheckpointFileManager}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream,
+  StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,8 +128,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     // a flipped byte fails Hadoop's checksummed read. The reader is a
     // bare ChecksumFileSystem: LocalFileSystem would move the failing
     // file into a bad_files directory at the top of the device, and
-    // FileContext's LocalFs (what the manager's open uses) reads local
-    // files without checking their sidecar
+    // FileContext's LocalFs reads local files without checking their
+    // sidecar
     val checked = new ChecksumFileSystem(new RawLocalFileSystem) {}
     checked.setConf(conf)
     checked.initialize(URI.create("file:///"), conf)
@@ -144,6 +145,26 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
       raf.write(bytes(700) ^ 0x01)
     } finally raf.close()
     intercept[ChecksumException](readChecked(victim))
+  }
+
+  test("open checks the sidecar: a flipped byte throws, an intact file reads back") {
+    val root = Paths.get(Scratch.dir("graft-lcfm-open"))
+    val fm = new LocalCheckpointFileManager(hpath(root), new Configuration())
+    val bytes = new Array[Byte](1300)
+    new java.util.Random(11).nextBytes(bytes)
+    val (intact, victim) = (root.resolve("intact"), root.resolve("victim"))
+    for (f <- Seq(intact, victim)) write(fm, f, bytes, overwrite = false)
+    val raf = new RandomAccessFile(victim.toFile, "rw")
+    try {
+      raf.seek(700)
+      raf.write(bytes(700) ^ 0x01)
+    } finally raf.close()
+    intercept[ChecksumException](read(fm, victim))
+    assert(read(fm, intact).sameElements(bytes))
+    // no sidecar: the bytes read unchecked, as Hadoop reads them
+    Files.delete(sidecarOf(intact))
+    assert(read(fm, intact).sameElements(bytes))
+    assert(Files.exists(victim), "the failing file was moved away")
   }
 
   test("a non-file path delegates to Spark's manager") {
@@ -168,21 +189,28 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     implicit val ctx = s.sqlContext
     import s.implicits._
     val root = Scratch.dir("graft-lcfm-fwd")
-    def forward(tag: String): Unit = {
+    /** The manager the running query's own session names. */
+    def forward(tag: String): String = {
       val input = MemoryStream[(Long, Double)]
       val q = Forwarder.toParquet(input.toDF().toDF("ts", "value"),
         s"$root/$tag/out", s"$root/$tag/ckpt")
       try {
         input.addData((1L, 1.5))
         q.processAllAvailable()
+        // the query's session clone (`protected[sql]`, public in bytecode)
+        val se = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        se.getClass.getMethod("sparkSessionForStream").invoke(se)
+          .asInstanceOf[org.apache.spark.sql.SparkSession].conf.get(key)
       } finally q.stop()
     }
     s.conf.set(key, sparkDefault)
-    forward("kept")
+    assert(forward("kept") == sparkDefault)
     assert(s.conf.get(key) == sparkDefault)
     s.conf.unset(key)
-    forward("installed")
-    assert(s.conf.get(key) == ours)
+    // installed for the query alone: a later stream on the caller's
+    // session must not inherit it
+    assert(forward("installed") == ours)
+    assert(s.conf.getOption(key).isEmpty, s"leaked: ${s.conf.getOption(key)}")
   }
 
   test("an anomalyJob checkpoint restarts across Spark's manager and this one") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ml.{CrossValidate, Ewma, InfImputer, Metrics, Scalers}
+import graft.ml.{CrossValidate, Ewma, InfImputer, Metrics, Scalers, Windows}
 
 class MlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -169,5 +169,82 @@ class MlSpec extends AnyFunSuite {
   test("every ML query key has a matching oracle") {
     import graft.operators.MlQueries
     assert(MlQueries.oracleSql.keySet == MlQueries.queries.keySet)
+  }
+
+  test("slidingWindows: lookahead target is the series value at t+lookahead even across dropped null rows") {
+    // v(2) = null ⇒ rows t=2,3 drop (short windows), but t=1's forecast
+    // target is STILL v(2) = null — lead() over the filtered frame
+    // would silently hand it v(4), a target 3 steps ahead instead of 1
+    val df = Seq(("a", 0L, Some(1.0)), ("a", 1L, Some(2.0)),
+      ("a", 2L, Option.empty[Double]), ("a", 3L, Some(4.0)),
+      ("a", 4L, Some(5.0)), ("a", 5L, Some(6.0)))
+      .toDF("k", "t", "v")
+    val got = Windows.slidingWindows(df, Seq("k"), Seq(col("t")), "v",
+      lookback = 2, lookahead = 1)
+      .select($"t", $"y").collect()
+      .map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    assert(got == Map(1L -> None, 4L -> Some(6.0), 5L -> None))
+  }
+
+  test("metrics: r2 and explained variance score over the PAIRED population when predictions have nulls") {
+    // pairs present: (0,0), (10,12); the (20, null) row is out of BOTH
+    // numerator and denominator — sklearn drops the sample, it does not
+    // keep y=20 in the variance
+    val df = Seq((0.0, Some(0.0)), (10.0, Some(12.0)),
+      (20.0, Option.empty[Double])).toDF("y", "p")
+    val row = df.agg(
+      Metrics.r2($"y", $"p").as("r2"),
+      Metrics.explainedVariance($"y", $"p").as("ev")).head()
+    // paired: ȳ=5, var_pop=25, n=2 ⇒ r2 = 1 − 4/50; residual var_pop=1
+    // over paired var 25 ⇒ ev = 1 − 1/25
+    assert(math.abs(row.getDouble(0) - 0.92) < 1e-12)
+    assert(math.abs(row.getDouble(1) - 0.96) < 1e-12)
+  }
+
+  test("chunkedTrailing: a frame containing a null observation scores null (pandas min_periods = window)") {
+    val vs = Seq(Some(1.0), Some(2.0), None, Some(4.0), Some(5.0),
+      Some(6.0), Some(7.0))
+    val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("__row", "v")
+    for (chunkSize <- Seq(4, 4096)) { // carry path and bounded path
+      val got = Windows.chunkedTrailing(df, "__row", 0L, width = 3,
+        Seq(("v", "o", "min")), chunkSize = chunkSize,
+        totalRows = if (chunkSize == 4096) vs.size.toLong else -1L)
+        .orderBy($"__row").select($"o").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      // windows covering index 2 (rows 2, 3, 4) are partial ⇒ null,
+      // like the width−1 prefix; full frames aggregate normally
+      assert(got.toSeq == Seq(None, None, None, None, None,
+        Some(4.0), Some(5.0)), s"chunkSize=$chunkSize")
+    }
+  }
+
+  test("ewma: NaN input is a missing observation, not a permanent poison") {
+    val df = Seq(("a", 0L, 2.0), ("a", 1L, Double.NaN), ("a", 2L, 4.0))
+      .toDF("k", "t", "v")
+    val got = Ewma.ewma(df, Seq("k"), "t", "v", span = 3.0)
+      .orderBy($"t").select($"ewma").as[Double].collect()
+    // pandas ewm(span=3, adjust=True): weights (1−α)^age with α=0.5,
+    // the NaN row repeats the prior mean and t=2 uses absolute-position
+    // weights (0.25, 1) — num poisoned by NaN would make ALL of these NaN
+    val exp = Seq(2.0, 2.0, (0.25 * 2.0 + 4.0) / 1.25)
+    got.zip(exp).foreach { case (g, e) =>
+      assert(!g.isNaN && math.abs(g - e) < 1e-12, s"got=${got.toSeq}") }
+  }
+
+  test("kFold folds compose with trainFold: train = complement of the test span") {
+    val indexed = spark.range(10).select($"id".as("__row"), ($"id" * 2).as("v"))
+    val folds = CrossValidate.kFold(10, nSplits = 5)
+    folds.foreach { f =>
+      val train = CrossValidate.trainFold(indexed, f)
+        .select($"__row").as[Long].collect().toSet
+      val test = indexed
+        .filter(CrossValidate.spanId(folds.map(g => (g.testStart, g.testEnd))) === f.index)
+        .select($"__row").as[Long].collect().toSet
+      assert(test == (f.testStart until f.testEnd).toSet)
+      assert(train == (0L until 10L).toSet -- test,
+        s"fold ${f.index}: train must be the complement, not empty")
+    }
   }
 }
