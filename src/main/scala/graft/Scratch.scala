@@ -89,7 +89,13 @@ object Scratch {
     * marker over partial contents) in the live slot — into a sibling
     * named like a [[cachedDir]] key, so even a SIGKILL between the
     * move and its delete leaves only an age-sweepable sibling the next
-    * same-prefix cachedDir call reclaims, not a permanent orphan. */
+    * same-prefix cachedDir call reclaims, not a permanent orphan.
+    *
+    * A recovery that leaves the slot complete deletes its `.lock` while
+    * still holding it. That is safe because every recoverer re-checks
+    * the marker under its lock: one already waiting on the unlinked
+    * inode, or one that locks a fresh `.lock`, finds the slot complete
+    * and does nothing. */
   def publishDir(stage: String, target: String,
                  marker: String = "_SUCCESS"): Unit = {
     val src = java.nio.file.Paths.get(stage)
@@ -169,6 +175,7 @@ object Scratch {
                     "complete directory holds the slot", e)
             }
           }
+          if (complete()) Files.deleteIfExists(lockPath)
         } finally lock.release()
       } finally ch.close()
     }

@@ -375,9 +375,9 @@ object ModelRegistry {
   def reconstructorOf(stage: Stage, orderCol: String, epoch0: Long): DiffAnomaly.Reconstructor =
     stage match {
       case Reconstruction("ridge", _) => new DiffAnomaly.RidgeReconstructor()
-      case Reconstruction("mlp", _) => new graft.ml.Mlp.AutoReconstructor()
+      case Reconstruction("mlp", _) => graft.ml.Mlp.MlpReconstructor.hourglass()
       case Reconstruction("lstm", _) => new graft.ml.Lstm.LstmReconstructor()
-      case RawSpec(layers, _) => new graft.ml.Mlp.RawSpecReconstructor(layers)
+      case RawSpec(layers, _) => graft.ml.Mlp.MlpReconstructor.rawSpec(layers)
       case Reconstruction("pca", k) =>
         if (k == "all") new DiffAnomaly.PcaReconstructor(Int.MaxValue)
         else if (k.contains('.'))
@@ -392,7 +392,7 @@ object ModelRegistry {
       // the bottlenecked window autoencoder. The forecast shape (lags
       // strictly precede the target) keeps the inner reconstruction.
       case Windowed(_, 0, Reconstruction("mlp", _)) =>
-        new graft.ml.Mlp.AutoReconstructor()
+        graft.ml.Mlp.MlpReconstructor.hourglass()
       // the recurrent AE sees the current row as the last sequence step;
       // the gated bottleneck (finite epochs, shared step weights) keeps
       // the fit from collapsing to the identity, like the MLP case

@@ -109,13 +109,6 @@ object Windows {
     chunkedTrailingMultiGrouped(df, idxCol, pmod(col(idxCol), lit(1L)),
       col(idxCol) - lit(idxOffset), cols, chunkSize, boundedRows = totalRows)
 
-  /** Grouped variant: trailing frames RESET at group boundaries (each CV
-    * fold's test span rolls independently, fused into one pass). `relCol`
-    * must evaluate to a dense 0-based index within the row's group; rows
-    * with `rel < width−1` get null (the per-group pandas NaN prefix).
-    * `boundedRows`, when ≥ 0, caller-proves every group's span ≤ its
-    * value — a group partition is then already bounded and the carry
-    * machinery is skipped. */
   /** Single-scan chunk fan-out shared by every chunk+carry kernel
     * ([[chunkedTrailingMultiGrouped]], [[chunkedLag]],
     * `TimeSeries.rowFilterWithBuffer`): each row EXPLODES into its own
@@ -147,6 +140,13 @@ object Windows {
       .drop("__we")
   }
 
+  /** Grouped variant: trailing frames RESET at group boundaries (each CV
+    * fold's test span rolls independently, fused into one pass). `relCol`
+    * must evaluate to a dense 0-based index within the row's group; rows
+    * with `rel < width−1` get null (the per-group pandas NaN prefix).
+    * `boundedRows`, when ≥ 0, caller-proves every group's span ≤ its
+    * value — a group partition is then already bounded and the carry
+    * machinery is skipped. */
   def chunkedTrailingMultiGrouped(df: DataFrame, idxCol: String,
                                   groupCol: Column, relCol: Column,
                                   cols: Seq[(String, String, String, Int)],

@@ -125,11 +125,7 @@ object AnomalyQueries {
       long.union(sentinel).write.mode("overwrite").parquet(stage)
     }
     val tmp = graft.Scratch.dir("graft-stream")
-    // state-partition sizing knob (StreamSizing): default-off = the
-    // caller's session, today's state-store count; when configured the
-    // stream (and only the stream) runs at the requested count, pinned
-    // into the fresh checkpoint
-    val stream = graft.streaming.StreamSizing.sessionFor(spark).readStream
+    val stream = spark.readStream
       .schema("tag STRING, ts TIMESTAMP, value DOUBLE")
       .parquet(in)
     val q = graft.streaming.StreamingScoring.anomalyJob(fitted, "m1",
@@ -519,8 +515,7 @@ object AnomalyQueries {
       stage => lagged.coalesce(2).write.mode("overwrite").parquet(stage)
     }
     val tmp = graft.Scratch.dir("graft-q91")
-    // state-partition sizing knob (StreamSizing) — default-off, see q69
-    val stream = graft.streaming.StreamSizing.sessionFor(spark).readStream
+    val stream = spark.readStream
       .schema("bucket_ts BIGINT, click DOUBLE, " +
         "click_lag1 DOUBLE, click_lag2 DOUBLE")
       .parquet(in)

@@ -73,6 +73,18 @@ object LlmQueries {
       .orderBy($"doc_id")
   }
 
+  /** Conditional round-robin spread (guide §2.5, unsplittable-input
+    * case): fires ONLY when the frame has fewer partitions than the
+    * session's parallelism — a small file scans as one task, so
+    * expensive per-row kernels computed over it ran single-threaded
+    * while the other cores idled. A no-op at lake scale where the scan
+    * already has ≥ cores splits, so no payload shuffle is added where
+    * parallelism exists. */
+  private def spread(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+  }
+
   /** The SHARED cached shingle frame for q34/q46/q52/q87.
     *
     * Shingling is shared by candidate generation AND verification —
@@ -91,18 +103,6 @@ object LlmQueries {
     * §2.5, unsplittable-input case). At lake scale the scan already has
     * ≥ cores splits and the condition is false, so no payload shuffle
     * is added where parallelism exists. */
-  /** Conditional round-robin spread (guide §2.5, unsplittable-input
-    * case): fires ONLY when the frame has fewer partitions than the
-    * session's parallelism — a small file scans as one task, so
-    * expensive per-row kernels computed over it ran single-threaded
-    * while the other cores idled. A no-op at lake scale where the scan
-    * already has ≥ cores splits, so no payload shuffle is added where
-    * parallelism exists. */
-  private def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   private def shingleFrame(spark: SparkSession, dir: String): DataFrame =
     graft.SessionCache.acquire(
       TextDedup.withShingles(spread(Tables(spark, dir, "documents")),
@@ -486,10 +486,7 @@ object LlmQueries {
         .repartition(8).write.mode("overwrite").parquet(stage)
     }
     val tmp = graft.Scratch.dir("graft-q76")
-    // state-partition sizing knob (StreamSizing): default-off = today's
-    // state-store count; when configured the stream runs at the
-    // requested count, pinned into the fresh checkpoint
-    val stream = graft.streaming.StreamSizing.sessionFor(spark).readStream
+    val stream = spark.readStream
       .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", "3")
       .parquet(in)

@@ -140,8 +140,8 @@ class DiffAnomalySpec extends AnyFunSuite {
   /** The families that collect their training rows (few epochs: the
     * tests compare paths, not model quality). */
   private def collectBased: Seq[DiffAnomaly.Reconstructor] = Seq(
-    new Mlp.AutoReconstructor(epochs = 30),
-    new Mlp.RawSpecReconstructor(Seq((3, "tanh"), (2, "linear")), epochs = 30),
+    Mlp.MlpReconstructor.hourglass(epochs = 30),
+    Mlp.MlpReconstructor.rawSpec(Seq((3, "tanh"), (2, "linear")), epochs = 30),
     new Lstm.LstmReconstructor(epochs = 20))
 
   /** Exact equality of everything a fit produces (NaN equals NaN). */
@@ -351,7 +351,7 @@ class DiffAnomalySpec extends AnyFunSuite {
     def jobsAt(nSplits: Int): Int =
       ExecCounts.during(spark.sparkContext) {
         DiffAnomaly.fit(series, Seq("tx", "ty"), "bucket_ts",
-          new Mlp.AutoReconstructor(epochs = 10), nSplits = nSplits)
+          Mlp.MlpReconstructor.hourglass(epochs = 10), nSplits = nSplits)
       }._2.jobs
     val (at3, at5) = (jobsAt(3), jobsAt(5))
     assert(at3 > 0, "the counter saw no job")

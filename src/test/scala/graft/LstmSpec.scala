@@ -112,6 +112,20 @@ class LstmSpec extends AnyFunSuite {
     assert(f3.params != f1.params)
   }
 
+  test("seeded LSTM fits pin their params bit for bit") {
+    // forecast over lag columns (two steps) and the single-step cell
+    val lagged = graft.ml.Windows.withLookback(
+      wide, Seq("tx", "ty"), "bucket_ts", 2, 1)._1
+    val xTags = Seq("tx__lag1", "tx__lag2", "ty__lag1", "ty__lag2")
+    val yTags = Seq("tx", "ty")
+    val r = new Lstm.LstmReconstructor(seed = 0L, epochs = 40)
+    assert(MlpSpec.paramDigest(
+      r.fit(lagged, xTags, yTags, graft.Cols.q).params) ==
+      "07e5dedb8dfcdd3bca5d1c87dc1d20e637b85412e57b48f4edea95dde5f13c0e")
+    assert(MlpSpec.paramDigest(r.fit(wide, yTags).params) ==
+      "6e79fb6ee80652f99fe88e3f0c62570253889e678bf4ae15de2e8bca00387944")
+  }
+
   test("BPTT gradients match finite differences of an independent forward pass") {
     // Adam's FIRST step is -lr * grad/(|grad| + eps) — pure sign(grad) —
     // so (params after 1 epoch) - (init params) must move OPPOSITE the

@@ -17,11 +17,11 @@ class MlpSpec extends AnyFunSuite {
   }.toDF("bucket_ts", "tx", "ty")
 
   test("MLP fit is bit-deterministic for a fixed seed") {
-    val r = new Mlp.MlpReconstructor(Seq(2), seed = 0L, epochs = 50)
+    val r = Mlp.MlpReconstructor.mirrored(Seq(2), seed = 0L, epochs = 50)
     val a = r.fit(wide, Seq("tx", "ty")).params
     val b = r.fit(wide, Seq("tx", "ty")).params
     assert(a == b)
-    val c = new Mlp.MlpReconstructor(Seq(2), seed = 1L, epochs = 50)
+    val c = Mlp.MlpReconstructor.mirrored(Seq(2), seed = 1L, epochs = 50)
       .fit(wide, Seq("tx", "ty")).params
     assert(a != c)
   }
@@ -32,7 +32,7 @@ class MlpSpec extends AnyFunSuite {
     // finite-difference gradient of an INDEPENDENTLY reimplemented
     // forward/loss at the init point (the LstmSpec check, for the MLP).
     val xTags = Seq("tx", "ty")
-    def fitEpochs(e: Int) = new Mlp.MlpReconstructor(Seq(3), seed = 0L,
+    def fitEpochs(e: Int) = Mlp.MlpReconstructor.mirrored(Seq(3), seed = 0L,
       epochs = e).fit(wide, xTags)
     val p0 = fitEpochs(0).params
     val p1 = fitEpochs(1).params
@@ -88,9 +88,22 @@ class MlpSpec extends AnyFunSuite {
       s"gradient check must cover most weights, got $checked/${weightKeys.size}")
   }
 
+  test("seeded MLP fits pin their params bit for bit") {
+    // a digest of every param's raw bits: any change to the training
+    // arithmetic (init, standardization, summation order, Adam) moves it
+    val tags = Seq("tx", "ty")
+    val hourglass = Mlp.MlpReconstructor.hourglass(seed = 0L, epochs = 60)
+    val rawSpec = Mlp.MlpReconstructor.rawSpec(
+      Seq((3, "tanh"), (2, "linear")), seed = 0L, epochs = 60)
+    assert(MlpSpec.paramDigest(hourglass.fit(wide, tags).params) ==
+      "5b2a03f26f50d9a6a9f20762e9495a4b51976e2f7e3945aa809f36cf51bc1fb9")
+    assert(MlpSpec.paramDigest(rawSpec.fit(wide, tags).params) ==
+      "02bda054f0186b87bb437202b30906bbe70bcbe44cfd948f1e51c088b230833b")
+  }
+
   test("MLP learns: training reduces reconstruction error vs the init") {
     def mse(epochs: Int): Double = {
-      val m = new Mlp.MlpReconstructor(Seq(2), seed = 0L, epochs = epochs)
+      val m = Mlp.MlpReconstructor.mirrored(Seq(2), seed = 0L, epochs = epochs)
         .fit(wide, Seq("tx", "ty"))
       wide.select(avg(
         pow(m.predictCol("tx") - $"tx", 2) +
@@ -112,7 +125,7 @@ class MlpSpec extends AnyFunSuite {
         else java.lang.Double.valueOf(10.0 + i * 0.5),
         java.lang.Double.valueOf(25.0 + i * 1.0))
     }.toDF("bucket_ts", "tx", "ty")
-    val m = new Mlp.MlpReconstructor(Seq(2), seed = 0L, epochs = 50)
+    val m = Mlp.MlpReconstructor.mirrored(Seq(2), seed = 0L, epochs = 50)
       .fit(withNull, Seq("tx", "ty"))
     // row 5 has a null input → null prediction (not a task crash)
     val preds = withNull.select($"bucket_ts", m.predictCol("tx").as("p"))
@@ -124,7 +137,7 @@ class MlpSpec extends AnyFunSuite {
   test("MLP round-trips through model persistence bit-for-bit") {
     val tmp = Scratch.dir("graft-mlp")
     val fitted = DiffAnomaly.fit(wide, Seq("tx", "ty"), "bucket_ts",
-      new Mlp.MlpReconstructor(Seq(2), seed = 0L, epochs = 100), nSplits = 3)
+      Mlp.MlpReconstructor.mirrored(Seq(2), seed = 0L, epochs = 100), nSplits = 3)
     graft.build.Persistence.save(tmp,
       graft.build.Persistence.stateOf(fitted, 0L))
     val loaded = graft.build.Persistence.load(tmp)
@@ -468,5 +481,20 @@ class MlpSpec extends AnyFunSuite {
         graft.config.Config.datasetConfig(res.spec)), 600L)
     assert(frame.count() == 80)
     assert(frame.filter($"`model-output.tx`".isNull).count() == 0)
+  }
+}
+
+object MlpSpec {
+  /** SHA-256 over a fit's params in key order: each key's UTF-8 bytes,
+    * a 0 separator, then the value's raw IEEE-754 bits. */
+  def paramDigest(p: Map[String, Double]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    p.toSeq.sortBy(_._1).foreach { case (k, v) =>
+      md.update(k.getBytes("UTF-8"))
+      md.update(0.toByte)
+      md.update(java.nio.ByteBuffer.allocate(8)
+        .putLong(java.lang.Double.doubleToRawLongBits(v)).array())
+    }
+    md.digest().map(b => f"$b%02x").mkString
   }
 }

@@ -71,7 +71,7 @@ class PartitionInvarianceSpec extends AnyFunSuite {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try graft.ml.DiffAnomaly.fit(series, Seq("tx", "ty"), "bucket_ts",
-        new graft.ml.Mlp.AutoReconstructor(epochs = 20), nSplits = 3)
+        graft.ml.Mlp.MlpReconstructor.hourglass(epochs = 20), nSplits = 3)
       finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
     val (a, b) = (fitAt("2"), fitAt("7"))

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +16,6 @@ class Round12FixesSpec extends AnyFunSuite {
     Files.writeString(d.resolve("part-0"), content)
     if (marker) Files.createFile(d.resolve("_SUCCESS"))
     d.toString
-  }
-
-  /** Delete a slot and the `.lock` a recovery leaves beside it. */
-  private def dropSlot(target: Path): Unit = {
-    Scratch.deleteTree(target)
-    Files.deleteIfExists(
-      target.resolveSibling(target.getFileName.toString + ".lock")): Unit
   }
 
   test("publishDir moves a complete stage into an empty slot atomically") {
@@ -54,7 +47,18 @@ class Round12FixesSpec extends AnyFunSuite {
     Scratch.publishDir(mkStage("rebuilt"), target.toString)
     assert(Files.readString(target.resolve("part-0")) == "rebuilt")
     assert(Files.exists(target.resolve("_SUCCESS")))
-    dropSlot(target)
+    Scratch.deleteTree(target)
+  }
+
+  test("a recovering publish leaves no .lock beside the completed slot") {
+    val target = Paths.get(Scratch.dir("graft-r12-slot"))
+    Files.writeString(target.resolve("part-0"), "crashed-partial")
+    Scratch.publishDir(mkStage("rebuilt"), target.toString)
+    assert(Files.exists(target.resolve("_SUCCESS")))
+    assert(!Files.exists(
+      target.resolveSibling(target.getFileName.toString + ".lock")),
+      "the recovery must delete its lock file once the slot is complete")
+    Scratch.deleteTree(target)
   }
 
   test("concurrent publishers race one slot: exactly one complete copy wins") {
@@ -121,7 +125,7 @@ class Round12FixesSpec extends AnyFunSuite {
     assert(Files.exists(target.resolve("_SUCCESS")))
     assert(Files.readString(target.resolve("part-0"))
       .startsWith("recoverer-"))
-    dropSlot(target)
+    Scratch.deleteTree(target)
     stages.foreach(s => Scratch.deleteTree(Paths.get(s)))
   }
 

@@ -251,16 +251,21 @@ class Round13FixesSpec extends AnyFunSuite {
       target.resolveSibling(target.getFileName.toString + ".lock")
     Files.createFile(lockPath)
     assert(lockPath.toFile.setLastModified(staleMs))
+    // a second name for the lock's inode: the recovery deletes the
+    // slot's .lock once the slot is complete, and this name still reads
+    // the mtime the recovery gave that inode
+    val inode = Files.createLink(
+      lockPath.resolveSibling(lockPath.getFileName.toString + ".inode"), lockPath)
     val t0 = System.currentTimeMillis()
     val stage = Paths.get(Scratch.dir("graft-r13-stage"))
     Files.writeString(stage.resolve("part-0"), "rebuilt")
     Files.createFile(stage.resolve("_SUCCESS"))
     Scratch.publishDir(stage.toString, target.toString)
     assert(Files.readString(target.resolve("part-0")) == "rebuilt")
-    assert(lockPath.toFile.lastModified >= t0 - 5000,
+    assert(inode.toFile.lastModified >= t0 - 5000,
       "recovery must renew the lock file's mtime (it was 7h stale)")
     Scratch.deleteTree(target)
-    Files.deleteIfExists(lockPath)
+    Files.deleteIfExists(inode)
   }
 
   test("artifact loads reject a missing/null info.json checksum as loudly as a mismatch") {

@@ -690,4 +690,60 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Seq(1L, 2L, 4L))
     } finally q.stop()
   }
+
+  /** The shuffle-partition count a checkpoint recorded for a batch —
+    * Spark writes the effective conf into every offsets-log entry, and
+    * recovers state-bearing values from there on restart. */
+  private def recordedPartitions(ckpt: String, batch: Int): Option[String] = {
+    val f = java.nio.file.Paths.get(s"$ckpt/offsets/$batch")
+    if (!java.nio.file.Files.exists(f)) None
+    else """"spark\.sql\.shuffle\.partitions"\s*:\s*"(\d+)"""".r
+      .findFirstMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))
+  }
+
+  private def writeDocs(dir: String, rows: Seq[(Long, String)]): Unit = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+      .select($"doc_id", $"text",
+        lit("2024-01-01 00:00:00").cast("timestamp").as("ts"))
+      .coalesce(1).write.mode("append").parquet(dir)
+  }
+
+  private def runDedup(tmp: String, sess: org.apache.spark.sql.SparkSession): Unit = {
+    val stream = sess.readStream
+      .schema("doc_id BIGINT, text STRING, ts TIMESTAMP")
+      .parquet(s"$tmp/in")
+    val deduped = StreamingScoring.dedupStream(stream, "text", "ts")
+    val q = Forwarder.toParquet(
+      deduped.select(col("exact_key")), s"$tmp/out", s"$tmp/ckpt")
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  test("a stateful stream records the session's shuffle partitions in its checkpoint") {
+    val tmp = Scratch.dir("graft-ssz-def")
+    writeDocs(s"$tmp/in", Seq((1L, "a"), (2L, "b")))
+    runDedup(tmp, spark)
+    assert(recordedPartitions(s"$tmp/ckpt", 0) ==
+      Some(spark.conf.get("spark.sql.shuffle.partitions")))
+  }
+
+  test("the checkpoint keeps its state-partition count across restarts") {
+    // the count is a first-deployment sizing decision: a restart over the
+    // same checkpoint from a session with another count still runs (and
+    // records) the checkpoint's; resizing needs a fresh checkpoint (and a
+    // cleared sink for the fenced forwarder)
+    def session(partitions: Int) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      s
+    }
+    val tmp = Scratch.dir("graft-ssz-pin")
+    writeDocs(s"$tmp/in", Seq((1L, "a"), (2L, "b")))
+    runDedup(tmp, session(3))
+    assert(recordedPartitions(s"$tmp/ckpt", 0) == Some("3"))
+    writeDocs(s"$tmp/in", Seq((3L, "c")))
+    runDedup(tmp, session(5))
+    assert(recordedPartitions(s"$tmp/ckpt", 1) == Some("3"),
+      "a restart must keep the checkpoint-pinned state-partition count")
+  }
 }
