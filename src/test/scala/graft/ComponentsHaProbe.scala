@@ -13,9 +13,10 @@ import graft.llm.Components
   * workers inside the driver JVM, each launching its executor as a
   * SEPARATE OS process (classpath = SPARK_HOME/jars plus this repo's
   * sbt class dirs via executor.extraClassPath). The probe runs the
-  * connected-components closure over a chain graph, materializes the
-  * result, then SIGKILLs one executor JVM and evaluates the returned
-  * frame again:
+  * connected-components loop (`Components.labelPropagation`, called
+  * directly: the public entry labels a graph this size in one task)
+  * over a chain graph, materializes the result, then SIGKILLs one
+  * executor JVM and evaluates the returned frame again:
   *
   *  - reliable mode (`reliableCheckpoint = Some(dir)`): the lost
   *    partitions' lineage ends at ReliableCheckpointRDD — recovery
@@ -89,8 +90,8 @@ object ComponentsHaProbe {
         awaitExecutors(spark, 2)
         val ckpt = Scratch.dir("graft-ha-ckpt")
         val t0 = System.nanoTime()
-        val (comp, rounds) = Components.connectedComponentsWithRounds(
-          chainEdges(spark), reliableCheckpoint = Some(ckpt))
+        val (comp, rounds) = Components.labelPropagation(
+          chainEdges(spark), 40, reliableCheckpoint = Some(ckpt))
         val pre = comp.count()
         val secs = (System.nanoTime() - t0) / 1e9
         val pid = killOneExecutor()
@@ -112,8 +113,8 @@ object ComponentsHaProbe {
       try {
         spark.sparkContext.setLogLevel("ERROR") // the expected task-retry
         awaitExecutors(spark, 2)                // noise is not a finding
-        val (comp, rounds) = Components.connectedComponentsWithRounds(
-          chainEdges(spark))
+        val (comp, rounds) = Components.labelPropagation(
+          chainEdges(spark), 40, None)
         val pre = comp.count()
         val pid = killOneExecutor()
         val outcome =

@@ -10,6 +10,8 @@ import graft.llm.{Components, TextDedup}
   * documents dirs and reports pair/node/cluster counts, the ROUND count
   * the label-propagation loop ran, and wall seconds — then a synthetic
   * deep-chain graph that proves the O(log diameter) claim directly.
+  * It calls the loop entry (`Components.labelPropagation`) directly:
+  * the public entry labels graphs this size in one task, in one round.
   *
   * Claims under test:
   *  - rounds grow ~log(diameter), not linearly: a 65 536-node chain
@@ -47,8 +49,7 @@ object ComponentsProbe {
       val ckptDir = sys.env.get("SPARK_GRAFT_CC_CKPT")
       val t0 = System.nanoTime()
       val (labels, rounds) =
-        Components.connectedComponentsWithRounds(pairs,
-          reliableCheckpoint = ckptDir)
+        Components.labelPropagation(pairs, 40, ckptDir)
       val nNodes = labels.count()
       val nComp = labels.select($"component").distinct().count()
       val badLabels = labels.filter($"component" > $"node").count()
@@ -88,7 +89,7 @@ object ComponentsProbe {
     val n = 1 << 16
     val chain = spark.range(n - 1).select($"id".as("a"), ($"id" + 1).as("b"))
     val t0 = System.nanoTime()
-    val (labels, rounds) = Components.connectedComponentsWithRounds(chain)
+    val (labels, rounds) = Components.labelPropagation(chain, 40, None)
     val allZero = labels.agg(max($"component")).as[Long].head()
     val nNodes = labels.count()
     val wall = (System.nanoTime() - t0) / 1e9

@@ -16,6 +16,14 @@ object GraphTruth {
       Gen.zip(Gen.choose(0L, nNodes - 1L), Gen.choose(0L, nNodes - 1L)))
   } yield edges
 
+  /** [[edgesGen]] with about one id in eight null. */
+  val nullableEdgesGen: Gen[List[(Option[Long], Option[Long])]] = for {
+    edges <- edgesGen
+    nulls <- Gen.listOfN(2 * edges.size, Gen.frequency(1 -> true, 7 -> false))
+  } yield edges.zip(nulls.grouped(2).toList).map { case ((a, b), n) =>
+    (Option.unless(n(0))(a), Option.unless(n(1))(b))
+  }
+
   /** Plain-Scala union-find: node → min reachable node, for every node
     * appearing in an edge. Unions always point max → min, so the root
     * IS the component minimum. */

@@ -231,12 +231,23 @@ object InvariantProps extends Properties("graft") {
   property("connectedComponents agrees with a union-find ground truth") =
     forAll(GraphTruth.edgesGen) { edges =>
       // plain-Scala union-find, independent of every Spark path (shared
-      // with LlmInvariantProps' dupClusters property — one ground truth)
+      // with LlmInvariantProps' dupClusters property — one ground truth),
+      // held against the public entry (the one-task path) and the loop
       val truth = GraphTruth.minLabels(edges)
-      val got = graft.llm.Components
-        .connectedComponents(edges.toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
-      Prop(got == truth) :| s"edges=$edges got=$got truth=$truth"
+      Prop.all(CcPath.both.map { path =>
+        val got = path.components(edges.toDF("a", "b"))
+          .as[(Long, Long)].collect().toMap
+        Prop(got == truth) :| s"$path: edges=$edges got=$got truth=$truth"
+      }: _*)
+    }
+
+  property("connectedComponents' two paths agree on edges with null ids") =
+    forAll(GraphTruth.nullableEdgesGen) { edges =>
+      val Seq(public, loop) = CcPath.both.map { path =>
+        path.components(edges.toDF("a", "b"))
+          .as[(Option[Long], Option[Long])].collect().toSet
+      }
+      Prop(public == loop) :| s"edges=$edges one-task=$public loop=$loop"
     }
 
   // ---- Cols.q: free-form tag names resolve as data columns ----

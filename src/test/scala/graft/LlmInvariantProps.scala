@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.llm.{AnnIndex, Components, TextDedup}
+import graft.llm.{AnnIndex, TextDedup}
 
 /** ScalaCheck invariants for the LLM-pipeline operator family — each
   * property states a THEOREM the operator's design guarantees (not a
@@ -152,9 +152,11 @@ object LlmInvariantProps extends Properties("graft.llm") {
       val sizes = comp.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }
       val expected = comp.map { case (n, c) =>
         (n, c, n == c, sizes(c)) }.toSet
-      val got = Components.dupClusters(edges.toDF("id_a", "id_b"))
-        .as[(Long, Long, Boolean, Long)].collect().toSet
-      Prop(got == expected) :| s"got=$got expected=$expected"
+      Prop.all(CcPath.both.map { path =>
+        val got = path.dupClusters(edges.toDF("id_a", "id_b"))
+          .as[(Long, Long, Boolean, Long)].collect().toSet
+        Prop(got == expected) :| s"$path: got=$got expected=$expected"
+      }: _*)
     }
 
   // ---- contamination: counts + absence-means-clean + null handling ----

@@ -51,19 +51,20 @@ class RuntimeShuffleSpec extends AnyFunSuite {
     // q51-projection and lag-frame caches absorb their own fills on the
     // warm run. q34 (1): the verified-pair frame is session-cached
     // (shared with q87), so a warm run's only shuffle is the output
-    // sort. q87: the CC loop's per-round exchanges + window over the
-    // cached pairs, with the pair pipeline fully absorbed.
+    // sort. q87 (3): the cached pairs' shuffle into the one union-find
+    // task, the cluster-size window and the output sort, with the pair
+    // pipeline fully absorbed.
     val pinned = Map(
       "q41_config_build" -> 6,
       "q29_anomaly_frame" -> 5,
       "q72_lookahead_forecast" -> 6,
       "q34_minhash_dup_pairs" -> 1,
-      // q87 warm measures 10-12 across runs: the CC loop's per-round
-      // joins read checkpoint-backed frames with unknown stats, and
-      // AQE's broadcast-vs-shuffle choice flips a couple of exchanges
-      // either way. 12 is the observed band's top; losing the pair
-      // cache would re-run the band-join pipeline (≥ +4) and still fail
-      "q87_dup_clusters" -> 12)
+      // exact: the one-task labelling plans no join, so no AQE
+      // broadcast-vs-shuffle choice can move the count; losing the pair
+      // cache would re-run the band-join pipeline (≥ +4), and falling
+      // back to the label-propagation loop would add its per-round
+      // exchanges
+      "q87_dup_clusters" -> 3)
     // the pins are exact counts for this session shape only: fail on
     // the environment, not on a misleading "regression", elsewhere
     val master = spark.sparkContext.master
