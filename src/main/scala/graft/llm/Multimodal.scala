@@ -412,11 +412,6 @@ object Multimodal {
     }(Encoders.row(frameSchema))
   }
 
-  /** Deterministic resize stand-in: stride-subsample the payload to
-    * exactly `w*h` bytes (short payloads pad with 0). A real kernel
-    * would decode → scale → re-encode; the plumbing — payload in,
-    * payload out, meta width/height updated, partition-local, no
-    * shuffle — is identical. */
   /** Frame count for a clip of `durMs` at one frame per `intervalMs`,
     * computed in Long (an Int quotient wraps) and capped at
     * [[MaxFramesPerClip]] — duration metadata is untrusted input.
@@ -437,6 +432,11 @@ object Multimodal {
     * of frame rows (27.8 h at 1 frame/s — far beyond any real clip). */
   val MaxFramesPerClip: Int = 100000
 
+  /** Deterministic resize stand-in: stride-subsample the payload to
+    * exactly `w*h` bytes (short payloads pad with 0). A real kernel
+    * would decode → scale → re-encode; the plumbing — payload in,
+    * payload out, meta width/height updated, partition-local, no
+    * shuffle — is identical. */
   def resizeStub(content: Array[Byte], w: Int, h: Int): Array[Byte] = {
     require(w > 0 && h > 0, s"resize target must be positive: ${w}x$h")
     // w*h in Int silently wraps at 46341x46341 (negative-size crash) and

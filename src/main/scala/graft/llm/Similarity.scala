@@ -34,6 +34,13 @@ object Similarity {
   private def cosOrFloor(d: Column, n1: Column, n2: Column): Column =
     when(n1 * n2 > 0, d / (n1 * n2)).otherwise(lit(-2.0))
 
+  /** The `k` best candidates per `qid` of a scored frame: `cos`
+    * descending, ties to the smaller `id`, numbered in `rank`. */
+  private def topK(scored: DataFrame, id: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col(id).asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
   /** Exact top-k neighbors for each query row (queries must be small —
     * they are broadcast). Excludes self-matches by id. */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -47,9 +54,7 @@ object Similarity {
     val scored = q.join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         cosOrFloor(dot(col("qe"), col("ce")), col("qn"), col("cn")).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, "cid", k)
   }
 
   /** SQ8 scalar-quantized ANN scan (the public FAISS
@@ -112,9 +117,7 @@ object Similarity {
     val scored = q.join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         cosOrFloor(dot(col("qe"), col("re")), col("qn"), col("rn")).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, "cid", k)
   }
 
   /** PQ codebook: `codebook(m)(j)` is the j-th centroid of subspace m
@@ -183,9 +186,7 @@ object Similarity {
     val scored = q.join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
         cosOrFloor(dot(col("qe"), col("re")), col("qn"), col("rn")).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, "cid", k)
   }
 
   /** Encode→reconstruct fused as one column expression — the public PQ
@@ -536,9 +537,7 @@ object Similarity {
         .select(col("id"), col("cid"), col("e"), norm(col("e")).as("nrm"))
     }
     // rank candidates from the probed lists only
-    val wRank = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cand").asc)
-    probes.join(assigned, "cid")
+    topK(probes.join(assigned, "cid")
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id").as("cand"),
         // cosOrFloor, not the raw ratio: ivfParts ASSIGNS zero-norm rows
@@ -546,9 +545,8 @@ object Similarity {
         // here (NaN sorts first under desc) would crown them top
         // neighbor for every query probing their list. Value-identical
         // for positive norms (the oracle replay's case).
-        cosOrFloor(dot(col("qe"), col("e")), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+        cosOrFloor(dot(col("qe"), col("e")), col("qn"), col("nrm")).as("cos")),
+      "cand", k)
   }
 
   /** The two IVF building blocks shared by search and diagnostics:
@@ -607,8 +605,6 @@ object Similarity {
         // this scoring): floor to -2, never NaN-first-under-desc
         cosOrFloor(dot(col("a.e"), col("b.e")),
           col("a.nrm"), col("b.nrm")).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(pairs, "cid", k)
   }
 }

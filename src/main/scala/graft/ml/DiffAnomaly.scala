@@ -990,24 +990,30 @@ object DiffAnomaly {
   /** The CV test pass [[fit]] and [[fitKfcv]] share: every row of a
     * fold's test span with its fold id `__fold`, scored by that fold's
     * fit — the scaled `__mse`, the per-target `__mae_<t>` and, with
-    * `withPredictions`, the `__y_<t>`/`__p_<t>` fold-metric inputs. */
+    * `withPredictions`, the `__y_<t>`/`__p_<t>` fold-metric inputs.
+    * Each target's fold prediction is projected once as `__p_<t>` and
+    * every score reads that column: repeating a fold's reconstruction
+    * in each scored column outgrows the generated code's method size. */
   private def scoreTestSpans(indexed: DataFrame, folds: Seq[CrossValidate.Fold],
                              fits: Seq[(CrossValidate.Fold, Fit)], y: Seq[String],
                              withPredictions: Boolean): DataFrame = {
     def byFold(e: Fit => Column): Column =
       CrossValidate.onFold(fits.map { case (f, fit) => f.index -> e(fit) })
+    val pred: String => Column = t => qc(s"__p_$t")
     val predictions =
       if (!withPredictions) Nil
-      else y.flatMap(t => Seq(qc(t).as(s"__y_$t"),
-        byFold(_._1.predictCol(t)).as(s"__p_$t")))
+      else y.flatMap(t => Seq(qc(t).as(s"__y_$t"), pred(t)))
     indexed
       .withColumn("__fold",
         CrossValidate.spanId(folds.map(f => (f.testStart, f.testEnd))))
       .filter(col("__fold").isNotNull)
+      .select((col("__row") +: col("__fold") +: (y.map(qc) ++
+        y.map(t => byFold(_._1.predictCol(t)).as(s"__p_$t")))): _*)
       .select((col("__row") +: col("__fold") +:
-        byFold { case (m, sc) => scaledMseCol(m, sc, y) }.as("__mse") +:
-        (y.map(t => byFold { case (m, _) => abs(qc(t) - m.predictCol(t)) }
-          .as(s"__mae_$t")) ++ predictions)): _*)
+        scaledMseCol(pred,
+          t => byFold { case (_, sc) => lit(Scalers.nonZeroScale(sc.stats(t)._2)) },
+          y).as("__mse") +:
+        (y.map(t => abs(qc(t) - pred(t)).as(s"__mae_$t")) ++ predictions)): _*)
   }
 
   private def fitScaler(kind: String, df: DataFrame, tags: Seq[String]): FittedScaler =
@@ -1038,9 +1044,10 @@ object DiffAnomaly {
 
   /** Scaled MSE per timestep (`diff.py:268-293`): mean over tags of
     * (scaled ŷ − scaled y)². */
-  private def scaledMseCol(m: Fitted, sc: FittedScaler, tags: Seq[String]): Column =
+  private def scaledMseCol(pred: String => Column, scale: String => Column,
+                           tags: Seq[String]): Column =
     tags.map { t =>
-      val d = (m.predictCol(t) - qc(t)) / lit(Scalers.nonZeroScale(sc.stats(t)._2))
+      val d = (pred(t) - qc(t)) / scale(t)
       d * d
     }.reduce(_ + _) / lit(tags.size.toDouble)
 

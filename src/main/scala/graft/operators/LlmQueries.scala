@@ -155,14 +155,6 @@ object LlmQueries {
       .orderBy($"doc_id")
   }
 
-  /** Benchmark-contamination scan, oracle-gated: the `src0` source
-    * partition stands in as the "benchmark" set; every other doc
-    * reports the distinct word n-grams it shares with any benchmark
-    * doc (8-grams here — the standard check is 13-grams, but the
-    * synthetic texts are 10–54 tokens). Absence means clean: the
-    * inner-join semantics of [[TextDedup.contamination]] are part of
-    * the contract (callers left-join against the corpus ids), and the
-    * oracle replays exactly that. */
   /** Conditional post-scan spread for the contamination scans (the
     * shingleFrame rationale): the 8-gram explode — the expensive per-row
     * work — otherwise runs at input-split parallelism; a no-op at lake
@@ -180,6 +172,14 @@ object LlmQueries {
     graft.SessionCache.acquire(TextDedup.contamination(spreadDocs(spark, dir),
       "doc_id", "text", isBenchmark = col("source") === "src0", n = 8)).df
 
+  /** Benchmark-contamination scan, oracle-gated: the `src0` source
+    * partition stands in as the "benchmark" set; every other doc
+    * reports the distinct word n-grams it shares with any benchmark
+    * doc (8-grams here — the standard check is 13-grams, but the
+    * synthetic texts are 10–54 tokens). Absence means clean: the
+    * inner-join semantics of [[TextDedup.contamination]] are part of
+    * the contract (callers left-join against the corpus ids), and the
+    * oracle replays exactly that. */
   def contaminationScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     contaminationHits(spark, dir)

@@ -237,9 +237,8 @@ object TimeSeriesQueries {
     // keyed by the source file's identity (q68's cachedDir discipline):
     // regenerated events re-seed the database instead of serving stale
     // rows. Seeded through ensureBuilt (private stage + atomic rename,
-    // standard _SUCCESS marker — deleteTree's crash-ordering pass keys
-    // on that name): two JVMs racing the seed would otherwise both
-    // boot embedded Derby on the SAME shared slot — the second dies
+    // standard _SUCCESS marker): two JVMs racing the seed would
+    // otherwise both boot embedded Derby on the SAME shared slot — the second dies
     // with Derby's single-booter XSDB6, and a crash between save() and
     // the marker would leave a half-seeded db in the live slot. The
     // staged engine is shut down before the rename so no open page

@@ -330,12 +330,13 @@ object StreamingScoring {
     * passes — a plain `dropDuplicates` would keep key state forever) —
     * the streaming side of the LLM-pipeline dedup family; near-dup
     * (MinHash/SimHash) stays a periodic batch job over the deduped sink,
-    * as signatures need the full corpus index. */
-  /** Streaming exact dedup: the output carries every input column PLUS
-    * `exact_key` (the content fingerprint the dedup keyed on — part of
-    * the contract, consumers select or drop it deliberately). An input
-    * that already HAS an `exact_key` column is rejected: withColumn
-    * would silently overwrite the caller's data with the fingerprint. */
+    * as signatures need the full corpus index.
+    *
+    * The output carries every input column PLUS `exact_key` (the content
+    * fingerprint the dedup keyed on — part of the contract, consumers
+    * select or drop it deliberately). An input that already HAS an
+    * `exact_key` column is rejected: withColumn would silently overwrite
+    * the caller's data with the fingerprint. */
   def dedupStream(docs: DataFrame, textCol: String, tsCol: String,
                   watermarkDelay: String = "1 hour"): DataFrame = {
     require(!docs.columns.contains("exact_key"),

@@ -310,108 +310,6 @@ class AdviceFixesSpec extends AnyFunSuite {
     assert(r == ((3.0, 6.0)))
   }
 
-  test("cachedDir sweeps aged-out siblings, spares fresh and unrelated dirs (advice r5)") {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val sixHoursAgo = System.currentTimeMillis() - 7L * 3600 * 1000
-    val witness = java.io.File.createTempFile("advice-witness", ".bin")
-    witness.deleteOnExit()
-    Files.write(witness.toPath, Array[Byte](1, 2, 3))
-    // an aged-out sibling from a long-dead session...
-    val stale = new java.io.File(tmp, "advice-sweep-0123456789abcdef")
-    assert(stale.mkdir())
-    Files.write(new java.io.File(stale, "payload").toPath, Array[Byte](9))
-    assert(stale.setLastModified(sixHoursAgo))
-    // ...a FRESH sibling with a different key (a live cache for another
-    // witness — e.g. another sf dir in the same session) — must survive
-    val fresh = new java.io.File(tmp, "advice-sweep-fedcba9876543210")
-    assert(fresh.mkdir())
-    // ...and an UNRELATED dir sharing the leading string but not the
-    // `<prefix>-<16 hex>` shape — must survive the sweep
-    val unrelated = new java.io.File(tmp, "advice-sweep-spec")
-    assert(unrelated.mkdir() || unrelated.isDirectory)
-    try {
-      val d1 = Scratch.cachedDir("advice-sweep", witness.getPath)
-      assert(!stale.exists(), "aged-out sibling must be swept")
-      assert(fresh.exists(), "fresh sibling (live cache) must be spared")
-      assert(unrelated.exists(), "non-key-shaped dir must be spared")
-      // re-keying on a modified witness keeps the recent old-key cache
-      // (no thrash / no mid-use deletion when witnesses alternate)...
-      assert(new java.io.File(d1).mkdir())
-      Files.write(witness.toPath, Array[Byte](1, 2, 3, 4))
-      witness.setLastModified(witness.lastModified() + 5000)
-      Scratch.sweepTimes.remove("advice-sweep") // re-arm the sweep throttle
-      val d2 = Scratch.cachedDir("advice-sweep", witness.getPath)
-      assert(d2 != d1)
-      assert(new java.io.File(d1).exists(),
-        "recent old-key cache dir must survive the sweep")
-      // ...and sweeps it once it ages out
-      assert(new java.io.File(d1).setLastModified(sixHoursAgo))
-      Scratch.sweepTimes.remove("advice-sweep") // re-arm the sweep throttle
-      Scratch.cachedDir("advice-sweep", witness.getPath)
-      assert(!new java.io.File(d1).exists(),
-        "aged-out old-key cache dir must be swept")
-    } finally {
-      fresh.delete()
-      unrelated.delete()
-      witness.delete()
-    }
-  }
-
-  test("cachedDir renews the lease of an in-use cache on every access") {
-    val witness = java.io.File.createTempFile("advice-lease-w", ".bin")
-    Files.write(witness.toPath, Array[Byte](9, 9, 9))
-    try {
-      val d = new java.io.File(Scratch.cachedDir("advice-lease", witness.getPath))
-      assert(d.mkdir() || d.isDirectory)
-      // simulate a cache built long ago but still actively read: without
-      // lease renewal a sibling session's sweep would delete it mid-read
-      val old = System.currentTimeMillis() - 7L * 3600 * 1000
-      assert(d.setLastModified(old))
-      Scratch.cachedDir("advice-lease", witness.getPath) // a read access
-      assert(d.lastModified > old + 3600 * 1000,
-        "read access must refresh lastModified so the cache keeps its lease")
-      d.delete()
-    } finally witness.delete()
-  }
-
-  test("cachedDir keys a DIRECTORY witness by its file contents (lake layout)") {
-    // the directory-per-table lake layout resolves through Tables, so a
-    // cachedDir witness can be a partitioned directory — its identity
-    // must re-key when any part file changes, and stay stable otherwise
-    val w = new java.io.File(Scratch.dir("advice-dirw"))
-    try {
-      val part = new java.io.File(w, "event_date=2024-01-01")
-      assert(part.mkdir())
-      val f = new java.io.File(part, "part-0.parquet")
-      Files.write(f.toPath, Array[Byte](1, 2, 3))
-      val d1 = Scratch.cachedDir("advice-dirw", w.getPath)
-      assert(d1 == Scratch.cachedDir("advice-dirw", w.getPath),
-        "unchanged directory witness must keep its key")
-      Files.write(f.toPath, Array[Byte](1, 2, 3, 4)) // length change
-      val d2 = Scratch.cachedDir("advice-dirw", w.getPath)
-      assert(d1 != d2, "a rewritten part file must re-key the cache")
-      new java.io.File(d1).delete(); new java.io.File(d2).delete()
-    } finally {
-      val walk = Files.walk(w.toPath)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p): Unit)
-      finally walk.close()
-    }
-  }
-
-  test("Tables.witness resolves the lake directory when present, else the single file") {
-    val root = new java.io.File(Scratch.dir("advice-witness"))
-    try {
-      assert(Tables.witness(root.getPath, "events")
-        == s"${root.getPath}/events.parquet")
-      assert(new java.io.File(root, "events").mkdir())
-      assert(Tables.witness(root.getPath, "events")
-        == new java.io.File(root, "events").toString)
-    } finally {
-      new java.io.File(root, "events").delete(); root.delete()
-    }
-  }
-
   test("ridgeBuildFrameSql rejects identifier-unsafe and colliding tags") {
     import graft.operators.AnomalyQueries.ridgeBuildFrameSql
     // the safe call sites still work

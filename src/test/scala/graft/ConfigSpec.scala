@@ -315,4 +315,102 @@ class ConfigSpec extends AnyFunSuite {
     assert(r.map(_.getAs[Double]("a__b0")).toSeq == Seq(0.0, 0.5, 1.0))
     assert(r.map(_.getAs[Double]("a__b1")).toSeq == Seq(2.0, 4.0, 6.0))
   }
+
+  test("null config values reject with contract exceptions, never NPE") {
+    // the ×30 hammer's falsified draw (seed 50RnwjfOyc…, shrunk): a null
+    // element inside dataset.tags NPE'd in datasetConfig's `_.toString`.
+    // Pin the exact counterexample, then each sibling null hole the fix
+    // closed — every one must reject with the CONTRACT exception types
+    // (ConfigException / CompileException / IllegalArgumentException),
+    // never NPE (the config layer is the outermost user-facing surface).
+    import graft.config.{Config, ModelRegistry}
+    val model = Map("sklearn.pipeline.Pipeline" ->
+      Map("steps" -> List("sklearn.preprocessing.MinMaxScaler")))
+    val counterexample = Map[String, Any](
+      "name" -> "m1", "project_name" -> "p", "model" -> model,
+      "dataset" -> Map("tags" -> List("~", null, -837),
+        "scoring_scaler" -> Map("runtime" -> null,
+          "sklearn.pipeline.Pipeline" -> "AERrFIgz")))
+    val spec = Config.machineFromConfig(counterexample, None, Map.empty)
+    val e = intercept[Config.ConfigException](Config.datasetConfig(spec))
+    assert(e.getMessage.contains("null"))
+    // a numeric tag (unquoted YAML scalar) still stringifies — only
+    // null rejects
+    def ds(extra: (String, Any)*): Config.MachineSpec =
+      Config.machineFromConfig(Map[String, Any]("name" -> "m1",
+        "project_name" -> "p", "model" -> model,
+        "dataset" -> (Map[String, Any]("tags" -> List("a", "b")) ++ extra)),
+        None, Map.empty)
+    assert(Config.datasetConfig(Config.machineFromConfig(
+      Map[String, Any]("name" -> "m1", "project_name" -> "p",
+        "model" -> model,
+        "dataset" -> Map("tags" -> List("a", -837))), None, Map.empty))
+      .tags == Seq("a", "-837"))
+    // sibling holes: explicit-null numerics/strings take the default or
+    // reject — never NPE
+    intercept[Config.ConfigException](
+      Config.datasetConfig(ds("target_tag_list" -> List("a", null))))
+    assert(Config.datasetConfig(ds("row_filter_buffer_size" -> null))
+      .rowFilterBufferSize == 0)
+    assert(Config.datasetConfig(ds("n_samples_threshold" -> null))
+      .nSamplesThreshold == 0L)
+    assert(Config.datasetConfig(ds("resolution" -> null))
+      .resolution == "10T")
+    intercept[Config.ConfigException](
+      Config.datasetConfig(ds("aggregation_methods" -> List(null))))
+    intercept[Config.ConfigException](Config.machineFromConfig(
+      Map[String, Any]("name" -> "m1", "project_name" -> null,
+        "model" -> model), None, Map.empty))
+    // ModelRegistry: explicit-null kwargs take the default (kind,
+    // strategy, n_splits) or reject via num(null) — never NPE
+    assert(ModelRegistry.compile(Map(
+      "gordo.machine.model.models.KerasAutoEncoder" ->
+        Map("kind" -> null))) ==
+      ModelRegistry.Reconstruction("mlp", "feedforward_hourglass"))
+    assert(ModelRegistry.compile(Map(
+      "sklearn.model_selection.KFold" -> Map("n_splits" -> null))) ==
+      ModelRegistry.CvSplit("kfold", 5))
+    assert(ModelRegistry.compile(Map(
+      "gordo.machine.model.transformers.imputer.InfImputer" ->
+        Map("strategy" -> null, "delta" -> null))) ==
+      ModelRegistry.Imputer("minmax", 2.0))
+    intercept[ModelRegistry.CompileException](ModelRegistry.compile(Map(
+      "sklearn.preprocessing.FunctionTransformer" -> Map(
+        "func" -> "gordo.machine.model.transformer_funcs.general.multiply_by",
+        "kw_args" -> Map("factor" -> null)))))
+    intercept[ModelRegistry.CompileException](ModelRegistry.compile(Map(
+      "sklearn.preprocessing.FunctionTransformer" -> Map("func" -> null))))
+  }
+
+  test("null/scalar resource and project blocks reject on contract") {
+    // follow-up sweep of the same hole class on the remaining user-YAML
+    // surfaces: fixupResources and Project.parse crashed with anonymous
+    // NPE/ClassCastException on explicit-null or scalar blocks
+    import graft.config.Config
+    import graft.build.Project
+    // `requests:` (explicit null) = no block; limits complete as usual
+    assert(Config.fixupResources(Map("requests" -> null,
+      "limits" -> Map("cpu" -> "100m"))) ==
+      Map("requests" -> null, "limits" -> Map("cpu" -> "100m")))
+    // a scalar block is a loud config error, not a ClassCastException
+    intercept[Config.ConfigException](
+      Config.fixupResources(Map("requests" -> 5)))
+    // project YAML: null globals = none; scalar globals and non-mapping
+    // machine entries reject with the contract message
+    val machine = """
+      |  - name: m1
+      |    dataset:
+      |      tags: [a]
+      |    model:
+      |      sklearn.preprocessing.MinMaxScaler:
+      |""".stripMargin
+    assert(Project.parse(s"globals:\nmachines:\n$machine", "p")
+      .machines.map(_.name) == Seq("m1"))
+    intercept[Config.ConfigException](
+      Project.parse(s"globals: 5\nmachines:\n$machine", "p"))
+    intercept[Config.ConfigException](
+      Project.parse("machines:\n  - 5\n", "p"))
+    intercept[Config.ConfigException](
+      Project.parse("machines:\n  - ~\n", "p"))
+  }
 }

@@ -388,6 +388,48 @@ class DiffAnomalySpec extends AnyFunSuite {
       s"$at3 jobs at 3 folds, $at5 at 5; one train aggregation runs $trainJobs")
   }
 
+  test("the closed-form window autoencoder's fused CV plan compiles without codegen fallback") {
+    // 4 tags x lookback 2: every fold's reconstruction is an 8-input PCA
+    // expression, and a test pass that repeats it in each scored column
+    // outgrows the generated method's size limit
+    val tags = Seq("ta", "tb", "tc", "td")
+    val long = (0 until 80).flatMap { i =>
+      tags.zipWithIndex.map { case (t, j) =>
+        (t, 1704067200L + i * 600L,
+          10.0 * j + i * 0.5 + math.sin(i * (1.3 + j * 0.4)) * 4.0)
+      }
+    }.toDF("tag", "epoch", "value")
+      .select($"tag", timestamp_seconds($"epoch").as("ts"), $"value")
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val res = graft.build.ModelBuilder.build(
+        graft.config.Config.parseYaml(
+          """
+            |name: window-ae-machine
+            |dataset:
+            |  tag_list: [ta, tb, tc, td]
+            |  resolution: 10T
+            |model:
+            |  gordo.machine.model.anomaly.diff.DiffBasedAnomalyDetector:
+            |    base_estimator:
+            |      gordo.machine.model.models.KerasLSTMAutoEncoder:
+            |        kind: lstm_hourglass
+            |        lookback_window: 2
+            |""".stripMargin),
+        globals = graft.config.Config.defaultGlobals,
+        long = long, keyCol = "tag", tsCol = "ts", valueCol = "value",
+        outputDir = s"${Scratch.dir("graft-window-ae")}/model",
+        projectName = Some("window-ae-project"), closedForm = true)
+      assert(res.fitted.model.impl == "window_ae")
+      assert(res.fitted.thresholds.aggregateThreshold > 0.0)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("PCA fit on a tag with no finite values fails loudly instead of fitting zero stats") {
     val df = Seq((0L, 1.0), (1L, 2.0), (2L, 3.0))
       .toDF("t", "tx")

@@ -150,4 +150,35 @@ class InfluxSpec extends AnyFunSuite {
     assert(Influx.fromQueryResponse(spark, """{"results":[]}""")
       .collect().isEmpty)
   }
+
+  test("wire parsers handle malformed time/value cells per contract under ANSI mode") {
+    // a wire-parser fuzz counterexample: {"":{"":5}} is valid JSON
+    // in the dict-of-dicts shape but its timestamp key is not ISO —
+    // under Spark 4's default ANSI mode the plain to_timestamp threw an
+    // anonymous CAST_INVALID_INPUT job failure; the contract reject
+    // names the offending key
+    val spark = SparkTestSession.spark
+    val e = intercept[IllegalArgumentException] {
+      graft.data.Providers.fromJsonBody(spark, "{\"\":{\"\":5}}").collect()
+    }
+    assert(e.getMessage.contains("non-ISO timestamp key"), e.getMessage)
+    // valid bodies are unaffected (try_to_timestamp == to_timestamp there)
+    assert(graft.data.Providers.fromJsonBody(spark,
+      "{\"t1\": {\"2020-01-01T00:00:00Z\": 1.5}}").count() == 1)
+    // influx: a malformed time or value CELL becomes the documented
+    // null-point row — neighbors intact, never a failed job
+    val json = """{"results":[{"series":[{"name":"m","tags":{"tag":"T1"},
+      |"columns":["time","Value"],
+      |"values":[["not a ts","1.5"],["2020-01-01T00:01:00Z","junk"],
+      |["2020-01-01T00:02:00Z","2.5"]]}]}]}""".stripMargin
+    val rows = graft.data.Influx.fromQueryResponse(spark, json)
+      .orderBy(org.apache.spark.sql.functions.col("ts").asc_nulls_first)
+      .collect()
+    assert(rows.length == 3, "malformed cells must not drop or kill rows")
+    assert(rows(0).isNullAt(1) && rows(0).getDouble(2) == 1.5,
+      "bad time cell -> null ts, value intact")
+    assert(!rows(1).isNullAt(1) && rows(1).isNullAt(2),
+      "bad value cell -> null value, ts intact")
+    assert(rows(2).getDouble(2) == 2.5)
+  }
 }

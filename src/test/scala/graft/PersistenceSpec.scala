@@ -72,4 +72,28 @@ class PersistenceSpec extends AnyFunSuite {
     assert(f(Map("checksum" -> "ab"), "ab") == "checksum_matches_true")
     assert(f(Map("checksum" -> "cd"), "ab") == "checksum_matches_false")
   }
+
+  test("artifact loads reject a missing/null info.json checksum as loudly as a mismatch") {
+    // the null-hole class, artifact-side: a tampered/truncated
+    // info.json WITHOUT a checksum field (or with `checksum: null`) was
+    // an anonymous NoSuchElementException/NPE on the serve path instead
+    // of the contract's corrupt-artifact IllegalArgumentException
+    for (info <- Seq("{}", "{\"checksum\": null}")) {
+      val md = Paths.get(Scratch.dir("graft-persist-art"))
+      Files.writeString(md.resolve("model.json"), "{\"impl\": \"ridge\"}")
+      Files.writeString(md.resolve("info.json"), info)
+      val e = intercept[IllegalArgumentException] {
+        graft.build.Persistence.load(md.toString)
+      }
+      assert(e.getMessage.contains("no checksum"), e.getMessage)
+      val ad = Paths.get(Scratch.dir("graft-persist-ann"))
+      Files.writeString(ad.resolve("index.json"), "{\"centroids\": []}")
+      Files.writeString(ad.resolve("info.json"), info)
+      val e2 = intercept[IllegalArgumentException] {
+        graft.llm.AnnIndex.load(ad.toString)
+      }
+      assert(e2.getMessage.contains("no checksum"), e2.getMessage)
+      Scratch.deleteTree(md); Scratch.deleteTree(ad)
+    }
+  }
 }

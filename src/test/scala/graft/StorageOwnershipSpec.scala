@@ -20,11 +20,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Spark execution counts: [[ExecCounts]] is the only code in main or
   * test sources that registers a scheduler listener, so every job, stage
-  * and shuffle count is scoped and drained the same way. */
+  * and shuffle count is scoped and drained the same way.
+  *
+  * File locks: none in `src/main`. A [[Scratch]] cache slot changes only
+  * by atomic directory renames, so no code needs a lock to repair one. */
 class StorageOwnershipSpec extends AnyFunSuite {
   private val storageCall =
     """\.persist\(|\.cache\(\)|\.unpersist\(|\.checkpoint\(\)|localCheckpoint\(""".r
   private val listenerCall = """new\s+SparkListener\b|addSparkListener\(""".r
+  private val fileLock = """FileChannel|\.lock\(|\.tryLock\(""".r
 
   /** `file:line: text` of every line under `roots` matching `pattern`,
     * skipping the files named in `owners`. */
@@ -71,5 +75,12 @@ class StorageOwnershipSpec extends AnyFunSuite {
     assert(found.isEmpty,
       "Spark listeners outside ExecCounts (count through ExecCounts.during):\n" +
         found.mkString("\n"))
+  }
+
+  test("src/main takes no file locks") {
+    val found = hits(Seq("src/main/scala"), fileLock, Set.empty)
+    assert(found.isEmpty,
+      "file locks in src/main (publish a cache slot by one atomic " +
+        "rename instead):\n" + found.mkString("\n"))
   }
 }

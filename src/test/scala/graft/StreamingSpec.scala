@@ -523,12 +523,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("exact_key"))
   }
 
-  test("cachedDir demands an existing witness (missing => frozen identity)") {
-    val e = intercept[IllegalArgumentException](
-      graft.Scratch.cachedDir("graft-testwit", "/no/such/file.parquet"))
-    assert(e.getMessage.contains("witness"))
-  }
-
   test("forwarder writes the fence marker before any batch dir, adopts legacy sinks") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
